@@ -5,13 +5,14 @@ throughput (222 -> 112 docs/s) without touching correctness — no test
 noticed.  This floor makes the next innocent-looking kvcore refactor fail
 loudly instead.
 
-The floor sits between the regression signature (~102-112 docs/s on the
-round-4 code) and the healthy band (165-220 docs/s across host-drift
-extremes) — close enough to the drift low end that a single contended
-run could dip under, so the test takes the best of up to 5 short runs
-(early exit on first pass: healthy code pays one run).  The shared host
-drifts one-sidedly (contention only ever slows us down), so max-rate is
-the stable estimator.
+The floor sits between the per-(spec, line) sweep's healthy band
+(best-of-5 165-280 docs/s on a shared 4-core host, ~330 at its quietest)
+and the line-indexed sweep's (400-750 docs/s on the same host): a change
+that brings back a matcher call per (spec, line), or the Wagner-Fischer
+distance, fails it.  A single contended run could dip under, so the test
+takes the best of up to 5 short runs (early exit on first pass: healthy
+code pays one run).  The shared host drifts one-sidedly (contention only
+ever slows us down), so max-rate is the stable estimator.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from universal_key_value_based_text_processing_with_ocr_spark.sources.synthdocs 
     gen_page_row,
 )
 
-FLOOR_DOCS_PER_SEC = 150.0
+FLOOR_DOCS_PER_SEC = 340.0
 DOCS_PER_RUN = 200
 RUNS = 5
 
@@ -62,7 +63,7 @@ def test_single_thread_extraction_floor():
 
     assert best >= FLOOR_DOCS_PER_SEC, (
         f"extraction kernel regressed: best-of-{RUNS} {best:.1f} docs/s "
-        f"< floor {FLOOR_DOCS_PER_SEC} (healthy ~200, r4 regression ~110). "
-        "Profile match_keys_in_line's inner loops before touching the gate "
-        "inlining (kvcore/matching.py, VERDICT r4 #1)."
+        f"< floor {FLOOR_DOCS_PER_SEC} (healthy 400-750, per-(spec, line) "
+        "sweep 165-330). Check that kvcore.sweep's line index still skips "
+        "non-candidate lines before profiling match_keys_in_line."
     )

@@ -30,6 +30,18 @@ def test_edit_distance_parity_random():
     for _ in range(1000):
         a, b = _rand_str(rng), _rand_str(rng)
         assert edit_distance(a, b) == _slow_edit_distance(a, b), (a, b)
+    # the bit-parallel distance: operands past one machine word and past
+    # the cache bound, either one longer, non-ASCII text, repeated chars
+    for alpha in ("ab", "aé İßx\t", "0O1lI"):
+        for _ in range(200):
+            a = "".join(rng.choice(alpha) for _ in range(rng.randint(0, 24)))
+            b = "".join(rng.choice(alpha) for _ in range(rng.randint(0, 90)))
+            assert edit_distance(a, b) == _slow_edit_distance(a, b), (a, b)
+            assert edit_distance(b, a) == _slow_edit_distance(a, b), (a, b)
+    for la, lb in [(65, 64), (130, 7), (4200, 9)]:
+        a = "".join(rng.choice("abN7") for _ in range(la))
+        b = "".join(rng.choice("abN7") for _ in range(lb))
+        assert edit_distance(a, b) == edit_distance(b, a) == _slow_edit_distance(a, b)
 
 
 def test_edit_distance_known():
@@ -74,3 +86,15 @@ def test_split_with_spans_invariants():
 def test_snap_to_grid_first_tie_wins():
     assert snap_to_grid(0.5, [0.0, 1.0]) == 0.0  # tie -> first point
     assert snap_to_grid(0.6, [0.0, 0.5, 1.0]) == 0.5
+
+
+def test_split_tokens_are_the_split_with_spans_tokens():
+    from universal_key_value_based_text_processing_with_ocr_spark.kvcore.tokenspan import (
+        split_tokens,
+    )
+
+    rng = random.Random(3)
+    for _ in range(500):
+        text = "".join(rng.choice(ALPHABET + "\t  é") for _ in range(rng.randint(0, 40)))
+        splitters = rng.choice([(" ",), (" ", ":"), (" ", ":", "."), (":",), ("\t", "-")])
+        assert split_tokens(text, splitters) == split_with_spans(text, splitters)[0], text

@@ -7,6 +7,7 @@ import json
 import pandas as pd
 import pytest
 
+from tests import refharness
 from tests.test_spark_pipeline import spark  # session fixture  # noqa: F401
 
 
@@ -99,29 +100,72 @@ def test_near_dup_clusters_raises_when_unconverged(spark, monkeypatch):  # noqa:
         near_dup_clusters(docs, max_iterations=0)
 
 
+_WO_SPACE_LINES = ["Umur Kde : 19", "UmurKde : 19", "UK : 19", "Umur Kde : 20"]
+
+
+def _wo_space_str_filter_run(fn):
+    keys, md, ma, al = [["Umur", "Kde"]], [[0, 0]], [0.8], []
+    out = [
+        fn(line, keys, md, ma, re_chars_filter="[a-zA-Z]", alias_names=al, wo_space=True)
+        for line in _WO_SPACE_LINES
+    ]
+    return out, keys, md, ma, al
+
+
 def test_wo_space_string_filter_doubles_every_call():
     """Reference doubles a str re_chars_filter locally on EVERY call; a shared
-    spec's 2nd+ line must see the doubled pattern (ADVICE r1 repro)."""
-    import sys
+    spec's 2nd+ line must see the doubled pattern (ADVICE r1 repro).
 
-    sys.path.insert(0, "tests")
-    from refharness import load_reference
+    Frozen engine-side expectations, checked against the reference by
+    ``test_wo_space_string_filter_matches_reference`` where it is present:
+    "[a-zA-Z][a-zA-Z]" projects "Kde" to "Kd", so no line passes the
+    zero-distance limits, while the undoubled filter matches line 1."""
+    from universal_key_value_based_text_processing_with_ocr_spark.kvcore.matching import (
+        match_keys_in_line,
+    )
+    from universal_key_value_based_text_processing_with_ocr_spark.kvcore.sweep import (
+        sweep_document,
+    )
 
+    out, keys, md, ma, al = _wo_space_str_filter_run(match_keys_in_line)
+    assert out == [[True, {}]] * 4
+    # the key lists grow once (joined variant), the str filter never does
+    assert (keys, md, ma, al) == ([["Umur", "Kde"], ["UmurKde"]], [[0, 0], [0]], [0.8, 0.8], [])
+    assert match_keys_in_line(
+        _WO_SPACE_LINES[0], [["Umur", "Kde"]], [[0, 0]], [0.8], re_chars_filter="[a-zA-Z]",
+        alias_names=[],
+    ) == [True, {("Umur", "Kde"): " : 19"}]
+
+    # the sweep probes such a spec on every line and keeps the quirk (the
+    # last missed line is the one its error names)
+    spec = dict(
+        extractor=match_keys_in_line,
+        extractor_args=dict(
+            key_str_list_list=[["Umur", "Kde"]], max_distances=[[0, 0]], min_accuracies=[0.8],
+            re_chars_filter="[a-zA-Z]", alias_names=["Umur"], wo_space=True,
+        ),
+        evaluators=[],
+        multi_line_value=False,
+        alias_names=["Umur"],
+        tolerant_not_exists=[False],
+    )
+    got = sweep_document("\n".join(_WO_SPACE_LINES), [spec])
+    assert got["success"] is False
+    assert got["all_error_messages"] == [
+        "One or more keys in ['Umur'] not found. Must exists: 1, founded: 0 "
+        "<=> [False, 'Umur is not exist while its not tolerant to not exist', 'Umur Kde : 20']"
+    ]
+
+
+@pytest.mark.skipif(not refharness.reference_available(), reason="reference repo not present")
+def test_wo_space_string_filter_matches_reference():
     from universal_key_value_based_text_processing_with_ocr_spark.kvcore.matching import (
         match_keys_in_line,
     )
 
-    pp, _ = load_reference()
+    pp, _ = refharness.load_reference()
     get_ref = pp["get_str_keys_values"] if isinstance(pp, dict) else pp.get_str_keys_values
-
-    def run(fn):
-        keys, md, ma, al = [["Umur", "Kde"]], [[0, 0]], [0.8], []
-        return [
-            fn(line, keys, md, ma, re_chars_filter="[a-zA-Z]", alias_names=al, wo_space=True)
-            for line in ["Umur Kde : 19", "UmurKde : 19", "UK : 19", "Umur Kde : 20"]
-        ]
-
-    assert run(get_ref) == run(match_keys_in_line)
+    assert _wo_space_str_filter_run(get_ref) == _wo_space_str_filter_run(match_keys_in_line)
 
 
 def test_wo_space_none_filter_raises_like_reference():

@@ -96,6 +96,22 @@ def test_semdedup_survivor_pairs_below_tau_and_exact_dups_collapse(spark):  # no
                 assert cos < 0.3, (cid, a, b, cos)
 
 
+
+def test_semdedup_zero_centroids_returns_no_rows(spark):  # noqa: F811
+    """n_centroids=0 leaves every vector without a centroid to join, so no
+    member survives (the crossJoin(broadcast(cent)) form's empty result),
+    not every vector with cluster -1."""
+    from universal_key_value_based_text_processing_with_ocr_spark.operators.similarity import (
+        semdedup,
+    )
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    assert semdedup(emb, n_centroids=0, tau=0.3).collect() == []
+    assert semdedup(emb, n_centroids=1, tau=0.99).count() == 3
+
 def test_dhash16_known_answers_and_null_path():
     """dhash16 over REAL decoded synth images must equal the independent
     closed-form replay; a pixel-less decode yields None; a constant image

@@ -70,11 +70,21 @@ def _split_uncached(text: str, splitters: tuple[str, ...]):
     return tokens, spans
 
 
+def split_tokens(text: str, splitters: tuple[str, ...]) -> list[str]:
+    """The tokens of ``split_with_spans(text, splitters)`` without their
+    spans, from one C-level scan (``isspace`` is the ``^\\s*$`` guard for
+    a non-empty run)."""
+    return [t for t in _runs_pattern(splitters).findall(text) if not t.isspace()]
+
+
 @lru_cache(maxsize=8192)
 def _split_cached(text: str, splitters: tuple[str, ...]):
-    # Cached per (line, splitters): the sweep probes the SAME line with up
-    # to ~16 specs sharing two splitter sets, so hits dominate.  Callers
-    # treat the returned lists as immutable (slices only).
+    # Cached per (line, splitters) for the matcher.  The sweep's line index
+    # tokenises each line once per document through ``split_tokens`` and
+    # probes only candidate lines, so hits here come from a line probed by
+    # several specs (a missed key, a duplicate line) and from lines that
+    # recur across documents.  Callers treat the returned lists as
+    # immutable (slices only).
     return _split_uncached(text, splitters)
 
 

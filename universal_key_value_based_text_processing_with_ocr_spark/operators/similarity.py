@@ -496,6 +496,8 @@ def _centroid_assign(
       dimension differs from a centroid's scores NULL against it, and a
       row with NO scoreable centroid takes the lowest cid with csim
       NULL (the window's nulls-last order did the same);
+    - an empty centroid list yields no rows at all (the cross join had
+      no pairs to rank);
     - a zero-norm VALID vector or centroid raises like ANSI division
       wherever a pair would have been scored.
     """
@@ -529,7 +531,9 @@ def _centroid_assign(
         cdims = np.array([(a.shape[0] if a is not None else -1) for a in carrs])
         for pdf in it:
             n = len(pdf)
-            if not n:
+            if not n or not nc:
+                # no centroid: no (vector, centroid) pair, so no member row,
+                # as the crossJoin(broadcast(cent)) form gave
                 continue
             embs = pdf["embedding"].tolist()
             rvalid = np.zeros(n, dtype=bool)
@@ -542,7 +546,7 @@ def _centroid_assign(
                     continue
                 rvalid[i] = True
                 rarr[i] = a
-            best_cid = np.full(n, cids[0] if nc else -1, dtype=np.int64)
+            best_cid = np.full(n, cids[0], dtype=np.int64)
             best_cs = np.full(n, np.nan)
             rdims = np.array([(a.shape[0] if a is not None else -1) for a in rarr])
             for d in np.unique(rdims[rvalid]) if rvalid.any() else []:

@@ -26,11 +26,9 @@ import pyarrow.parquet as pq
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from universal_key_value_based_text_processing_with_ocr_spark.htmlcore import (  # noqa: E402
-    extract_main_lines,
-)
 from universal_key_value_based_text_processing_with_ocr_spark.operators.extract import (  # noqa: E402
     SAMPLE_CUSTOM_CONFIG,
+    page_lines,
     parse_page_row,
     parse_page_row_blended,
     parse_page_row_boxorder,
@@ -82,13 +80,8 @@ def build_tables():
         )
         blended_rows.append(parse_page_row_blended(row["url"], row["html"], row["text"]))
         boxorder_rows.append(parse_page_row_boxorder(row["url"], row["html"], row["text"]))
-        if row["html"] is not None:
-            doc_lines = extract_main_lines(row["html"])
-        elif row["text"] is not None:
-            doc_lines = row["text"].split("\n")
-        else:
-            doc_lines = []
-        for i, ln in enumerate(doc_lines):
+        doc_lines, _ = page_lines(row["html"], row["text"])
+        for i, ln in enumerate(doc_lines or ()):
             line_rows.append({"url": row["url"], "line_no": i, "line": ln})
             for field, ks, ke, vs, ve, value in line_field_spans(ln):
                 span_rows.append(

@@ -26,8 +26,6 @@ from .operators import dedup, evalmetrics, multimodal, relational, similarity, t
 from .operators.extract import (
     SAMPLE_CUSTOM_CONFIG,
     extract_pages,
-    extract_pages_blended,
-    extract_pages_boxorder,
     extract_pages_with_config,
     html_to_lines,
 )
@@ -75,13 +73,13 @@ def q_custom_config_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_extract_fields_blended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-parser blended extraction (sweep + NIK re-scan, Entry-1 shape)."""
     pages = synth_pages_df(spark, GOLDEN_N, seed=GOLDEN_SEED)
-    return extract_pages_blended(pages)
+    return extract_pages(pages, parser="blended")
 
 
 def q_extract_fields_boxorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Block-order sweep (reference parse_doc_new0 analog, third parser)."""
     pages = synth_pages_df(spark, GOLDEN_N, seed=GOLDEN_SEED)
-    return extract_pages_boxorder(pages)
+    return extract_pages(pages, parser="boxorder")
 
 
 def q_pages_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:

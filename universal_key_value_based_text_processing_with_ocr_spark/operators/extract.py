@@ -1,30 +1,45 @@
 """The extraction pipeline: pages DataFrame -> results DataFrame.
 
 Physical shape (SURVEY.md §3/§4): one up-front salted repartition (the only
-shuffle), then ONE fused narrow ``mapInPandas`` stage that does
-payload-decode (html -> lines, or the text column's doc_str path —
-/root/reference/ocrfw/postprocessing.py:407-409) and the per-document
-key-value sweep, Arrow-batched end to end.  No collects, no driver loops; a
-row never needs another row, so the stage scales linearly with partitions.
+shuffle), then ONE fused narrow ``mapInPandas`` stage (``_map_rows``),
+Arrow-batched end to end.  No collects, no driver loops; a row never needs
+another row, so the stage scales linearly with partitions.
 
-Output schema is fixed and byte-stable:
-    url string, lang string, extracted_text string, result_json string,
-    success boolean, n_lines int, n_fields int,
-    error_messages array<string>, warnings array<string>, n_bytes long
+Every page of every parser takes one row path (``_page_row``): the payload
+decode ``page_lines`` (HTML -> htmlcore main-content lines; a text payload
+split on '\\n', the reference's doc_str path; no payload -> ``None``), then
+one parse from ``PARSERS`` under the per-document NIK budget and the
+exception guard, then the full ``RESULT_SCHEMA`` row, of which each
+parser's stage emits its own columns:
 
+``sweep``     line sweep over the joined lines (reference ``parse_ktp``
+              text path); ``RESULT_SCHEMA``.
+``blended``   line sweep + multi-hit NIK re-scan (the reference's image-path
+              structure); ``COMPACT_SCHEMA``.
+``boxorder``  block-order sweep (reference ``parse_doc_new0``), one box per
+              decoded line, i.e. per kept htmlcore block; ``COMPACT_SCHEMA``.
+``config``    a user key dictionary (``kvcore.config``) passed as
+              ``configs``; ``COMPACT_SCHEMA``.
+
+Each keeps its own no-payload row: the sweep records ``no payload`` without
+parsing, blended and config parse the empty document, and boxorder's sweep
+rejects the empty box list (a guard row).  Both schemas are byte-stable;
 ``result_json`` is the canonical serialization of the reference-ordered
-result dict (reference ocrfw/ktp.py:2140 ``json.dumps(..., default=str)``)
-— the per-url byte-identity target together with ``extracted_text``.
+result dict (reference ocrfw/ktp.py:2140 ``json.dumps(..., default=str)``),
+the per-url byte-identity target together with ``extracted_text``.
 """
 
 from __future__ import annotations
 
 import json
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
+from pyspark.sql.types import StructType
 
 from ..htmlcore import extract_main_lines, page_quality_warnings
+from ..kvcore import config as kvconfig
 from ..kvcore import ktpspec
 from ..kvcore.evaluate import nik_doc_budget
 
@@ -33,95 +48,157 @@ RESULT_SCHEMA = (
     "success boolean, n_lines int, n_fields int, "
     "error_messages array<string>, warnings array<string>, n_bytes long"
 )
+COMPACT_SCHEMA = "url string, result_json string, success boolean, n_fields int"
+_COMPACT_COLUMNS = [c.split()[0] for c in COMPACT_SCHEMA.split(", ")]
 
 
-def parse_page_row(url, html, text, lang, configs=None) -> dict:
-    """Pure per-row payload: decode + sweep one page.  Shared by the Spark
-    stage and the golden-oracle generator (identical bytes by construction)."""
+def page_lines(html, text) -> tuple[list[str] | None, int]:
+    """The one payload decode: ``(lines, n_bytes)`` of a page.
+
+    ``extract_main_lines`` is looked up in this module at call time, so a
+    tracer patching it here sees every decode.  For a text payload
+    ``"\\n".join(lines)`` is the text itself."""
     if html is not None:
-        lines = extract_main_lines(bytes(html))
-        extracted_text = "\n".join(lines)
-        n_bytes = len(html)
+        return extract_main_lines(bytes(html)), len(html)
     elif text is not None:
-        extracted_text = text
-        lines = text.split("\n")
-        n_bytes = len(text.encode("utf-8"))
-    else:
-        extracted_text = None
-        lines = []
-        n_bytes = 0
+        return text.split("\n"), len(text.encode("utf-8"))
+    return None, 0
 
+
+# --- the parser table: fn(lines, configs, warning) -> parsed dict -----------
+# The kernel entries are module attributes read at call time, so a patched
+# ``ktpspec`` entry (a fault injector, a tracer) reaches every parse.
+
+
+def _sweep(lines, configs, warning):
+    if lines is None:
+        return {"success": False, "result": {}, "all_error_messages": ["no payload"],
+                "warning": warning}
+    return ktpspec.parse_document("\n".join(lines), configs=configs, warning=warning)
+
+
+def _blended(lines, configs, warning):
+    return ktpspec.parse_document_blended(
+        "\n".join(lines or ()), configs=configs, warning=warning
+    )
+
+
+def _boxorder(lines, configs, warning):
+    return ktpspec.parse_document_boxorder(lines or [], configs=configs, warning=warning)
+
+
+def _config(lines, cfg, warning):
+    return kvconfig.parse_document_with_config("\n".join(lines or ()), cfg)
+
+
+# parser -> (parse function, output schema)
+PARSERS = {
+    "sweep": (_sweep, RESULT_SCHEMA),
+    "blended": (_blended, COMPACT_SCHEMA),
+    "boxorder": (_boxorder, COMPACT_SCHEMA),
+    "config": (_config, COMPACT_SCHEMA),
+}
+
+
+def _page_row(url, html, text, lang, configs, parser: str) -> dict:
+    """Decode + guarded parse of one page -> its full ``RESULT_SCHEMA`` row."""
     warning = page_quality_warnings(
         len(html) if html is not None else None,
         len(text) if text is not None else None,
         lang,
     )
-
-    if extracted_text is not None:
-        try:
-            # per-document NIK work budget (ADVICE r4): armed for exactly
-            # this parse and restored after, so a hostile page with
-            # thousands of many-run digit lines cannot wedge an executor,
-            # and no armed state leaks into a reused worker's next call
-            with nik_doc_budget():
-                parsed = ktpspec.parse_document(
-                    extracted_text, configs=configs, warning=warning
-                )
-        except Exception as exc:  # malformed-doc guard (engine policy:
-            # a poisoned row must not kill a 100 TB job; recorded as failure)
-            parsed = {
-                "success": False,
-                "result": {},
-                "all_error_messages": [f"engine exception: {type(exc).__name__}: {exc}"],
-                "warning": warning,
-            }
-    else:
-        parsed = {"success": False, "result": {}, "all_error_messages": ["no payload"], "warning": warning}
-
+    lines, n_bytes = None, 0
+    try:
+        # per-document NIK work budget (ADVICE r4): armed for exactly this
+        # page and restored after, so a hostile page with thousands of
+        # many-run digit lines cannot wedge an executor, and no armed state
+        # leaks into a reused worker's next call
+        with nik_doc_budget():
+            lines, n_bytes = page_lines(html, text)
+            parsed = PARSERS[parser][0](lines, configs, warning)
+    except Exception as exc:  # malformed-doc guard (engine policy: a
+        # poisoned row must not kill a 100 TB job; recorded as failure)
+        parsed = {
+            "success": False,
+            "result": {},
+            "all_error_messages": [f"engine exception: {type(exc).__name__}: {exc}"],
+            "warning": warning,
+        }
+    result = parsed.get("result", {})
+    # boxorder's early abort carries one ``error_message`` instead
+    messages = parsed.get("all_error_messages") or (
+        [parsed["error_message"]] if "error_message" in parsed else []
+    )
     return {
         "url": url,
         "lang": lang,
-        "extracted_text": extracted_text,
-        "result_json": json.dumps(parsed.get("result", {}), default=str),
+        "extracted_text": None if lines is None else "\n".join(lines),
+        "result_json": json.dumps(result, default=str),
         "success": bool(parsed.get("success", False)),
-        "n_lines": len(lines),
-        "n_fields": len(parsed.get("result", {})),
-        "error_messages": [str(m) for m in parsed.get("all_error_messages", [])],
+        "n_lines": 0 if lines is None else len(lines),
+        "n_fields": len(result),
+        "error_messages": [str(m) for m in messages],
         "warnings": [str(v) for v in parsed.get("warning", {}).values()],
         "n_bytes": n_bytes,
     }
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame], configs) -> Iterator[pd.DataFrame]:
+def _map_rows(pages_df, row_fn, schema: str):
+    """The one extraction stage: ``row_fn(url, html, text, lang)`` per page
+    in one narrow Arrow-batched ``mapInPandas``, emitting ``schema``'s
+    columns of each row dict.
+
+    Column pruning: only (url, html, text, lang) enter the Arrow stage —
+    keep any filters BEFORE this call so Catalyst pushes them into the scan.
+    """
+    columns = StructType.fromDDL(schema).fieldNames()
+
     # The pd.DataFrame(list-of-dicts) rebuild below was suspected as a
     # per-batch constant (VERDICT r2 #2); A/B vs a columnar dict-of-lists
     # build (best-of-3 interleaved, 24k docs, local[32]) measured 8.55 s vs
     # 8.43 s — within host noise, so the simpler form stays.  The stage
     # cost is the per-document semantic core, not the frame assembly.
-    for pdf in batches:
-        out = [
-            parse_page_row(row.url, row.html, row.text, row.lang, configs)
-            for row in pdf.itertuples(index=False)
-        ]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "url", "lang", "extracted_text", "result_json", "success",
-                "n_lines", "n_fields", "error_messages", "warnings", "n_bytes",
-            ],
-        )
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [row_fn(r.url, r.html, r.text, r.lang) for r in pdf.itertuples(index=False)]
+            yield pd.DataFrame(rows, columns=columns)
+
+    return pages_df.select("url", "html", "text", "lang").mapInPandas(gen, schema=schema)
 
 
-def extract_pages(pages_df, configs=None):
-    """pages(url, warc_ts, html, text, lang) -> results DataFrame.
+def extract_pages(pages_df, configs=None, parser: str = "sweep"):
+    """pages(url, warc_ts, html, text, lang) -> results DataFrame under one
+    of ``PARSERS``: ``RESULT_SCHEMA`` for the sweep, ``COMPACT_SCHEMA`` for
+    the others."""
+    schema = PARSERS[parser][1]
+    return _map_rows(pages_df, partial(_page_row, configs=configs, parser=parser), schema)
 
-    Column pruning: only (url, html, text, lang) enter the Arrow stage —
-    keep any filters BEFORE this call so Catalyst pushes them into the scan.
-    """
-    pruned = pages_df.select("url", "html", "text", "lang")
-    return pruned.mapInPandas(
-        lambda it: _extract_batches(it, configs), schema=RESULT_SCHEMA
-    )
+
+def _compact(row: dict) -> dict:
+    return {c: row[c] for c in _COMPACT_COLUMNS}
+
+
+def parse_page_row(url, html, text, lang, configs=None) -> dict:
+    """Pure per-row payload: decode + sweep one page.  Shared by the Spark
+    stage and the golden-oracle generator (identical bytes by construction)."""
+    return _page_row(url, html, text, lang, configs, "sweep")
+
+
+def parse_page_row_blended(url, html, text, configs=None) -> dict:
+    """Two-parser blended extraction (Entry-1 structure) for one page."""
+    return _compact(_page_row(url, html, text, None, configs, "blended"))
+
+
+def parse_page_row_boxorder(url, html, text, configs=None) -> dict:
+    """Block-order (geometry-analog, reference parse_doc_new0) extraction
+    for one page: the kept htmlcore blocks ARE the boxes, in document
+    order; a bare-text payload contributes one single-line block per line."""
+    return _compact(_page_row(url, html, text, None, configs, "boxorder"))
+
+
+def parse_page_row_with_config(url, html, text, cfg) -> dict:
+    """Pure per-row payload for user-config extraction (oracle + UDF body)."""
+    return _compact(_page_row(url, html, text, None, cfg, "config"))
 
 
 LINES_SCHEMA = "url string, line_no int, line string"
@@ -134,13 +211,8 @@ def html_to_lines(pages_df):
         for pdf in batches:
             urls, nos, lines = [], [], []
             for row in pdf.itertuples(index=False):
-                if row.html is not None:
-                    doc_lines = extract_main_lines(bytes(row.html))
-                elif row.text is not None:
-                    doc_lines = row.text.split("\n")
-                else:
-                    doc_lines = []
-                for i, ln in enumerate(doc_lines):
+                doc_lines, _ = page_lines(row.html, row.text)
+                for i, ln in enumerate(doc_lines or ()):
                     urls.append(row.url)
                     nos.append(i)
                     lines.append(ln)
@@ -162,128 +234,66 @@ DEBUG_SCHEMA = (
 
 def parse_page_row_debug(url, html, text, lang, configs=None, parser: str = "sweep") -> dict:
     """Per-document debug artifact — the reference ``generate_report`` analog
-    (/root/reference/ocrfw/ktp.py:2066-2092 dumps original + preprocessed +
+    (reference ocrfw/ktp.py:2066-2092 dumps original + preprocessed +
     raw-OCR + final-result files per doc).  One row carries every
     decode-stage block with its densitometry stats and keep/drop verdict plus
-    the final result and error detail: everything needed to diagnose one bad
-    extraction without re-running the job."""
+    the final result, the text the parser saw and the error detail:
+    everything needed to diagnose one bad extraction without re-running the
+    job.  The result comes from the same row path as the job's, so for any
+    parser the debug bytes are the committed bytes plus the messages that
+    the compact schema drops."""
     from ..htmlcore.extract import _keep, decode_payload, extract_blocks
 
-    blocks_info: list[dict] = []
+    row = _page_row(url, html, text, lang, configs, parser)
     if html is not None:
-        for i, b in enumerate(extract_blocks(decode_payload(bytes(html)))):
-            blocks_info.append(
-                {
-                    "block_no": i,
-                    "kept": _keep(b),
-                    "container": b["container"],
-                    "n_chars": b["n_chars"],
-                    "link_chars": b["link_chars"],
-                    "link_density": round(b["link_chars"] / b["n_chars"], 6)
-                    if b["n_chars"]
-                    else 0.0,
-                    "text": b["text"],
-                }
-            )
-    elif text is not None:
-        for i, ln in enumerate(text.split("\n")):
-            blocks_info.append(
-                {
-                    "block_no": i, "kept": True, "container": "",
-                    "n_chars": len(ln), "link_chars": 0, "link_density": 0.0,
-                    "text": ln,
-                }
-            )
-
-    # the final result must come from the SAME parser the job ran, or the
-    # debug table diagnoses the wrong failures.  For blended/boxorder the
-    # compact row wrappers discard the error detail, so the debug path goes
-    # one level deeper to the kvcore entry points (same functions the
-    # wrappers call -> identical result bytes) and keeps the why-it-failed
-    # messages.
-    if parser in ("blended", "boxorder"):
-        from ..kvcore.ktpspec import parse_document_blended, parse_document_boxorder
-
-        try:
-            if parser == "boxorder":
-                if html is not None:
-                    blocks = [b["text"].strip() for b in blocks_info if b["kept"]]
-                elif text is not None:
-                    blocks = text.split("\n")
-                else:
-                    blocks = []
-                with nik_doc_budget():
-                    full = parse_document_boxorder(blocks, configs=configs)
-            else:
-                if html is not None:
-                    doc = "\n".join(extract_main_lines(bytes(html)))
-                elif text is not None:
-                    doc = text
-                else:
-                    doc = ""
-                with nik_doc_budget():
-                    full = parse_document_blended(doc, configs=configs)
-        except Exception as exc:
-            full = {"success": False, "result": {},
-                    "all_error_messages": [f"engine exception: {type(exc).__name__}: {exc}"]}
-        err_msgs = full.get("all_error_messages") or (
-            [full["error_message"]] if "error_message" in full else []
-        )
-        parsed = {
-            "success": bool(full.get("success", False)),
-            "result_json": json.dumps(full.get("result", {}), default=str),
-            "error_messages": err_msgs,
-        }
-    else:
-        parsed = parse_page_row(url, html, text, lang, configs)
-    if html is not None:
-        n_bytes = len(html)
-    elif text is not None:
-        n_bytes = len(text.encode("utf-8"))
-    else:
-        n_bytes = 0
+        # every block, dropped ones included, for its keep/drop evidence
+        blocks = [
+            {
+                "block_no": i,
+                "kept": _keep(b),
+                "container": b["container"],
+                "n_chars": b["n_chars"],
+                "link_chars": b["link_chars"],
+                "link_density": round(b["link_chars"] / b["n_chars"], 6)
+                if b["n_chars"]
+                else 0.0,
+                "text": b["text"],
+            }
+            for i, b in enumerate(extract_blocks(decode_payload(bytes(html))))
+        ]
+    else:  # a text payload's lines are its blocks, all kept
+        doc = row["extracted_text"]
+        blocks = [
+            {
+                "block_no": i, "kept": True, "container": "",
+                "n_chars": len(ln), "link_chars": 0, "link_density": 0.0,
+                "text": ln,
+            }
+            for i, ln in enumerate(doc.split("\n") if doc is not None else ())
+        ]
     return {
         "url": url,
         "lang": lang,
-        "success": parsed["success"],
-        "n_bytes": parsed.get("n_bytes", n_bytes),
-        "n_blocks": len(blocks_info),
-        "n_kept": sum(1 for b in blocks_info if b["kept"]),
-        "blocks": blocks_info,
-        "extracted_text": parsed.get("extracted_text"),
-        "result_json": parsed["result_json"],
-        "error_messages": [str(m) for m in parsed.get("error_messages", [])],
+        "success": row["success"],
+        "n_bytes": row["n_bytes"],
+        "n_blocks": len(blocks),
+        "n_kept": sum(1 for b in blocks if b["kept"]),
+        "blocks": blocks,
+        "extracted_text": row["extracted_text"],
+        "result_json": row["result_json"],
+        "error_messages": row["error_messages"],
     }
 
 
-def extract_pages_debug(pages_df, configs=None, only_failures: bool = True, parser: str = "sweep"):
-    """pages -> per-url debug rows (same fused narrow-stage shape).
-
-    ``only_failures`` filters AFTER extraction inside the stage, so a debug
-    pass over a pre-filtered failed-url subset does no wasted Arrow I/O."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "url", "lang", "success", "n_bytes", "n_blocks", "n_kept",
-            "blocks", "extracted_text", "result_json", "error_messages",
-        ]
-        for pdf in batches:
-            out = [
-                parse_page_row_debug(row.url, row.html, row.text, row.lang, configs, parser)
-                for row in pdf.itertuples(index=False)
-            ]
-            if only_failures:
-                out = [r for r in out if not r["success"]]
-            yield pd.DataFrame(out, columns=cols)
-
-    return pages_df.select("url", "html", "text", "lang").mapInPandas(
-        gen, schema=DEBUG_SCHEMA
+def extract_pages_debug(pages_df, configs=None, parser: str = "sweep"):
+    """pages -> one debug row per page (same fused narrow-stage shape).
+    The job runs it over its failed urls only."""
+    return _map_rows(
+        pages_df, partial(parse_page_row_debug, configs=configs, parser=parser), DEBUG_SCHEMA
     )
 
 
 # --- universal custom-config extraction ------------------------------------
-
-CUSTOM_SCHEMA = "url string, result_json string, success boolean, n_fields int"
 
 # Demo config used by the golden-checked `custom_config_extract` query: a
 # user-defined key dictionary over the same pages (kvcore/config.py format).
@@ -299,128 +309,8 @@ SAMPLE_CUSTOM_CONFIG = {
 }
 
 
-def parse_page_row_with_config(url, html, text, cfg) -> dict:
-    """Pure per-row payload for user-config extraction (oracle + UDF body)."""
-    from ..kvcore.config import parse_document_with_config
-
-    try:
-        if html is not None:
-            doc = "\n".join(extract_main_lines(bytes(html)))
-        elif text is not None:
-            doc = text
-        else:
-            doc = ""
-        with nik_doc_budget():
-            parsed = parse_document_with_config(doc, cfg)
-    except Exception:  # poisoned-row policy: same guard as parse_page_row —
-        # one malformed document must not abort the whole job
-        parsed = {"success": False, "result": {}}
-    return {
-        "url": url,
-        "result_json": json.dumps(parsed.get("result", {}), default=str),
-        "success": bool(parsed.get("success", False)),
-        "n_fields": len(parsed.get("result", {})),
-    }
-
-
 def extract_pages_with_config(pages_df, cfg: dict):
-    """pages -> per-url results under a user-defined extraction config.
-
-    Same fused-narrow-stage physical shape as ``extract_pages``; the config
-    is a plain JSON dict captured by closure (broadcast-equivalent)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                parse_page_row_with_config(row.url, row.html, row.text, cfg)
-                for row in pdf.itertuples(index=False)
-            ]
-            yield pd.DataFrame(out, columns=["url", "result_json", "success", "n_fields"])
-
-    return pages_df.select("url", "html", "text").mapInPandas(gen, schema=CUSTOM_SCHEMA)
-
-
-BLENDED_SCHEMA = "url string, result_json string, success boolean, n_fields int"
-
-
-def parse_page_row_blended(url, html, text, configs=None) -> dict:
-    """Two-parser blended extraction (Entry-1 structure) for one page."""
-    from ..kvcore.ktpspec import parse_document_blended
-
-    try:
-        if html is not None:
-            doc = "\n".join(extract_main_lines(bytes(html)))
-        elif text is not None:
-            doc = text
-        else:
-            doc = ""
-        with nik_doc_budget():
-            parsed = parse_document_blended(doc, configs=configs)
-    except Exception as exc:
-        parsed = {"success": False, "result": {},
-                  "all_error_messages": [f"engine exception: {type(exc).__name__}: {exc}"]}
-    return {
-        "url": url,
-        "result_json": json.dumps(parsed.get("result", {}), default=str),
-        "success": bool(parsed.get("success", False)),
-        "n_fields": len(parsed.get("result", {})),
-    }
-
-
-def parse_page_row_boxorder(url, html, text, configs=None) -> dict:
-    """Block-order (geometry-analog, reference parse_doc_new0) extraction
-    for one page: the kept htmlcore blocks ARE the boxes, in document
-    order; a bare-text payload contributes one single-line block per line."""
-    from ..htmlcore.extract import _keep, decode_payload, extract_blocks
-    from ..kvcore.ktpspec import parse_document_boxorder
-
-    try:
-        if html is not None:
-            blocks = [
-                b["text"].strip()
-                for b in extract_blocks(decode_payload(bytes(html)))
-                if _keep(b)
-            ]
-        elif text is not None:
-            blocks = text.split("\n")
-        else:
-            blocks = []
-        with nik_doc_budget():
-            parsed = parse_document_boxorder(blocks, configs=configs)
-    except Exception:  # poisoned-row policy (incl. the reference's
-        # UnboundLocalError echo quirk on never-scanned failing specs)
-        parsed = {"success": False, "result": {}}
-    return {
-        "url": url,
-        "result_json": json.dumps(parsed.get("result", {}), default=str),
-        "success": bool(parsed.get("success", False)),
-        "n_fields": len(parsed.get("result", {})),
-    }
-
-
-def extract_pages_boxorder(pages_df, configs=None):
-    """pages -> block-order-sweep per-url results (third parser)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                parse_page_row_boxorder(row.url, row.html, row.text, configs)
-                for row in pdf.itertuples(index=False)
-            ]
-            yield pd.DataFrame(out, columns=["url", "result_json", "success", "n_fields"])
-
-    return pages_df.select("url", "html", "text").mapInPandas(gen, schema=CUSTOM_SCHEMA)
-
-
-def extract_pages_blended(pages_df, configs=None):
-    """pages -> blended (sweep + NIK re-scan) per-url results."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                parse_page_row_blended(row.url, row.html, row.text, configs)
-                for row in pdf.itertuples(index=False)
-            ]
-            yield pd.DataFrame(out, columns=["url", "result_json", "success", "n_fields"])
-
-    return pages_df.select("url", "html", "text").mapInPandas(gen, schema=BLENDED_SCHEMA)
+    """pages -> per-url results under a user-defined extraction config: the
+    ``config`` parser, with the config a plain JSON dict captured by closure
+    (broadcast-equivalent)."""
+    return extract_pages(pages_df, cfg, parser="config")

@@ -135,17 +135,16 @@ def extract_line_field_spans(lines_df, configs=None):
 def extract_page_field_spans(pages_df, configs=None):
     """pages(url, html, text, lang, ...) -> span rows, END TO END.
 
-    The north star's full span surface: payload decode (html -> densitometry
-    main lines, exactly the extraction stage's branch — extract.py
-    ``parse_page_row``) and per-line span emission FUSED into one narrow
-    Arrow stage on one scan — zero exchanges, so the plan is the same
-    100×-safe shape as ``extract_pages``.  Span offsets are relative to
-    the decoded line (the coordinate system the extractor itself slices
-    in), and line_no indexes the decoded line list — identical to the
-    golden generator's enumeration, which is what makes the committed
-    golden span table an exact oracle for this stage too.
+    The north star's full span surface: payload decode (the extraction
+    stage's own ``extract.page_lines``) and per-line span emission FUSED
+    into one narrow Arrow stage on one scan — zero exchanges, so the plan
+    is the same 100×-safe shape as ``extract_pages``.  Span offsets are
+    relative to the decoded line (the coordinate system the extractor
+    itself slices in), and line_no indexes the decoded line list —
+    identical to the golden generator's enumeration, which is what makes
+    the committed golden span table an exact oracle for this stage too.
     """
-    from ..htmlcore import extract_main_lines
+    from .extract import page_lines
 
     pruned = pages_df.select("url", "html", "text")
 
@@ -154,16 +153,11 @@ def extract_page_field_spans(pages_df, configs=None):
         for batch in batches:
             rows = []
             for r in batch.itertuples(index=False):
-                if r.html is not None:
-                    try:
-                        lines = extract_main_lines(bytes(r.html))
-                    except Exception:
-                        lines = []  # hostile payload: no spans, never a dead task
-                elif r.text is not None:
-                    lines = r.text.split("\n")
-                else:
-                    lines = []
-                for i, line in enumerate(lines):
+                try:
+                    lines, _ = page_lines(r.html, r.text)
+                except Exception:
+                    lines = None  # hostile payload: no spans, never a dead task
+                for i, line in enumerate(lines or ()):
                     for field, ks, ke, vs, ve, value in line_field_spans(
                         line, configs, spec_template=specs
                     ):

@@ -21,25 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lakehouse import SnapshotTable
-from ..operators.extract import (
-    extract_pages,
-    extract_pages_blended,
-    extract_pages_boxorder,
-    extract_pages_debug,
-)
+from ..operators.extract import PARSERS, extract_pages, extract_pages_debug
 
 from .partitioning import plan_partitions, salted_repartition
-
-# parser registry: the three physical parse strategies a user can pick per
-# job (line sweep == reference parse_doc; blended adds the NIK re-scan;
-# boxorder is the parse_doc_new0 block-geometry analog).  All three accept
-# a custom field config; blended/boxorder emit the compact schema (no
-# n_bytes/extracted_text).
-PARSERS = {
-    "sweep": extract_pages,
-    "blended": extract_pages_blended,
-    "boxorder": extract_pages_boxorder,
-}
 
 AUDIT_SCHEMA = (
     "run_id string, stage string, partition_id int, n_docs long, n_success long, "
@@ -86,6 +70,12 @@ def run_extraction_job(
     key_end, value_start, value_end, value) — to its own snapshot table,
     crash-consistent with the results table (see the inline comment on
     commit order)."""
+    # ``parser`` names an entry of the extraction stage's one parser table
+    # (``operators.extract.PARSERS``): the line sweep (reference parse_doc),
+    # blended (+ the NIK re-scan), boxorder (the parse_doc_new0 block
+    # analog) or config (``configs`` is a user config).  Only the sweep
+    # emits the full schema; the others commit the compact one (no
+    # n_bytes/extracted_text).
     if parser not in PARSERS:
         # validate BEFORE any action — an argument typo must not cost a
         # full source scan + resume anti-join first
@@ -157,7 +147,7 @@ def run_extraction_job(
             # manifest chain junk-free, same policy as the results rollback
             spans_tbl.rollback_latest(span_sid)
 
-    results = PARSERS[parser](pages_df, configs=configs).withColumn(
+    results = extract_pages(pages_df, configs=configs, parser=parser).withColumn(
         "partition_id", F.spark_partition_id()
     )
     fp_tbl = SnapshotTable(fp_path or f"{results_path}_fps") if dedup_content else None
@@ -279,7 +269,6 @@ def run_extraction_job(
         debug_rows = extract_pages_debug(
             pages_df.join(failed_urls, "url", "left_semi"),
             configs=configs,
-            only_failures=True,
             parser=parser,
         )
         SnapshotTable(debug_path).append(

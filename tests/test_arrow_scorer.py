@@ -300,3 +300,33 @@ def test_char_shingles_flush_bound(spark, monkeypatch):  # noqa: F811
     )
     exp = sorted((r.doc_id, r.shingle) for r in expr_form.collect())
     assert got == exp
+
+
+def test_cluster_drop_ids_lone_zero_norm_dim_block(spark):  # noqa: F811
+    """A zero-norm vector alone in its dimension block has no same-dim
+    cluster mate: the pair form scores all its pairs NULL (unequal
+    lengths) and never divides, so the block kernel must not raise
+    either, and drops exactly what the pair form drops.  A zero-norm
+    vector WITH a same-dim mate still raises like ANSI division."""
+    rows = [
+        (0, 1, 10, [1.0, 2.0, 3.0]),
+        (0, 2, 11, [0.0, 0.0]),  # alone in dim 2
+        (0, 3, 12, [1.0, 2.0, 3.01]),
+        (0, 4, 13, [-3.0, 1.0, 0.5]),
+    ]
+    schema = "cluster long, rank long, vec_id long, embedding array<double>"
+    ranked = spark.createDataFrame(rows, schema)
+    got = {r.vec_id for r in similarity._cluster_drop_ids(ranked, 0.9).collect()}
+
+    a = ranked.select(*[F.col(c).alias(f"{c}_a") for c in ranked.columns])
+    b = ranked.select(*[F.col(c).alias(f"{c}_b") for c in ranked.columns])
+    pairs = a.join(
+        b, (F.col("cluster_a") == F.col("cluster_b")) & (F.col("rank_a") < F.col("rank_b"))
+    )
+    cos = similarity.pair_cosine(9)(F.col("embedding_a"), F.col("embedding_b"))
+    want = {r.vec_id_b for r in pairs.where(cos >= 0.9).select("vec_id_b").collect()}
+    assert got == want == {12}
+
+    mate = spark.createDataFrame(rows + [(0, 5, 14, [1.0, 1.0])], schema)
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        similarity._cluster_drop_ids(mate, 0.9).collect()

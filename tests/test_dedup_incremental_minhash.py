@@ -157,3 +157,49 @@ class TestPhraseSearch:
 
         idx = self._index(spark, [(1, "Hello World")])
         assert phrase_search(idx, ["Hello", "WORLD"]).count() == 1
+
+
+def test_query_split_follows_provenance_not_id_range(spark, tmp_path):  # noqa: F811
+    """The query fixture splits its one band table into committed index and
+    batch by a provenance tag, not by ``doc_id < 1e6``: with every base
+    doc_id >= 1e6 the committed docs must still form the index, so a fresh
+    doc drops against a committed near-dup with a larger id, exactly as in
+    the oracle."""
+    import random
+
+    import duckdb
+    import pandas as pd
+
+    from universal_key_value_based_text_processing_with_ocr_spark.api import (
+        ORACLE_SQL,
+        q_dedup_incremental_minhash,
+    )
+
+    base = 5_000_000
+    words = ["spark", "shuffle", "arrow", "parquet", "minhash", "band", "index", "batch"]
+    rng = random.Random(7)
+    docs = pd.DataFrame(
+        {
+            "doc_id": [base + i for i in range(30)],
+            "text": [
+                " ".join(rng.choice(words) + str(rng.randint(0, 99)) for _ in range(30))
+                for _ in range(30)
+            ],
+        }
+    )
+    # fresh doc base+1 near-duplicates committed doc base+2, whose id is
+    # LARGER: only the committed index can drop it
+    docs.loc[2, "text"] = docs.loc[1, "text"] + " tail"
+    spark.createDataFrame(docs, "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    got = sorted(r.doc_id for r in q_dedup_incremental_minhash(spark, str(tmp_path)).collect())
+
+    con = duckdb.connect()
+    con.register("documents", docs)
+    want = sorted(con.execute(ORACLE_SQL["dedup_incremental_minhash"]).fetchdf()["doc_id"])
+    assert got == want
+    # the committed docs' planted near-dups (id + 1e6) all drop
+    planted = {d + 1_000_000 for d in docs.doc_id if d % 3 != 0 and d % 7 == 1}
+    assert planted and not planted & set(got)
+    assert (base + 1) % 3 == 0 and base + 1 not in got

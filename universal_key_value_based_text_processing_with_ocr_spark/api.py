@@ -890,19 +890,24 @@ def q_dedup_incremental_minhash(spark, sf_dir):
     )
     new_batch = fresh.unionByName(planted_vs_committed).unionByName(planted_vs_batch)
     # ONE shingle+minhash pass over committed ∪ batch instead of two
-    # (minhash is per-doc, so banding the union then splitting by id is
-    # bit-identical; the committed/batch split predicates mirror the
-    # fixture's own +1e6/+2e6 id-offset scheme above).  The checkpoint is
-    # the pushdown barrier: without it the optimizer pushes each side's
-    # id filter below the shared agg and re-creates the two-pass shape.
+    # (minhash is per-doc, so banding the union then splitting it is
+    # bit-identical).  Each side carries a literal provenance tag through
+    # the banding, so the split reads lineage, not doc_id ranges, and the
+    # tag joins the per-doc key exactly as in the oracle.  The checkpoint
+    # is the pushdown barrier: without it the optimizer pushes each side's
+    # tag filter below the shared agg and re-creates the two-pass shape.
     # In the production pipeline the committed index is a persisted side
     # table and the public incremental_minhash_dedup path applies.
     all_bands = dedup.minhash_bands(
-        docs.unionByName(planted_vs_committed).unionByName(planted_vs_batch)
+        committed.withColumn("committed", F.lit(True)).unionByName(
+            new_batch.withColumn("committed", F.lit(False))
+        ),
+        extra_cols=("committed",),
     ).localCheckpoint(eager=True)
-    is_committed = (F.col("doc_id") < 1000000) & (F.col("doc_id") % 3 != 0)
     survivors, _index_rows = dedup._incremental_minhash_from_bands(
-        new_batch, all_bands.where(~is_committed), all_bands.where(is_committed)
+        new_batch,
+        all_bands.where(~F.col("committed")).drop("committed"),
+        all_bands.where(F.col("committed")).drop("committed"),
     )
     return survivors.select("doc_id")
 

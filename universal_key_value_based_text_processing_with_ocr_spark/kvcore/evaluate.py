@@ -23,8 +23,15 @@ nested-loop similarity-join physical strategy (see SURVEY.md §2c).
 
 Faithfully-kept reference quirks:
 - ``eval_nik``: the bucket-existence test checks candidate LENGTH against a
-  dict keyed by DISTANCE (evaluators.py:58-59), so each distance bucket is
-  reset before every append and retains only the LAST candidate.
+  dict keyed by DISTANCE (evaluators.py:58-59).  A candidate is >= 9
+  digits long and, for ``max_distance <= 7``, no distance key reaches 9,
+  so each distance bucket is reset before every append and retains only
+  the LAST candidate of the reference's subset enumeration.  The exact
+  mode relies on that: it searches for the last hit per distance
+  directly (a pruned reverse search) instead of enumerating 2^n subsets,
+  and rejects larger ``max_distance`` values.  The 2^n figure survives
+  only as the per-document budget charge that decides when a page's
+  later lines switch to the bounded mode.
 - ``eval_birth``: the digit-confusion dict literal assigns '9' twice
   ('9'->'5' then '9'->'4'); the effective mapping is 9->4.  Values whose
   repaired day/month drop a leading zero keep the shortened string.
@@ -39,7 +46,6 @@ from __future__ import annotations
 import math
 import re
 from functools import lru_cache
-from itertools import combinations
 
 from . import dictionaries
 from .repair import repair_to_digits, repair_to_letters
@@ -127,13 +133,15 @@ def eval_city(value, max_mistakes=5, min_accuracy=0.5):
     return [True, _best_near_100(scores_names), scores_names]
 
 
-#: run-count ceiling for the byte-exact subset enumeration: 2^22 subsets
-#: ~5.6 s worst case — the reference's own practical terminating range
-#: (review pass 5 measured it producing DIFFERENT NIK values at 19-22
-#: runs where an earlier 2^18 cutoff had already switched modes, i.e. a
-#: real parity divergence on inputs the reference handles; beyond ~22
-#: runs its 4x-per-+2-runs growth is effectively non-terminating and
-#: parity is untestable).
+#: MODE-SWITCH CONTRACT, not a cost: a value with at most this many
+#: whitespace runs takes the exact mode and is charged 2^n against the
+#: document budget below — the subsets the reference enumerates, so the
+#: exact/bounded switch happens on exactly the inputs and at exactly the
+#: point in a document where it did when the exact mode enumerated them.
+#: The exact mode itself costs far less (see ``_last_nik_hits``).  22 is
+#: the reference's practical terminating range (~5.6 s there; it produces
+#: different NIK values at 19-22 runs than a 2^18 cutoff would, so those
+#: inputs stay exact).
 _NIK_EXACT_MAX_RUNS = 22
 
 #: bounded-mode budget: combos examined before the candidate search stops
@@ -141,19 +149,25 @@ _NIK_EXACT_MAX_RUNS = 22
 #: divergence on these inputs).
 _NIK_BOUNDED_BUDGET = 500_000
 
-#: per-DOCUMENT work ceiling across ALL eval_nik calls (ADVICE r4): the
-#: blended parser's NIK_1 re-scan feeds every line here, so a hostile page
-#: with thousands of 19-22-run lines costs ~5.6 s EACH under the per-call
-#: exact bound — hours per document.  Every per-row extraction entry
-#: point arms this budget by wrapping its parse in the ``nik_doc_budget``
+#: per-DOCUMENT budget across ALL eval_nik calls (ADVICE r4), armed by
+#: every per-row extraction entry point through the ``nik_doc_budget``
 #: context manager below (arm/restore, never a bare reset — see its
-#: docstring); every exact enumeration deducts its 2^n subsets and every
-#: bounded search its visited nodes.  Once spent, later calls in the same
-#: document fall to the bounded search (ultimately an empty one) under
-#: the same documented-divergence contract.  Direct library/parity calls
-#: never arm it (None = unlimited).
+#: docstring).  Every exact call deducts its 2^n (the reference's
+#: enumeration size, see ``_NIK_EXACT_MAX_RUNS``) and every bounded
+#: search its visited nodes; once spent, later calls in the same document
+#: fall to the bounded search (ultimately an empty one) under the
+#: documented-divergence contract.  The blended parser's NIK_1 re-scan
+#: feeds every line here, so this caps a hostile page's bounded-mode work
+#: and decides, line by line, which results stay exact: the deductions
+#: are a parity contract, not a measure of this engine's cost.  Direct
+#: library/parity calls never arm it (None = unlimited).
 _NIK_DOC_BUDGET = 1 << 22
 _nik_doc_budget: list = [None]
+
+_NIK_LENGTH = 16
+#: the largest ``max_distance`` for which the exact mode's last-hit
+#: argument holds (see ``eval_nik``)
+_NIK_MAX_DISTANCE = 7
 
 
 def reset_nik_doc_budget() -> None:
@@ -183,48 +197,124 @@ def nik_doc_budget():
         _nik_doc_budget[0] = prev
 
 
-def eval_nik(value, max_distance=1):
-    """NIK candidate search over subsets of the value's digit runs.
+def _nik_prefix_ok(cand: str, tree: dict) -> bool:
+    return any(cand[i : i + 2] in tree for i in range(2))
 
-    For values with <= ``_NIK_EXACT_MAX_RUNS`` whitespace runs this is the
-    reference's exact enumeration (all 2^n subsets in (size, lex) order,
-    byte-identical buckets incl. the length/distance reset quirk).  Beyond
-    that the reference hangs — 2^n subsets — so one hostile or merely
-    long line would wedge an executor for days (review finding; the
-    blended parser feeds EVERY line here via the NIK_1 re-scan).  The
-    bounded mode searches only non-empty runs depth-first with a
-    length-prune (a partial concatenation already longer than 17 digits
-    can never reach a candidate) under ``_NIK_BOUNDED_BUDGET``; candidate
-    CONTENT matches the reference, but duplicate multiplicity from empty
-    runs and the enumeration order diverge — on inputs where the
-    reference produces no answer in practical time at all."""
-    nik_length = 16
+
+def _nik_length_bits(dist: int) -> int:
+    """Bitmask of the candidate lengths at ``dist`` from a full NIK."""
+    return (1 << (_NIK_LENGTH - dist)) | (1 << (_NIK_LENGTH + dist))
+
+
+def _last_nik_hits(runs: list, max_distance: int, tree: dict) -> dict:
+    """distance -> the LAST hit of the reference's enumeration, without
+    enumerating: ``combinations`` visits index tuples by size, then in
+    lexicographic order, so the last hit is the first one a search finds
+    going by size from n down and, within a size, through index tuples in
+    reverse lexicographic order (highest index first at every position).
+
+    Pruning keeps that search small:
+    - ``reach[i][k]`` is the bitmask of length sums that k runs chosen
+      from ``runs[i:]`` can reach (capped at 16 + max_distance); a partial
+      whose completions cannot reach a wanted length is skipped;
+    - a hit needs >= 9 digits, so its prefix probe reads only the first 3:
+      a partial of 3+ digits that fails the probe is skipped, and one that
+      passes it always completes to a hit when its length is reachable;
+    - the partials still shorter than 3 digits are few, so a
+      (start, k, partial) state that held no hit is remembered as dead —
+      runs of empty strings would otherwise reach it by many paths.
+    Found distances leave the wanted set at once, so the wanted lengths
+    only shrink and a dead state stays dead."""
+    want = 0
+    for d in range(max_distance + 1):
+        want |= _nik_length_bits(d)
+    if want == 0:
+        return {}
+    n = len(runs)
+    full = (1 << (_NIK_LENGTH + max_distance + 1)) - 1
+    reach = [[0] * (n + 1) for _ in range(n + 1)]
+    reach[n][0] = 1
+    for i in range(n - 1, -1, -1):
+        w, below, row = len(runs[i]), reach[i + 1], reach[i]
+        row[0] = 1
+        for k in range(1, n - i + 1):
+            row[k] = (below[k] | (below[k - 1] << w)) & full
+    hits: dict = {}
+    dead: set = set()
+
+    def search(start: int, k: int, cur: str) -> bool:
+        nonlocal want
+        if k == 0:
+            dist = abs(_NIK_LENGTH - len(cur))
+            hits[dist] = cur
+            want &= ~_nik_length_bits(dist)
+            return True
+        short = len(cur) < 3
+        if short and (start, k, cur) in dead:
+            return False
+        found = False
+        for j in range(n - k, start - 1, -1):
+            nxt = cur + runs[j]
+            if not (reach[j + 1][k - 1] << len(nxt)) & want:
+                continue
+            if short and len(nxt) >= 3 and not _nik_prefix_ok(nxt, tree):
+                continue
+            found = search(j + 1, k - 1, nxt) or found
+            if not want:
+                break
+        if short and not found:
+            dead.add((start, k, cur))
+        return found
+
+    for r in range(n, 0, -1):
+        if not want:
+            break
+        search(0, r, "")
+    return hits
+
+
+def eval_nik(value, max_distance=1):
+    """NIK candidate search over subsets of the value's digit runs: for
+    each distance d <= ``max_distance``, a concatenation of runs (kept in
+    order) of length 16 +- d whose first two or second two digits are a
+    province code.
+
+    The reference (evaluators.py:58-60) enumerates all 2^n subsets in
+    ``combinations`` order — by size, then lexicographically — and files
+    each hit under its distance, but tests the candidate's LENGTH against
+    the distance-keyed dict.  A hit is 9+ digits long, and with
+    ``max_distance <= 7`` no distance key reaches 9, so every hit resets
+    its bucket: each distance keeps only its LAST hit.  The exact mode
+    (values with <= ``_NIK_EXACT_MAX_RUNS`` whitespace runs) therefore
+    finds that last hit directly, by a pruned reverse search
+    (``_last_nik_hits``) instead of the enumeration, with byte-identical
+    results.  Larger ``max_distance`` values would let the length test
+    hit a key and keep several candidates; no caller passes one, and they
+    raise ValueError.
+
+    Beyond ``_NIK_EXACT_MAX_RUNS`` runs, or once the document budget is
+    spent, the bounded mode searches only non-empty runs depth-first with
+    a length-prune (a partial concatenation already longer than 16 +
+    max_distance digits can never reach a candidate) under
+    ``_NIK_BOUNDED_BUDGET``; candidate CONTENT matches the reference, but
+    its visiting order diverges — on inputs where the reference produces
+    no answer in practical time at all."""
+    if max_distance > _NIK_MAX_DISTANCE:
+        raise ValueError(
+            f"eval_nik: max_distance {max_distance} > {_NIK_MAX_DISTANCE}; "
+            "the reference keeps more than the last hit per distance there"
+        )
     tree = dictionaries.prov_city_kec()
     digit_runs = [re.sub(r"[^0-9]", "", t) for t in repair_to_digits(value, False).split(" ")]
-
-    buckets: dict = {}
-
-    def consider(cand: str) -> None:
-        dist = abs(nik_length - len(cand))
-        if dist <= max_distance:
-            prefix_ok = any(cand[i : i + 2] in tree for i in range(2))
-            if prefix_ok:
-                # Quirk: tests LENGTH against a distance-keyed dict, so
-                # the bucket resets on every hit and keeps only the last
-                # candidate (evaluators.py:58-60).
-                if len(cand) not in buckets:
-                    buckets[dist] = []
-                buckets[dist].append(cand)
 
     doc_left = _nik_doc_budget[0]
     exact_cost = (1 << len(digit_runs)) if len(digit_runs) <= _NIK_EXACT_MAX_RUNS else None
     if exact_cost is not None and (doc_left is None or exact_cost <= doc_left):
         if doc_left is not None:
             _nik_doc_budget[0] = doc_left - exact_cost
-        for r in range(1, len(digit_runs) + 1):
-            for combo in combinations(digit_runs, r):
-                consider("".join(map(str, combo)))
+        buckets = {d: [c] for d, c in _last_nik_hits(digit_runs, max_distance, tree).items()}
     else:
+        buckets = {}
         runs = [t for t in digit_runs if t]
         budget = (
             _NIK_BOUNDED_BUDGET
@@ -245,19 +335,20 @@ def eval_nik(value, max_distance=1):
                     return
                 budget -= 1
                 nxt = cur + runs[j]
-                if len(nxt) > nik_length + max_distance:
+                if len(nxt) > _NIK_LENGTH + max_distance:
                     continue  # any superset is longer still
-                consider(nxt)
+                dist = abs(_NIK_LENGTH - len(nxt))
+                if dist <= max_distance and _nik_prefix_ok(nxt, tree):
+                    buckets[dist] = [nxt]  # the reference's reset: last hit wins
                 rec(j + 1, nxt)
 
         rec(0, "")
         if doc_left is not None:
             _nik_doc_budget[0] = doc_left - (budget0 - budget)
 
-    ordered = {k: buckets[k] for k in sorted(buckets)}
     if len(buckets) > 0:
-        return [True, [[k, v] for k, v in ordered.items()]]
-    return [False, [[k, v] for k, v in buckets.items()]]
+        return [True, [[k, buckets[k]] for k in sorted(buckets)]]
+    return [False, []]
 
 
 # Effective digit-confusion map: the reference dict literal assigns '9'

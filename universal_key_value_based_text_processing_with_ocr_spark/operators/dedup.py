@@ -379,18 +379,23 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 16, shingle_n: int = 10)
     )
 
 
-def _minhash_sig_array(docs: DataFrame, n_hashes: int, shingle_n: int) -> DataFrame:
-    """(doc_id, sig): the seed-ordered signature ARRAY, built straight from
-    the per-seed min columns — ``array(h0..h15)`` is by construction the
-    same seed-sorted array the long form's ``array_sort(collect_list(
-    struct(seed, minhash)))`` re-assembled, minus that second doc_id
-    exchange + ObjectHashAggregate the re-collect paid (r6: the banding
-    consumers never needed the long form at all).  The one groupBy(doc_id)
-    over hashed shingles stays THE shared exchange for every consumer."""
-    sh = char_shingles(docs, shingle_n).select(
-        "doc_id", _base_hash(F.col("shingle")).alias("x")
+def _minhash_sig_array(
+    docs: DataFrame, n_hashes: int, shingle_n: int, extra_cols: tuple = ()
+) -> DataFrame:
+    """(doc_id, *extra_cols, sig): the seed-ordered signature ARRAY, built
+    straight from the per-seed min columns — ``array(h0..h15)`` is by
+    construction the same seed-sorted array the long form's ``array_sort(
+    collect_list(struct(seed, minhash)))`` re-assembled, minus that second
+    doc_id exchange + ObjectHashAggregate the re-collect paid (r6: the
+    banding consumers never needed the long form at all).  The one
+    groupBy(doc_id) over hashed shingles stays THE shared exchange for
+    every consumer; ``extra_cols`` (row-constant per document) join its
+    key and ride through."""
+    extras = [str(c) for c in extra_cols]
+    sh = char_shingles(docs, shingle_n, extra_cols).select(
+        "doc_id", *extras, _base_hash(F.col("shingle")).alias("x")
     )
-    mins = sh.groupBy("doc_id").agg(
+    mins = sh.groupBy("doc_id", *extras).agg(
         *[
             F.min(
                 (F.lit(MINHASH_A[i]) * F.col("x") + F.lit(MINHASH_B[i])) % MINHASH_PRIME
@@ -399,7 +404,7 @@ def _minhash_sig_array(docs: DataFrame, n_hashes: int, shingle_n: int) -> DataFr
         ]
     )
     return mins.select(
-        "doc_id", F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig")
+        "doc_id", *extras, F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig")
     )
 
 
@@ -481,24 +486,32 @@ def minhash_lsh_pairs(
 
 
 def minhash_bands(
-    docs: DataFrame, n_hashes: int = 16, band_size: int = 4, shingle_n: int = 10
+    docs: DataFrame,
+    n_hashes: int = 16,
+    band_size: int = 4,
+    shingle_n: int = 10,
+    extra_cols: tuple = (),
 ) -> DataFrame:
-    """(doc_id, band, band_hash, sig): the LSH INDEX rows of a corpus —
-    the persistable form of minhash_lsh_pairs' banding (same signature,
-    same band hashing), carrying the full signature so a later batch can
-    verify candidate similarity against the index without re-reading any
-    committed text.  Storage is n_bands rows/doc with the (n_hashes)-long
-    array repeated; at 10^9+ docs split sig into its own (doc_id, sig)
-    side table — the join shape below is unchanged."""
+    """(doc_id, *extra_cols, band, band_hash, sig): the LSH INDEX rows of a
+    corpus — the persistable form of minhash_lsh_pairs' banding (same
+    signature, same band hashing), carrying the full signature so a later
+    batch can verify candidate similarity against the index without
+    re-reading any committed text.  Storage is n_bands rows/doc with the
+    (n_hashes)-long array repeated; at 10^9+ docs split sig into its own
+    (doc_id, sig) side table — the join shape below is unchanged.
+    ``extra_cols`` are row-constant per-document tags (e.g. provenance)
+    carried onto every band row."""
     if n_hashes % band_size != 0:
         raise ValueError(
             f"n_hashes ({n_hashes}) must be divisible by band_size ({band_size})"
         )
-    sig_arr = _minhash_sig_array(docs, n_hashes, shingle_n)
+    extras = [str(c) for c in extra_cols]
+    sig_arr = _minhash_sig_array(docs, n_hashes, shingle_n, extra_cols)
     n_bands = n_hashes // band_size
     band_ids = F.explode(F.array([F.lit(i) for i in range(n_bands)])).alias("band")
-    return sig_arr.select("doc_id", band_ids, "sig").select(
+    return sig_arr.select("doc_id", *extras, band_ids, "sig").select(
         "doc_id",
+        *extras,
         "band",
         _band_hash(
             F.concat_ws(

@@ -630,10 +630,12 @@ def _cluster_drop_ids(ranked: DataFrame, tau: float, scale: int = 9) -> DataFram
         dropped = []
         for d in np.unique(dims):
             sel = np.flatnonzero(dims == d)
+            if sel.size < 2:
+                continue  # no same-dim pair: the pair form scores all NULL
             A = np.stack([arrs[i] for i in sel])
             na = _fold_norm(A)
-            # the pair form evaluates every rank_a<rank_b pair, so any
-            # valid zero-norm member of a multi-member cluster raised
+            # the pair form evaluates every same-dim rank_a<rank_b pair, so
+            # any valid zero-norm member of a multi-member block raised
             if np.any(na == 0.0):
                 raise ArithmeticError(
                     "[DIVIDE_BY_ZERO] zero-norm embedding: cosine undefined"
@@ -1213,8 +1215,8 @@ def semdedup(
     # left-fold accumulation order, same shortest-decimal HALF_UP
     # rounding, same validity rules (NULL/NaN/empty vectors never drop
     # or get dropped; unequal-dim pairs scored NULL under zip_with
-    # padding are skipped; a zero-norm valid vector in a >=2-member
-    # cluster raises like ANSI division).
+    # padding are skipped; a zero-norm valid vector with a same-dim
+    # cluster mate raises like ANSI division).
     dropped = _cluster_drop_ids(
         ranked.select("cluster", "rank", "vec_id", "embedding"), tau, scale=9
     )

@@ -357,6 +357,9 @@ def test_run_extraction_job_parser_selection(spark, tmp_path):  # noqa: F811
     assert info["n_docs"] == 12
     res = SnapshotTable(tmp_path / "r").read(spark).toPandas()
     assert set(res.columns) >= {"url", "result_json", "success", "n_fields"}
+    # the compact schema has no n_bytes, so no audit row sums any bytes
+    audit = SnapshotTable(tmp_path / "a").read(spark).toPandas()
+    assert len(audit) > 0 and audit.bytes_in.isna().all()
     with pytest.raises(ValueError, match="parser must be one of"):
         run_extraction_job(spark, pages, str(tmp_path / "r2"), parser="nope")
 

@@ -119,6 +119,13 @@ def test_resume_skips_committed_urls(spark, tmp_path):
         assert len(pids) == len(set(pids))  # each partition exactly once
         assert sum(r.n_docs for r in extract_rows) == expected_docs
         assert len(write_rows) == 1 and write_rows[0].n_docs == expected_docs
+        # the write row totals the batch this run committed
+        batch = spark.read.parquet(str(tbl.path / "data" / write_rows[0].snapshot_id))
+        sums = batch.selectExpr(
+            "count(*) AS n", "sum(cast(success AS long)) AS s", "sum(n_bytes) AS b"
+        ).first()
+        assert sums.n == expected_docs
+        assert (write_rows[0].n_success, write_rows[0].bytes_in) == (sums.s, sums.b)
 
 
 def test_salted_repartition_spreads_hot_host(spark):

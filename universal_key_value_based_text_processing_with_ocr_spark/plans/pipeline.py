@@ -3,13 +3,16 @@ repartition -> fused extract stage -> snapshot commit + audit lineage.
 
 New-engine lifecycle per SURVEY.md §3: one repartition shuffle up front,
 ONE materialisation of the extract stage (streamed directly into the
-snapshot's parquet write), then count/audit/debug read the written batch
-back (cheap JVM columnar scans) — everything between is narrow and nothing
-is persisted.  The job is idempotent and resumable: on restart, urls
-already in the committed results snapshot are anti-joined away, and the
-audit table records one row per (run, stage, partition) so lineage covers
-every partition exactly once (partition_id also travels with each
-committed row as per-row lineage).
+snapshot's parquet write); the row count then comes from the commit's
+manifest, and the fingerprint, audit and debug passes scan the written
+batch files back with the schema they were written with (no inference
+job) — everything between is narrow and nothing is persisted.  The job is
+idempotent and resumable: on restart, urls already in the committed
+results snapshot are anti-joined away, and the audit table records one
+row per (run, stage, partition) so lineage covers every partition exactly
+once (partition_id also travels with each committed row as per-row
+lineage).  ``audit_frame`` builds those rows as one Spark aggregation
+that is appended directly; the streaming twin uses it too.
 """
 
 from __future__ import annotations
@@ -19,15 +22,18 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..lakehouse import SnapshotTable
 from ..operators.extract import PARSERS, extract_pages, extract_pages_debug
 
 from .partitioning import plan_partitions, salted_repartition
 
+# wall_ms is int: every audit table the batch job has written holds int,
+# and parquet schema merging refuses int next to bigint in one table.
 AUDIT_SCHEMA = (
     "run_id string, stage string, partition_id int, n_docs long, n_success long, "
-    "bytes_in long, wall_ms long, snapshot_id string"
+    "bytes_in long, wall_ms int, snapshot_id string"
 )
 
 
@@ -160,13 +166,16 @@ def run_extraction_job(
     # SINGLE materialisation: the fused extract stage streams straight into
     # the snapshot's parquet write — no .persist() (measured: the columnar
     # cache build added ~25% to the stage at local[8] and the cached copy
-    # served only two cheap aggregates).  The count, the audit lineage and
-    # the failed-url debug pass all read the just-written batch files back
-    # (JVM columnar scan, ~1s at 24k docs); partition_id is committed with
-    # the rows as per-row lineage (which partition of which run produced
-    # each document — readers that don't want it just don't select it).
+    # served only two cheap aggregates).  The fingerprint, audit and
+    # failed-url debug passes read the just-written batch files back (JVM
+    # columnar scan) with the schema the append wrote, so no schema
+    # inference job runs; partition_id is committed with the rows as
+    # per-row lineage (which partition of which run produced each
+    # document — readers that don't want it just don't select it).
     snapshot_id = results_tbl.append(results, summary={"run_id": run_id})
-    batch = spark.read.parquet(str(results_tbl.path / "data" / snapshot_id))
+    batch = spark.read.schema(results.schema).parquet(
+        str(results_tbl.path / "data" / snapshot_id)
+    )
     # Row count comes from the manifest the append just committed (parquet
     # footer totals) — a batch.count() here was a whole extra Spark job
     # spent re-deriving a number the sink already recorded.  Resolved by
@@ -197,68 +206,7 @@ def run_extraction_job(
         )
 
     if audit_tbl is not None:
-        wall_ms = int((time.time() - t0) * 1000)
-        bytes_in = (
-            F.sum("n_bytes")
-            if "n_bytes" in batch.columns
-            else F.sum(F.lit(None).cast("long"))  # compact-schema parsers
-        )
-        # ONE aggregation job over the just-written batch (columnar scan of
-        # three narrow columns), collected driver-side — the result is at
-        # most num_partitions rows, so the 'write' rollup and the audit
-        # rows are built locally and written as a local DataFrame.  The
-        # previous unionByName-of-two-aggregations shape re-ran the
-        # per-partition agg inside the audit write job (no cache), costing
-        # a second pass for a <=num_partitions-row table.
-        per_partition = (
-            batch.groupBy("partition_id")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.col("success").cast("long")).alias("n_success"),
-                bytes_in.alias("bytes_in"),
-            )
-            .collect()
-        )
-
-        def _audit_row(stage, partition_id, n_docs, n_success, b_in):
-            return (
-                run_id, stage, partition_id, n_docs, n_success, b_in,
-                wall_ms, snapshot_id,
-            )
-
-        # Lineage rows for both pipeline stages (the fused stage does
-        # html_parse+extract together; 'write' records the commit).
-        rows = [
-            _audit_row("extract", r["partition_id"], r["n_docs"], r["n_success"], r["bytes_in"])
-            for r in per_partition
-        ]
-        none_sum = lambda vals: (  # noqa: E731 — sum() turns all-NULL into 0
-            None if all(v is None for v in vals) else sum(v for v in vals if v is not None)
-        )
-        rows.append(
-            _audit_row(
-                "write",
-                -1,
-                sum(r["n_docs"] for r in per_partition),
-                none_sum([r["n_success"] for r in per_partition]),
-                none_sum([r["bytes_in"] for r in per_partition]),
-            )
-        )
-        audit = spark.createDataFrame(
-            rows,
-            schema=(
-                # exactly the schema the previous select-based path wrote
-                # (lit(int) -> IntegerType for wall_ms), so appends to
-                # pre-existing audit tables stay schema-identical
-                "run_id string, stage string, partition_id int, n_docs long, "
-                "n_success long, bytes_in long, wall_ms int, snapshot_id string"
-            ),
-        ).repartition(1)
-        # one data file for <=num_partitions+1 rows.  repartition, NOT
-        # coalesce: coalesce(1) over a Python-parallelized local relation
-        # funnels every source sub-partition through ONE serial Python
-        # deserializer task (+4s flat, measured); repartition's narrow map
-        # side stays parallel and the single reducer is trivial.
+        audit = audit_frame(batch, run_id, snapshot_id, int((time.time() - t0) * 1000))
         audit_tbl.append(audit, summary={"run_id": run_id, "stage": "extract+write"})
 
     if debug_path is not None:
@@ -282,6 +230,47 @@ def run_extraction_job(
         "resumed": False,
         "wall_ms": int((time.time() - t0) * 1000),
     }
+
+
+def audit_frame(rows: DataFrame, run_id: str, snapshot_id: str, wall_ms: int) -> DataFrame:
+    """The audit lineage of one committed batch, as ``AUDIT_SCHEMA`` rows:
+    one ``extract`` row per partition_id and one ``write`` row
+    (partition_id -1) with the batch totals.  ``bytes_in`` sums
+    ``n_bytes``; the compact-schema parsers have no such column, and
+    there it is NULL (a SUM over only NULLs is NULL).  The batch job and
+    the streaming foreachBatch both build their audit here, so the two
+    producers of one table cannot drift apart in schema or content.
+
+    The rows come from one ROLLUP over the committed rows, so they stay
+    exact when ``dedup_content`` dropped rows after extraction, and the
+    aggregation is distributed however large the batch.  The result is
+    <= partitions + 1 rows and is coalesced to one data file after the
+    aggregation.  Nothing is collected: a DataFrame re-created from
+    collected rows costs a Python task that only re-pickles those rows on
+    their way to the write."""
+    total = F.col("is_total")
+    bytes_in = F.col("n_bytes") if "n_bytes" in rows.columns else F.lit(None).cast("long")
+    return (
+        rows.rollup("partition_id")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum(F.col("success").cast("long")).alias("n_success"),
+            F.sum(bytes_in).alias("bytes_in"),
+            (F.grouping("partition_id") == 1).alias("is_total"),
+        )
+        .select(
+            F.lit(run_id).alias("run_id"),
+            F.when(total, "write").otherwise("extract").alias("stage"),
+            F.when(total, -1).otherwise(F.col("partition_id")).alias("partition_id"),
+            "n_docs",
+            "n_success",
+            "bytes_in",
+            F.lit(wall_ms).alias("wall_ms"),
+            F.lit(snapshot_id).alias("snapshot_id"),
+        )
+        .to(StructType.fromDDL(AUDIT_SCHEMA))
+        .coalesce(1)
+    )
 
 
 def ensure_committed_fps(spark, fp_tbl, committed, run_id: str):

@@ -91,6 +91,7 @@ def streamed_extraction_job(
     from ..lakehouse import SnapshotTable
     from ..operators.dedup import drop_content_duplicates, fps_of
     from ..operators.extract import extract_pages
+    from ..plans.pipeline import audit_frame, ensure_committed_fps
     from pyspark.sql import functions as F
 
     results_tbl = SnapshotTable(results_path)
@@ -108,8 +109,6 @@ def streamed_extraction_job(
             pages = pages.join(committed.select("url"), "url", "left_anti")
         results = extract_pages(pages).withColumn("partition_id", F.spark_partition_id())
         if dedup_content:
-            from ..plans.pipeline import ensure_committed_fps
-
             committed_fps = ensure_committed_fps(
                 batch_df.sparkSession, fp_tbl, committed, run_id
             )
@@ -135,24 +134,8 @@ def streamed_extraction_job(
                              "results_snapshot_id": snapshot_id},
                 )
             if audit_tbl is not None:
-                audit = (
-                    results.groupBy("partition_id")
-                    .agg(
-                        F.count("*").alias("n_docs"),
-                        F.sum(F.col("success").cast("long")).alias("n_success"),
-                        F.sum("n_bytes").alias("bytes_in"),
-                    )
-                    .select(
-                        F.lit(f"{run_id}-e{epoch_id}").alias("run_id"),
-                        F.lit("extract").alias("stage"),
-                        F.col("partition_id"),
-                        "n_docs",
-                        "n_success",
-                        "bytes_in",
-                        F.lit(0).cast("long").alias("wall_ms"),
-                        F.lit(snapshot_id).alias("snapshot_id"),
-                    )
-                )
+                # wall_ms 0: epochs record no wall time
+                audit = audit_frame(results, f"{run_id}-e{epoch_id}", snapshot_id, 0)
                 audit_tbl.append(audit, summary={"run_id": run_id, "epoch": epoch_id})
             epochs.append(epoch_id)
         finally:

@@ -13,12 +13,14 @@ from universal_key_value_based_text_processing_with_ocr_spark.streaming import (
 )
 
 
-def _write_pages_files(spark, tmp_path, ranges):  # noqa: F811
+def _write_pages_files(spark, tmp_path, ranges, extra_column=False):  # noqa: F811
     pages_dir = tmp_path / "pages"
     for i, (lo, hi) in enumerate(ranges):
         df = spark.createDataFrame(
             pd.DataFrame([gen_page_row(42, d) for d in range(lo, hi)]), schema=PAGES_SCHEMA
         )
+        if extra_column:
+            df = df.withColumn("crawl_id", df.url.substr(1, 5))
         df.coalesce(1).write.mode("append").parquet(str(pages_dir))
     return str(pages_dir)
 
@@ -56,7 +58,9 @@ def test_streamed_matches_batch_extraction(spark, tmp_path):  # noqa: F811
         extract_pages,
     )
 
-    pages_dir = _write_pages_files(spark, tmp_path, [(0, 25)])
+    # an input column outside PAGES_SCHEMA: the stream reads the batch
+    # CLI's input contract and ignores it
+    pages_dir = _write_pages_files(spark, tmp_path, [(0, 25)], extra_column=True)
     results = str(tmp_path / "results")
     streamed_extraction_job(spark, pages_dir, results)
     streamed = {

@@ -9,9 +9,16 @@ Usage (north_star: runs via spark-submit --py-files on a cluster):
         [--audit /path/to/audit_table] \\
         [--partitions N] [--run-id RUN] [--streaming]
 
-Reads the pages table (url, warc_ts, html, text, lang), runs (or RESUMES —
-committed urls are skipped automatically) the fused extraction pipeline and
-commits results + per-partition audit lineage to snapshot tables.
+Reads the pages table, runs (or RESUMES — committed urls are skipped
+automatically) the fused extraction pipeline and commits results +
+per-partition audit lineage to snapshot tables.
+
+Input contract: the pages parquet is read with ``sources.PAGES_SCHEMA``
+(``url string, warc_ts timestamp, html binary, text string, lang
+string``), not with a schema inferred from the files.  Extra columns are
+ignored, and a missing column reads as NULL, so a text-only table (no
+``html``) extracts from ``text``.  A tz-naive ``warc_ts`` reads as
+that wall-clock time in UTC.
 """
 
 from __future__ import annotations
@@ -101,8 +108,9 @@ def main(argv: list[str] | None = None) -> int:
         )
     else:
         from .plans import run_extraction_job
+        from .sources import PAGES_SCHEMA
 
-        pages = spark.read.parquet(args.input)
+        pages = spark.read.schema(PAGES_SCHEMA).parquet(args.input)
         info = run_extraction_job(
             spark,
             pages,

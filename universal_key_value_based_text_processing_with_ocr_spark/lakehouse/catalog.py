@@ -26,6 +26,11 @@ Layout:
     <table>/_snapshots/chunk-<id>.json           (manifest chunk)
     <table>/_snapshots/v<seq>.json               (snapshot manifest list)
 
+Every manifest also records the TABLE schema (``table_schema``): the
+union-by-name of its parent's table schema and the schema this commit
+wrote, integer/float columns widened (Iceberg's current schema).  Reads
+scan every file with it, so no Spark job merges footers at read time.
+
 A pruned read (``between=(lo,hi)``) first prunes CHUNKS by their aggregate
 min/max in the manifest list, then opens only the surviving chunk files
 and prunes per-file — the Iceberg partition-summary -> manifest-entry
@@ -57,6 +62,68 @@ class ConflictError(RuntimeError):
 #: legitimate expected parent (committing onto an empty table), so the
 #: disabled state needs its own object
 _UNSET = object()
+
+
+#: footer key-value entry under which Spark's parquet writer stores the
+#: Spark schema of the file
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+#: integral and floating types in widening order: a union of two of one
+#: family keeps the wider (the parquet reader widens int32 to bigint and
+#: float to double on read)
+_WIDENING = (("byte", "short", "integer", "long"), ("float", "double"))
+
+
+def _struct(schema_json: str):
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(schema_json))
+
+
+def union_schemas(base, added):
+    """Union by name of two StructTypes: ``base``'s fields in order, then
+    the fields only ``added`` has.  A field in both keeps one type: equal
+    types as is, nested structs/arrays/maps merged field by field, and
+    integral or floating types widened to the wider one; any other pair
+    raises ValueError.  A field is nullable if either side's is."""
+    from pyspark.sql.types import StructField, StructType
+
+    other = {f.name: f for f in added.fields}
+    fields = []
+    for f in base.fields:
+        g = other.pop(f.name, None)
+        if g is None:
+            fields.append(f)
+            continue
+        dtype = _union_types(f.dataType, g.dataType, f.name)
+        fields.append(StructField(f.name, dtype, f.nullable or g.nullable, f.metadata))
+    fields += [g for g in added.fields if g.name in other]
+    return StructType(fields)
+
+
+def _union_types(a, b, name: str):
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    if a == b:
+        return a
+    if isinstance(a, StructType) and isinstance(b, StructType):
+        return union_schemas(a, b)
+    if isinstance(a, ArrayType) and isinstance(b, ArrayType):
+        return ArrayType(
+            _union_types(a.elementType, b.elementType, name), a.containsNull or b.containsNull
+        )
+    if isinstance(a, MapType) and isinstance(b, MapType):
+        return MapType(
+            _union_types(a.keyType, b.keyType, name),
+            _union_types(a.valueType, b.valueType, name),
+            a.valueContainsNull or b.valueContainsNull,
+        )
+    for family in _WIDENING:
+        if a.typeName() in family and b.typeName() in family:
+            return max(a, b, key=lambda t: family.index(t.typeName()))
+    raise ValueError(
+        f"column {name!r}: cannot union {a.simpleString()} with {b.simpleString()}"
+    )
 
 
 class SnapshotTable:
@@ -198,8 +265,9 @@ class SnapshotTable:
 
     def _plan_files(
         self, manifest: dict, between: tuple | None, column: str | None = None
-    ) -> tuple[list[str], int, int]:
-        """(file list, chunks opened, total chunks) for a scan.
+    ) -> tuple[list[str], int, int, dict]:
+        """(file list, chunks opened, total chunks, file -> the commit
+        sequence that added it) for a scan.
 
         Chunk-level prune first (manifest-list min/max, no I/O), then
         per-file prune inside only the surviving chunks — planning cost is
@@ -350,6 +418,7 @@ class SnapshotTable:
                 _expected_parent if (_replace and _expected_parent is not None) else _UNSET
             ),
             max_retries=max_retries,
+            replace=_replace,
         )
 
     def _commit(
@@ -361,6 +430,7 @@ class SnapshotTable:
         build_deletes=None,
         expected_parent=_UNSET,
         max_retries: int = 20,
+        replace: bool = False,
     ) -> str:
         """The optimistic-concurrency commit loop shared by append,
         merge_upsert and delete_where (see append's docstring for the CAS
@@ -370,7 +440,9 @@ class SnapshotTable:
         ``build_deletes`` likewise supplies the equality-delete file list
         (None = carry the parent's).  ``expected_parent`` (pass ``_UNSET``
         to disable the check) turns the commit into a validating replace:
-        any concurrent commit raises ConflictError."""
+        any concurrent commit raises ConflictError.  ``replace`` says the
+        new chunks are the whole table, so its table schema is the written
+        schema alone rather than a union with the parent's."""
         if build_deletes is None:
             def build_deletes(parent, seq):
                 return list(parent.get("delete_files", [])) if parent else []
@@ -394,6 +466,12 @@ class SnapshotTable:
                 if parent is None:
                     raise FileNotFoundError(f"no committed snapshot in {self.path}")
                 schema = parent["schema"]
+            # the table schema, like the written schema, is resolved
+            # against THIS attempt's parent: a concurrent append that added
+            # a column must not lose it when this commit rebases
+            table_schema = _struct(schema)
+            if parent is not None and not replace:
+                table_schema = union_schemas(self._table_schema(parent), table_schema)
             seq = (parent["sequence"] + 1) if parent else 1
             manifest = {
                 "snapshot_id": snapshot_id,
@@ -401,6 +479,7 @@ class SnapshotTable:
                 "sequence": seq,
                 "committed_at_ms": int(time.time() * 1000),
                 "schema": schema,
+                "table_schema": table_schema.json(),
                 "chunks": build_chunks(parent, seq),
                 "delete_files": build_deletes(parent, seq),
                 "summary": summary,
@@ -473,6 +552,29 @@ class SnapshotTable:
         return stats
 
     # -- read path ------------------------------------------------------------
+    def _table_schema(self, manifest: dict):
+        """The table schema of ``manifest``, which the next commit unions
+        with what it writes.  A manifest written before ``table_schema``
+        was recorded gets the union of its live files' own schemas, read
+        from the parquet footers on the driver (Spark stores its schema
+        there) — not from the ``v*.json`` chain, whose expired links may
+        be gone while their files are still live."""
+        if "table_schema" in manifest:
+            return _struct(manifest["table_schema"])
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        schema = _struct(manifest["schema"])
+        for rel in self._plan_files(manifest, None)[0]:
+            footer = pq.ParquetFile(str(self.path / rel))
+            spark_json = (footer.metadata.metadata or {}).get(_SPARK_SCHEMA_KEY)
+            file_schema = (
+                _struct(spark_json.decode()) if spark_json
+                else from_arrow_schema(footer.schema_arrow)
+            )
+            schema = union_schemas(schema, file_schema)
+        return schema
+
     def _resolve_manifest(self, snapshot_id: str | None) -> dict:
         manifest = self.latest_manifest()
         if snapshot_id is not None:
@@ -508,17 +610,21 @@ class SnapshotTable:
         contain out-of-range rows; callers filter."""
         manifest = self._resolve_manifest(snapshot_id)
         files, _opened, _total, file_seq = self._plan_files(manifest, between, column)
+        schema = _struct(manifest.get("table_schema", manifest["schema"]))
         if not files:
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame([], StructType.fromJson(json.loads(manifest["schema"])))
+            return spark.createDataFrame([], schema)
 
         def scan(rels):
-            # mergeSchema: snapshots may carry evolved (widened) schemas;
-            # union-by-name semantics match Iceberg's add-column evolution.
-            return spark.read.option("mergeSchema", "true").parquet(
-                *(str(self.path / f) for f in rels)
+            # The recorded table schema covers every snapshot's columns
+            # (union by name, Iceberg's add-column evolution); a file
+            # without a column reads it as NULL, and no Spark job merges
+            # footers.  A manifest from before the table schema was
+            # recorded keeps the mergeSchema scan.
+            reader = (
+                spark.read.schema(schema) if "table_schema" in manifest
+                else spark.read.option("mergeSchema", "true")
             )
+            return reader.parquet(*(str(self.path / f) for f in rels))
 
         deletes = manifest.get("delete_files", [])
         if not deletes:

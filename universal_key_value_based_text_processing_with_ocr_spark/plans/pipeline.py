@@ -17,6 +17,7 @@ that is appended directly; the streaming twin uses it too.
 
 from __future__ import annotations
 
+import functools
 import time
 import uuid
 
@@ -37,6 +38,22 @@ AUDIT_SCHEMA = (
 )
 
 
+def _restores_job_description(job):
+    """Run ``job(spark, ...)`` and then put back the job description the
+    caller had set (or none): the job names its own Spark jobs."""
+
+    @functools.wraps(job)
+    def run(spark: SparkSession, *args, **kwargs):
+        caller = spark.sparkContext.getLocalProperty("spark.job.description")
+        try:
+            return job(spark, *args, **kwargs)
+        finally:
+            spark.sparkContext.setLocalProperty("spark.job.description", caller)
+
+    return run
+
+
+@_restores_job_description
 def run_extraction_job(
     spark: SparkSession,
     pages_df: DataFrame,
@@ -95,8 +112,14 @@ def run_extraction_job(
     results_tbl = SnapshotTable(results_path)
     audit_tbl = SnapshotTable(audit_path) if audit_path else None
 
+    # Each phase names its Spark jobs (Spark UI, event log, status
+    # tracker); the decorator restores the caller's job description.
+    def phase(name: str) -> None:
+        spark.sparkContext.setJobDescription(f"extract {run_id}: {name}")
+
     # Resume: drop urls already committed (left anti join; broadcast if the
     # committed side is small, AQE decides otherwise).
+    phase("resume")
     committed = None
     if results_tbl.exists():
         committed = results_tbl.read(spark)
@@ -106,21 +129,24 @@ def run_extraction_job(
         return {"run_id": run_id, "n_docs": 0, "snapshot_id": results_tbl.snapshot_id(),
                 "resumed": True, "wall_ms": int((time.time() - t0) * 1000)}
 
-    # Size-aware partitioning + early resume exit.  The count is a JVM-only
-    # action (url column at most — payload columns pruned), negligible next
-    # to the Python extract stage — but a caller that pre-planned
+    # Size-aware partitioning + early resume exit.  Into a fresh table the
+    # input row count is the total of its parquet footers, read on the
+    # driver (no Spark job), whenever the input is a bare parquet scan.
+    # After the resume anti-join no metadata says how many rows survive,
+    # so that path counts: a JVM-only action over the url column, small
+    # next to the Python extract stage.  A caller that pre-planned
     # num_partitions (a 100 TB job sizing partitions from table metadata)
-    # must not pay a second source scan, so they get a limit-1 existence
-    # probe instead.
-    if num_partitions is None:
+    # gets a limit-1 existence probe instead of that count.
+    phase("plan")
+    n_input = parquet_footer_rows(pages_df) if committed is None else None
+    if n_input is None and num_partitions is None:
         n_input = pages_df.count()
-        if n_input == 0:
-            return _resumed_summary()
+    if n_input == 0 or (n_input is None and pages_df.select("url").isEmpty()):
+        return _resumed_summary()
+    if num_partitions is None:
         num_partitions = plan_partitions(
             n_input, min_parallelism=spark.sparkContext.defaultParallelism
         )
-    elif pages_df.select("url").isEmpty():
-        return _resumed_summary()
     pages_df = salted_repartition(pages_df, num_partitions)
 
     if spans_path is not None:
@@ -136,6 +162,7 @@ def run_extraction_job(
         # on the healing rerun — bounded by the crash, never steady-state.
         from ..operators.fieldspans import extract_page_field_spans
 
+        phase("spans")
         spans_tbl = SnapshotTable(spans_path)
         span_rows = extract_page_field_spans(pages_df, configs=configs)
         if spans_tbl.exists():
@@ -160,6 +187,7 @@ def run_extraction_job(
     if dedup_content:
         from ..operators.dedup import drop_content_duplicates
 
+        phase("fps")
         committed_fps = ensure_committed_fps(spark, fp_tbl, committed, run_id)
         results = drop_content_duplicates(results, committed_fps=committed_fps)
 
@@ -172,6 +200,7 @@ def run_extraction_job(
     # inference job runs; partition_id is committed with the rows as
     # per-row lineage (which partition of which run produced each
     # document — readers that don't want it just don't select it).
+    phase("extract+commit")
     snapshot_id = results_tbl.append(results, summary={"run_id": run_id})
     batch = spark.read.schema(results.schema).parquet(
         str(results_tbl.path / "data" / snapshot_id)
@@ -200,12 +229,14 @@ def run_extraction_job(
         # Python stage
         from ..operators.dedup import fps_of
 
+        phase("fps")
         fp_tbl.append(
             fps_of(batch, "extracted_text"),
             summary={"run_id": run_id, "results_snapshot_id": snapshot_id},
         )
 
     if audit_tbl is not None:
+        phase("audit")
         audit = audit_frame(batch, run_id, snapshot_id, int((time.time() - t0) * 1000))
         audit_tbl.append(audit, summary={"run_id": run_id, "stage": "extract+write"})
 
@@ -213,6 +244,7 @@ def run_extraction_job(
         # Per-doc debug artifacts for FAILED urls only (reference
         # generate_report analog): a second narrow pass over just the
         # failed subset — opt-in, so the happy path pays nothing.
+        phase("debug")
         failed_urls = batch.filter(~F.col("success")).select("url")
         debug_rows = extract_pages_debug(
             pages_df.join(failed_urls, "url", "left_semi"),
@@ -230,6 +262,41 @@ def run_extraction_job(
         "resumed": False,
         "wall_ms": int((time.time() - t0) * 1000),
     }
+
+
+def parquet_footer_rows(df: DataFrame) -> int | None:
+    """Row count of ``df`` from its parquet footers, read on the driver, or
+    None when the footers cannot give it: ``df`` is not a bare scan of
+    parquet files (a filter, join, limit or dedup changes the count;
+    column projections do not), is not a classic JVM-backed DataFrame, or
+    reads files outside the local file system."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        while plan.getClass().getSimpleName() == "Project":
+            plan = plan.child()
+        if plan.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        relation = plan.relation()
+        if relation.getClass().getSimpleName() != "HadoopFsRelation" or (
+            relation.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        ):
+            return None
+    except AttributeError:  # no _jdf: not a classic DataFrame
+        return None
+    n = 0
+    for uri in df.inputFiles():
+        parsed = urlparse(uri)
+        if parsed.scheme not in ("", "file"):
+            return None
+        try:
+            n += pq.ParquetFile(unquote(parsed.path)).metadata.num_rows
+        except (OSError, ValueError):  # unreadable footer: let Spark count
+            return None
+    return n
 
 
 def audit_frame(rows: DataFrame, run_id: str, snapshot_id: str, wall_ms: int) -> DataFrame:

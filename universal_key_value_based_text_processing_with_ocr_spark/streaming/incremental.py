@@ -92,13 +92,16 @@ def streamed_extraction_job(
     from ..operators.dedup import drop_content_duplicates, fps_of
     from ..operators.extract import extract_pages
     from ..plans.pipeline import audit_frame, ensure_committed_fps
+    from ..sources import PAGES_SCHEMA
     from pyspark.sql import functions as F
 
     results_tbl = SnapshotTable(results_path)
     audit_tbl = SnapshotTable(audit_path) if audit_path else None
     fp_tbl = SnapshotTable(fp_path or f"{results_path}_fps") if dedup_content else None
-    schema = spark.read.parquet(pages_dir).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "4").parquet(pages_dir)
+    # the batch CLI's input contract: PAGES_SCHEMA, extra columns ignored
+    stream = (
+        spark.readStream.schema(PAGES_SCHEMA).option("maxFilesPerTrigger", "4").parquet(pages_dir)
+    )
     epochs: list[int] = []
 
     def commit_batch(batch_df, epoch_id: int) -> None:

@@ -1,7 +1,12 @@
-"""The job's audit lineage: ``plans.pipeline.audit_frame`` (one Spark plan)
-against the frozen collect-based copy it replaced (``tests/frozen_audit``)
-on the same committed batches, and one audit table shared by the batch and
-the streaming job."""
+"""The job's audit lineage: ``plans.pipeline.append_audit`` (a Spark rollup,
+collected and committed as one driver-written file) against the frozen
+collect-based copy (``tests/frozen_audit``) on the same committed batches,
+one audit table shared by the batch and the streaming job, and a table
+mixing Spark-written and driver-written snapshots through the lakehouse's
+maintenance."""
+
+import os
+import time
 
 from collections import Counter
 from pathlib import Path
@@ -15,7 +20,7 @@ from tests.test_spark_pipeline import spark  # session fixture  # noqa: F401
 from universal_key_value_based_text_processing_with_ocr_spark.lakehouse import SnapshotTable
 from universal_key_value_based_text_processing_with_ocr_spark.plans.pipeline import (
     AUDIT_SCHEMA,
-    audit_frame,
+    append_audit,
     run_extraction_job,
 )
 from universal_key_value_based_text_processing_with_ocr_spark.sources import PAGES_SCHEMA
@@ -123,7 +128,7 @@ def test_audit_frame_matches_frozen_audit(spark, tmp_path, case):  # noqa: F811
     # one table holding a snapshot from each version reads as their union
     mixed_tbl = SnapshotTable(mixed)
     frozen_audit_append(spark, batch, mixed_tbl, "r", sid, wall_ms)
-    mixed_tbl.append(audit_frame(batch, "r", sid, wall_ms))
+    append_audit(mixed_tbl, batch, "r", sid, wall_ms)
     both = mixed_tbl.read(spark)
     assert _types(both.schema) == _audit_types()
     assert _rows(both) == _rows(new) + _rows(old)
@@ -151,3 +156,45 @@ def test_batch_and_streaming_audit_share_one_table(spark, tmp_path):  # noqa: F8
         assert sum(r.n_docs for r in mine if r.stage == "extract") == n_docs
         (write,) = [r for r in mine if r.stage == "write"]
         assert (write.partition_id, write.n_docs) == (-1, n_docs)
+
+
+def test_spark_and_driver_appends_share_one_table(spark, tmp_path):  # noqa: F811
+    """``append`` (Spark writes the file) and ``append_rows`` (the driver
+    writes it) commit to one table: it reads with ``AUDIT_SCHEMA``'s names
+    and types, each manifest counts the rows written, and the rows survive
+    ``compact``, ``expire_snapshots`` and the orphan sweep."""
+    schema = StructType.fromDDL(AUDIT_SCHEMA)
+    by_spark = [("s", "extract", 0, 3, 1, 30, 7, "a"), ("s", "write", -1, 3, 1, 30, 7, "a")]
+    by_driver = [
+        ("d", "extract", 0, 2, 0, None, 0, "b"),
+        ("d", "extract", 1, 1, None, None, 0, "b"),
+        ("d", "write", -1, 3, 0, None, 0, "b"),
+    ]
+    tbl = SnapshotTable(tmp_path / "aud")
+    sids = [tbl.append(spark.createDataFrame(by_spark, schema)),
+            tbl.append_rows(by_driver, schema),
+            tbl.append(spark.createDataFrame(by_spark[:1], schema))]
+    for sid, written in zip(sids, (by_spark, by_driver, by_spark[:1])):
+        assert tbl._resolve_manifest(sid)["summary"]["n_rows"] == len(written)
+    assert len(_data_files(tbl.path, sids[1])) == 1
+    expected = Counter(by_spark + by_driver + by_spark[:1])
+
+    def check():
+        table = tbl.read(spark)
+        assert _types(table.schema) == _audit_types()
+        assert _rows(table) == expected
+
+    check()
+    # a withdrawn driver append leaves an orphan data dir for the sweep
+    orphan = tbl.append_rows(by_driver[:1], schema)
+    assert tbl.rollback_latest(orphan)
+    check()
+    tbl.compact(spark)
+    check()
+    old = time.time() - 2 * tbl.ORPHAN_AGE_S
+    for p in (tbl.path / "data").rglob("*"):
+        os.utime(p, (old, old))
+    assert tbl.expire_snapshots(keep_last=1)["expired"] == 3
+    assert not (tbl.path / "data" / orphan).exists()
+    assert not any(_data_files(tbl.path, sid) for sid in sids)
+    check()

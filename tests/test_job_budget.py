@@ -71,7 +71,7 @@ def test_fresh_and_resume_noop_job_budget(spark, monkeypatch, tmp_path):  # noqa
     assert info["n_docs"] == 24
     assert before_write == []  # no schema inference, no count before the extract
     # salted-repartition shuffle map + extract write; audit rollup shuffle
-    # map + its one-file write
+    # map + its collect (the driver writes the audit file)
     assert len(fresh) == 4, fresh
     # the call names its jobs per phase and hands the caller's description back
     assert phases == ["resume", "plan", "extract+commit", "audit"]

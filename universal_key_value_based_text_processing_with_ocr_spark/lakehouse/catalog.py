@@ -368,8 +368,57 @@ class SnapshotTable:
         ConflictError instead and the caller recomputes (exactly Iceberg's
         rewrite_data_files validation failure)."""
         snapshot_id = uuid.uuid4().hex[:16]
+        df.write.mode("overwrite").parquet(str(self.path / "data" / snapshot_id))
+        return self._commit_data_dir(
+            snapshot_id, df.schema.json(), summary, max_retries, _replace, _expected_parent
+        )
+
+    def append_rows(self, rows: list[tuple], schema, summary: dict | None = None) -> str:
+        """Append a few driver-side ``rows`` (tuples in ``schema``'s field
+        order, a Spark ``StructType``) as a new snapshot of one parquet file
+        written on the driver; returns the snapshot id.
+
+        The commit is ``append``'s, and the file reads back as Spark's
+        would: the column types come from ``schema`` and its footer carries
+        Spark's schema.  For a handful of rows this skips the Spark write
+        job, whose tasks cost more to launch than the rows cost to write."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        snapshot_id = uuid.uuid4().hex[:16]
         data_dir = self.path / "data" / snapshot_id
-        df.write.mode("overwrite").parquet(str(data_dir))
+        data_dir.mkdir(parents=True)
+        arrow_schema = to_arrow_schema(schema).with_metadata(
+            {_SPARK_SCHEMA_KEY: schema.json().encode()}
+        )
+        table = pa.Table.from_pylist(
+            [dict(zip(arrow_schema.names, r)) for r in rows], schema=arrow_schema
+        )
+        name = f"part-00000-{uuid.uuid4()}.parquet"
+        # written under a name no commit lists, made durable, then renamed
+        tmp = data_dir / f".{name}.tmp"
+        with open(tmp, "wb") as f:
+            pq.write_table(table, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, data_dir / name)
+        return self._commit_data_dir(snapshot_id, schema.json(), summary)
+
+    def _commit_data_dir(
+        self,
+        snapshot_id: str,
+        schema_json: str,
+        summary: dict | None,
+        max_retries: int = 20,
+        _replace: bool = False,
+        _expected_parent: str | None = None,
+    ) -> str:
+        """Commit the parquet files under ``data/<snapshot_id>`` as that
+        snapshot: their footer stats go into new manifest chunks, and the
+        manifest list goes through ``_commit``.  The tail of ``append``
+        and ``append_rows``, which differ only in who writes the files."""
+        data_dir = self.path / "data" / snapshot_id
         new_files = sorted(
             str(p.relative_to(self.path))
             for p in data_dir.rglob("*.parquet")
@@ -410,7 +459,7 @@ class SnapshotTable:
 
         return self._commit(
             snapshot_id,
-            df.schema.json(),
+            schema_json,
             {**auto_summary, **(summary or {})},
             build_chunks,
             build_deletes=build_deletes,

@@ -42,6 +42,7 @@ from ..htmlcore import extract_main_lines, page_quality_warnings
 from ..kvcore import config as kvconfig
 from ..kvcore import ktpspec
 from ..kvcore.evaluate import nik_doc_budget
+from ..ship import keep_zip_directories
 
 RESULT_SCHEMA = (
     "url string, lang string, extracted_text string, result_json string, "
@@ -159,6 +160,8 @@ def _map_rows(pages_df, row_fn, schema: str):
     # 8.43 s — within host noise, so the simpler form stays.  The stage
     # cost is the per-document semantic core, not the frame assembly.
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # a reused worker then skips the per-task zip directory re-reads
+        keep_zip_directories()
         for pdf in batches:
             rows = [row_fn(r.url, r.html, r.text, r.lang) for r in pdf.itertuples(index=False)]
             yield pd.DataFrame(rows, columns=columns)

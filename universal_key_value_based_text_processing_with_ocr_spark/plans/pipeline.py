@@ -11,8 +11,10 @@ idempotent and resumable: on restart, urls already in the committed
 results snapshot are anti-joined away, and the audit table records one
 row per (run, stage, partition) so lineage covers every partition exactly
 once (partition_id also travels with each committed row as per-row
-lineage).  ``audit_frame`` builds those rows as one Spark aggregation
-that is appended directly; the streaming twin uses it too.
+lineage).  ``append_audit`` writes those rows: a Spark rollup over the
+committed batch, whose <= partitions + 1 rows are collected, labelled on
+the driver and committed as one driver-written parquet file; the
+streaming twin commits its audit the same way.
 """
 
 from __future__ import annotations
@@ -237,8 +239,10 @@ def run_extraction_job(
 
     if audit_tbl is not None:
         phase("audit")
-        audit = audit_frame(batch, run_id, snapshot_id, int((time.time() - t0) * 1000))
-        audit_tbl.append(audit, summary={"run_id": run_id, "stage": "extract+write"})
+        append_audit(
+            audit_tbl, batch, run_id, snapshot_id, int((time.time() - t0) * 1000),
+            summary={"run_id": run_id, "stage": "extract+write"},
+        )
 
     if debug_path is not None:
         # Per-doc debug artifacts for FAILED urls only (reference
@@ -299,45 +303,44 @@ def parquet_footer_rows(df: DataFrame) -> int | None:
     return n
 
 
-def audit_frame(rows: DataFrame, run_id: str, snapshot_id: str, wall_ms: int) -> DataFrame:
-    """The audit lineage of one committed batch, as ``AUDIT_SCHEMA`` rows:
-    one ``extract`` row per partition_id and one ``write`` row
-    (partition_id -1) with the batch totals.  ``bytes_in`` sums
-    ``n_bytes``; the compact-schema parsers have no such column, and
-    there it is NULL (a SUM over only NULLs is NULL).  The batch job and
-    the streaming foreachBatch both build their audit here, so the two
-    producers of one table cannot drift apart in schema or content.
+def append_audit(
+    audit_tbl: SnapshotTable,
+    rows: DataFrame,
+    run_id: str,
+    snapshot_id: str,
+    wall_ms: int,
+    summary: dict | None = None,
+) -> str:
+    """Commit the audit lineage of one committed batch to ``audit_tbl`` as
+    ``AUDIT_SCHEMA`` rows: one ``extract`` row per partition_id and one
+    ``write`` row (partition_id -1) with the batch totals.  Returns the
+    audit snapshot id.  ``bytes_in`` sums ``n_bytes``; the compact-schema
+    parsers have no such column, and there it is NULL (a SUM over only
+    NULLs is NULL).  The batch job and the streaming foreachBatch both
+    commit their audit here, so the two producers of one table cannot
+    drift apart in schema or content.
 
-    The rows come from one ROLLUP over the committed rows, so they stay
+    The counts come from one ROLLUP over the committed rows, so they stay
     exact when ``dedup_content`` dropped rows after extraction, and the
-    aggregation is distributed however large the batch.  The result is
-    <= partitions + 1 rows and is coalesced to one data file after the
-    aggregation.  Nothing is collected: a DataFrame re-created from
-    collected rows costs a Python task that only re-pickles those rows on
-    their way to the write."""
-    total = F.col("is_total")
+    aggregation is distributed however large the batch.  Its plan holds no
+    per-call value: a literal run id, wall time or snapshot id would make
+    Spark compile new code for every call.  The <= partitions + 1 result
+    rows are collected, labelled here, and committed by
+    ``SnapshotTable.append_rows`` as one driver-written file: for so few
+    rows a Spark write job costs more than the aggregation."""
     bytes_in = F.col("n_bytes") if "n_bytes" in rows.columns else F.lit(None).cast("long")
-    return (
-        rows.rollup("partition_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.col("success").cast("long")).alias("n_success"),
-            F.sum(bytes_in).alias("bytes_in"),
-            (F.grouping("partition_id") == 1).alias("is_total"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.when(total, "write").otherwise("extract").alias("stage"),
-            F.when(total, -1).otherwise(F.col("partition_id")).alias("partition_id"),
-            "n_docs",
-            "n_success",
-            "bytes_in",
-            F.lit(wall_ms).alias("wall_ms"),
-            F.lit(snapshot_id).alias("snapshot_id"),
-        )
-        .to(StructType.fromDDL(AUDIT_SCHEMA))
-        .coalesce(1)
+    counts = rows.rollup("partition_id").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.col("success").cast("long")).alias("n_success"),
+        F.sum(bytes_in).alias("bytes_in"),
+        (F.grouping("partition_id") == 1).alias("is_total"),
     )
+    audit = []
+    for r in sorted(counts.collect(), key=lambda r: (r.is_total, r.partition_id)):
+        stage, partition_id = ("write", -1) if r.is_total else ("extract", r.partition_id)
+        audit.append((run_id, stage, partition_id, r.n_docs, r.n_success, r.bytes_in,
+                      wall_ms, snapshot_id))
+    return audit_tbl.append_rows(audit, StructType.fromDDL(AUDIT_SCHEMA), summary)
 
 
 def ensure_committed_fps(spark, fp_tbl, committed, run_id: str):

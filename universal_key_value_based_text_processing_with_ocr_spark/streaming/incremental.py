@@ -91,7 +91,7 @@ def streamed_extraction_job(
     from ..lakehouse import SnapshotTable
     from ..operators.dedup import drop_content_duplicates, fps_of
     from ..operators.extract import extract_pages
-    from ..plans.pipeline import audit_frame, ensure_committed_fps
+    from ..plans.pipeline import append_audit, ensure_committed_fps
     from ..sources import PAGES_SCHEMA
     from pyspark.sql import functions as F
 
@@ -138,8 +138,10 @@ def streamed_extraction_job(
                 )
             if audit_tbl is not None:
                 # wall_ms 0: epochs record no wall time
-                audit = audit_frame(results, f"{run_id}-e{epoch_id}", snapshot_id, 0)
-                audit_tbl.append(audit, summary={"run_id": run_id, "epoch": epoch_id})
+                append_audit(
+                    audit_tbl, results, f"{run_id}-e{epoch_id}", snapshot_id, 0,
+                    summary={"run_id": run_id, "epoch": epoch_id},
+                )
             epochs.append(epoch_id)
         finally:
             results.unpersist()

@@ -466,11 +466,12 @@ them sequentially, minutes apart, and host drift manufactured a spurious
 0.44 ratio at 32 workers; tightly-interleaved re-measurement
 (scripts/spark_vs_kernel.py: alternating runs seconds apart) shows the
 fused Spark stage at parity-or-better with the plain-multiprocessing
-kernel at every level — the stage decomposition
-(scripts/profile_fused.py: scan 0.2 s, +shuffle 0.6 s, +Arrow round-trip
-2.9 s, full extract ~6.4 s at 24k docs/local[32]) bounds all framework
-overhead at ~25% of stage time, the rest being the per-document Python
-kernel both sides run identically.
+kernel at every level — a round-2 stage decomposition by subtracting
+variant runs (scan 0.2 s, +shuffle 0.6 s, +Arrow round-trip 2.9 s, full
+extract ~6.4 s at 24k docs/local[32]; that script is retired, and
+`python3 jobbench/run.py --trace 1` now measures the split from Spark's
+own stage metrics) bounds all framework overhead at ~25% of stage time,
+the rest being the per-document Python kernel both sides run identically.
 
 Notes
 - Single-thread semantic-core throughput: ~200 docs/s (profiled; was 9

@@ -47,7 +47,7 @@ def _ref_specs():
 
 
 def _engine_specs():
-    return ktpspec.build_ktp_specs(ktpspec.DEFAULT_FIELD_CONFIG)
+    return ktpspec.ktp_plans().blended.fresh()  # the reference's to_extracts order
 
 
 def _norm(x):

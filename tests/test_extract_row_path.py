@@ -188,30 +188,92 @@ def test_guard_contains_a_raising_decode(monkeypatch, parser):
     assert row["error_messages"] == ["engine exception: ValueError: bad markup"]
 
 
+# A config of each parser that compiles, but with a threshold the matcher
+# rejects: every parse of a non-blank line raises in the workers.
+RAISING_CONFIG = {
+    "config": {"fields": [{"name": "F", "keys": [["Key"]], "max_distances": [["x"]],
+                           "min_accuracies": [0.5]}]},
+    **{p: {**ktpspec.DEFAULT_FIELD_CONFIG,
+           "provinsi": {**ktpspec.DEFAULT_FIELD_CONFIG["provinsi"], "max_distances": [["x"]]}}
+       for p in ("sweep", "blended", "boxorder")},
+}
+RAISED = (
+    "engine exception: ValueError: max_distances should be 2 dimensional list "
+    "containing float/int, found: (<class 'str'>) x"
+)
+
+
 @pytest.mark.parametrize("parser", PARSERS)
 def test_guard_keeps_the_stage_alive(spark, parser):  # noqa: F811
     """In the Spark workers each kernel entry raises on a poisoned config:
-    every page still yields exactly one {}/False row, and the sweep and
-    debug stages name the exception."""
-    poisoned = {"fields": [{"name": "F"}]} if parser == "config" else {}
+    every page still yields exactly one row, the per-row oracle's; a page
+    with a payload yields a {}/False row, and the sweep and debug stages
+    name the exception."""
+    poisoned = RAISING_CONFIG[parser]
     pages = _pages(spark, _guard_pages())
     rows = extract.extract_pages(pages, configs=poisoned, parser=parser).collect()
     assert sorted(r.url for r in rows) == sorted(p["url"] for p in _guard_pages())
-    for r in rows:
-        if parser == "sweep" and r.url == "u-none":
-            assert r.error_messages == ["no payload"]
-            continue
+    for r, page in zip(sorted(rows), sorted(_guard_pages(), key=lambda p: p["url"])):
+        want = extract._page_row(
+            page["url"], page["html"], page["text"], page["lang"], poisoned, parser
+        )
+        assert r.asDict() == {k: want[k] for k in r.asDict()}
+        if r.url == "u-none":
+            continue  # no line to parse: the parser's own no-payload row
         assert (r.result_json, r.success, r.n_fields) == ("{}", False, 0)
         if parser == "sweep":
-            assert r.error_messages == ["engine exception: KeyError: 'provinsi'"]
+            assert r.error_messages == [RAISED]
     debug = extract.extract_pages_debug(pages, configs=poisoned, parser=parser).collect()
-    want = "engine exception: KeyError: 'keys'" if parser == "config" else (
-        "engine exception: KeyError: 'provinsi'"
-    )
     assert len(debug) == len(rows)
     for r in debug:
-        if not (parser == "sweep" and r.url == "u-none"):
-            assert r.error_messages == [want]
+        if r.url != "u-none":
+            assert r.error_messages == [RAISED]
+
+
+_CONFIG_FIELD = {"name": "F", "keys": [["Key"]], "max_distances": [[1]], "min_accuracies": [0.5]}
+MALFORMED = [
+    ("config", {"fields": [{**_CONFIG_FIELD, "evaluators": ["leters"]}]}),
+    ("config", {"fields": [{**_CONFIG_FIELD, "extractor": "regex"}]}),
+    ("config", {"fields": [{**_CONFIG_FIELD, "preprocess": "title"}]}),
+    ("config", {"fields": [_CONFIG_FIELD], "final_evaluator": "kpt"}),
+    ("config", {"fields": [{"name": "F"}]}),
+    ("config", None),
+    ("sweep", {}),
+    ("blended", {k: v for k, v in ktpspec.DEFAULT_FIELD_CONFIG.items() if k != "nama"}),
+    ("boxorder", {**ktpspec.DEFAULT_FIELD_CONFIG, "nik": {"max_distances": [[1]]}}),
+]
+
+
+@pytest.mark.parametrize("parser,cfg", MALFORMED)
+def test_malformed_config_raises_before_any_spark_job(spark, tmp_path, parser, cfg):  # noqa: F811
+    """A misspelt evaluator, an unknown extractor / preprocess / final
+    evaluator or a missing key fails on the driver, as an unknown parser
+    does, instead of committing one exception-guard row per page."""
+    from universal_key_value_based_text_processing_with_ocr_spark.operators.fieldspans import (
+        extract_page_field_spans,
+    )
+    from universal_key_value_based_text_processing_with_ocr_spark.plans import (
+        run_extraction_job,
+    )
+
+    pages = _pages(spark, _guard_pages())
+    with pytest.raises(ValueError):
+        extract.extract_pages(pages, configs=cfg, parser=parser)
+    with pytest.raises(ValueError):
+        extract.extract_pages_debug(pages, configs=cfg, parser=parser)
+    if parser != "config":
+        with pytest.raises(ValueError):
+            extract_page_field_spans(pages, configs=cfg)
+    sc = spark.sparkContext
+    group = f"malformed-{tmp_path.name}"
+    sc.setJobGroup(group, "malformed config")
+    try:
+        with pytest.raises(ValueError):
+            run_extraction_job(spark, pages, str(tmp_path / "r"), configs=cfg, parser=parser)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert not (tmp_path / "r").exists()
 
 
 # --- the debug artifact ------------------------------------------------------

@@ -168,7 +168,7 @@ def test_final_evaluator_parity(ref):
 def _spec_pairs():
     """(mine, theirs) spec lists built from the same config."""
     cfg = ktpspec.DEFAULT_FIELD_CONFIG
-    return ktpspec.build_ktp_specs(cfg), refharness.build_reference_specs(cfg)
+    return ktpspec.ktp_plans(cfg).blended.fresh(), refharness.build_reference_specs(cfg)
 
 
 def test_matcher_parity_on_doc_lines(ref):

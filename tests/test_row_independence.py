@@ -23,13 +23,29 @@ from universal_key_value_based_text_processing_with_ocr_spark.sources.synthdocs 
 
 _BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
+# A page whose lines hit every ``wo_space`` spec (joined and spaced keys,
+# repeated), the specs that grow their key lists while a document is swept.
+WO_SPACE_PAGE = dict(
+    gen_page_row(17, 0),
+    url="https://example.test/wo-space",
+    html=None,
+    lang="ind",
+    text="\n".join(
+        ["PROVINSI JAWA BARAT", "NIK : 3201150107990001"]
+        + ["TempatTglLahir : JAKARTA, 01-02-1990", "Tempat Tgl Lahir : BOGOR, 02-03-1991",
+           "JenisKelamin : LAKI-LAKI GolDarah : O", "Jenis kelamin : PEREMPUAN Gol darah : A",
+           "RTRW : 001/002", "RT/RW : 003/004",
+           "BerlakuHingga : SEUMUR HIDUP", "Berlaku Hingga : 01-01-2030"] * 3
+    ),
+)
+
 
 def _rows(df) -> list:
     return sorted(tuple(r) for r in extract_pages(df).collect())
 
 
 def test_output_bytes_independent_of_batch_size_and_partitions(spark):  # noqa: F811
-    pdf = pd.DataFrame([gen_page_row(17, i) for i in range(48)])
+    pdf = pd.DataFrame([gen_page_row(17, i) for i in range(48)] + [WO_SPACE_PAGE])
     df = spark.createDataFrame(pdf, schema=PAGES_SCHEMA)
     before = spark.conf.get(_BATCH)
     try:
@@ -42,11 +58,11 @@ def test_output_bytes_independent_of_batch_size_and_partitions(spark):  # noqa: 
         spark.conf.set(_BATCH, before)
     assert one_per_batch == whole_batches
     assert one_partition == whole_batches
-    assert len(whole_batches) == 48
+    assert len(whole_batches) == 49
 
 
 def test_page_bytes_independent_of_the_page_parsed_before():
-    pages = [gen_page_row(23, i) for i in range(16)]
+    pages = [gen_page_row(23, i) for i in range(16)] + [WO_SPACE_PAGE]
 
     def parse(page) -> str:
         return json.dumps(

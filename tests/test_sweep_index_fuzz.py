@@ -171,8 +171,7 @@ def test_indexed_sweep_matches_frozen_kernel_on_ktp_specs():
             lines.insert(rng.randrange(len(lines) + 1), rng.choice(lines))
         docs.append("\n".join(lines))
     for i, doc in enumerate(docs):
-        specs = ktpspec.build_ktp_specs()
-        specs.insert(2, ktpspec._text_path_nik_spec(ktpspec.DEFAULT_FIELD_CONFIG))
+        specs = ktpspec.ktp_plans().sweep.fresh()
         for te in specs:
             if te["extractor"] is matching.match_keys_in_line:
                 te["extractor"] = _KEYS
@@ -202,7 +201,7 @@ def test_index_skips_non_candidate_probes_and_sees_through_wraps():
         return matching.match_keys_in_line(**kwargs)
 
     def specs_with(extractor):
-        specs = ktpspec.build_ktp_specs()
+        specs = ktpspec.ktp_plans().blended.fresh()
         for te in specs:
             if te["extractor"] is matching.match_keys_in_line:
                 te["extractor"] = extractor

@@ -1,33 +1,51 @@
-"""KTP extraction plan assembly and the text-path document parser.
+"""The KTP field table and the KTP document parsers.
 
 Parity target: reference ``parse_ktp`` (/root/reference/parsers.py:11-101),
 text path (``ktp_str=...``, parsers.py:82-86) — the pure text->fields
-contract.  The ordered spec list built here IS the logical plan: declarative
-field specs naming an extractor (operator), thresholds (predicates) and
-evaluators (post-ops); the reference's ``to_extracts_ktp`` list
-(parsers.py:29-61).
+contract.  ``KTP_FIELDS`` IS the logical plan: declarative field specs in
+the ``kvcore.config`` format, naming an extractor (operator), thresholds
+(predicates) and evaluators (post-ops); the reference's
+``to_extracts_ktp`` list (parsers.py:29-61) and its NIK re-scan
+``to_extracts_ktp_nik`` (parsers.py:63-65).  ``KTP_PLANS`` orders the table
+into each parser's spec list, and ``ktp_plans`` compiles them all with
+``kvcore.config.compile_config``: once per process for the default
+thresholds, once per job on the driver for the Spark stage.  Each document
+then runs on a fresh copy (``Plan.fresh``).
 
 The per-field thresholds come from a config the reference loads from a DB or
 ``ktp_config.json`` (parsers.py:8,21-27) — neither ships with the reference
 repo, so DEFAULT_FIELD_CONFIG below is engine-defined (documented, frozen,
 and used by both oracle and pipeline; values chosen so OCR-style noise
-within the confusion sets stays findable).
+within the confusion sets stays findable).  A configs dict must have every
+key DEFAULT_FIELD_CONFIG has; one that does not raises ``ValueError`` when
+it is compiled.
 
 Reference quirks kept:
 - The text path INSERTS a second NIK spec at position 2 (parsers.py:86)
   ahead of the always-present NIK spec; the earlier one consumes the NIK
   line, so the later spec (tolerant_not_exists=[False], parsers.py:35) then
   fails and every single-NIK-line document sweeps to success=False even when
-  the final evaluator accepts the NIK.  Byte-identity keeps this.
+  the final evaluator accepts the NIK.  Byte-identity keeps this: the sweep
+  plan holds ``nik_text`` and then ``nik``.
 - ``result_orders`` / ``output_orders`` canonical orderings
   (parsers.py:15-16,99-101) drive the serialized output.
+
+Box-order tolerance override: the block sweep (reference ``parse_doc_new0``)
+is never invoked by the reference, so no canonical spec list exists for
+it, and its failing-spec semantics is ABORT-the-document rather than the
+line sweep's record-and-continue.  The line path's hardcoded must-exist NIK
+would abort every noisy document, so the boxorder plan runs the
+config-tolerant ``nik_text`` spec in BOTH NIK positions; everything else
+keeps its configured must-exist flags.
 """
 
 from __future__ import annotations
 
-import copy
 import json
+from typing import NamedTuple
 
+from .boxsweep import sweep_blocks
+from .config import Plan, compile_config
 from .evaluate import (
     eval_birth,
     eval_blood,
@@ -44,8 +62,6 @@ from .evaluate import (
     final_evaluate_ktp,
 )
 from .matching import match_keys_in_line, match_line_regex
-from .repair import repair_no_number, repair_to_letters
-from .boxsweep import sweep_blocks
 from .sweep import blend_parsers, scan_document_all, sweep_document
 
 RESULT_ORDERS = [
@@ -117,282 +133,158 @@ DEFAULT_FIELD_CONFIG = {
     },
 }
 
+_ALNUM = "[a-z|A-Z|0-9]"
+_NIK_FILTERS = [[_ALNUM, "[\\:]"]]
 
-def _copy_config(obj):
-    """Structural copy of a field-config tree (dict/list of scalars).
+# The KTP field table in the kvcore.config format.  ``thresholds`` names the
+# DEFAULT_FIELD_CONFIG entry whose keys fill the field from the parser's
+# configs; a key the field sets itself (the must-exist NIK) wins.
+KTP_FIELDS = {
+    "provinsi": {"name": "PROVINSI", "thresholds": "provinsi", "keys": [["PROVINSI"]],
+                 "evaluators": ["province"]},
+    "kabupatenkota": {"name": "KABUPATEN/KOTA", "thresholds": "kabupatenkota",
+                      "extractor": "whole_line", "evaluators": ["city"]},
+    # the text path's inserted NIK (parsers.py:86): configured tolerance
+    "nik_text": {"name": "NIK", "thresholds": "nik", "keys": [["NIK"]],
+                 "char_filters": _NIK_FILTERS, "evaluators": ["nik"]},
+    # the table's own NIK (parsers.py:35): must exist, whatever the config
+    "nik": {"name": "NIK", "thresholds": "nik", "keys": [["NIK"]],
+            "char_filters": _NIK_FILTERS, "evaluators": ["nik"], "tolerant_not_exists": [False]},
+    "nama": {"name": "Nama", "thresholds": "nama", "keys": [["Nama"]],
+             "evaluators": ["letters"], "multi_line_value": True},
+    "tempattgllahir": {"name": "Tempat/Tgl Lahir", "thresholds": "tempattgllahir",
+                       "keys": [["Tempat", "Tgl", "Lahir"]], "char_filter": "[a-z|A-Z|\\/|0-9]",
+                       "evaluators": ["birth"], "wo_space": True},
+    "jeniskelamin|goldarah": {
+        "name": "Jenis kelamin", "aliases": ["Jenis kelamin", "GolDarah"],
+        "thresholds": "jeniskelamin|goldarah", "keys": [["jenis", "kelamin"], ["gol", "darah"]],
+        "separators": [":", "."],
+        "char_filters": [["[a-z|A-Z|\\-|0-9]"] * 3, ["[a-z|A-Z|\\-|0-9]"] * 3],
+        "preprocess": "lower", "evaluators": ["gender", "blood"], "wo_space": True,
+    },
+    "alamat": {"name": "Alamat", "thresholds": "alamat", "keys": [["Alamat"]],
+               "evaluators": ["no_number"], "multi_line_value": True},
+    "rtrw": {"name": "RT/RW", "thresholds": "rtrw", "keys": [["RTRW"]],
+             "char_filters": [["[a-z|A-Z|0-9|\\=|\\/]"], ["[a-z|A-Z|0-9|\\=|\\/]"]],
+             "preprocess": "upper", "evaluators": ["rtrw"], "multi_line_value": True,
+             "wo_space": True},
+    "keldesa": {"name": "Kel/Desa", "thresholds": "keldesa", "keys": [["KelDesa"]],
+                "char_filters": [[_ALNUM] * 3], "evaluators": ["upper_letters"]},
+    "kecamatan": {"name": "Kecamatan", "thresholds": "kecamatan", "keys": [["Kecamatan"]],
+                  "evaluators": ["letters"], "multi_line_value": True},
+    "agama": {"name": "Agama", "thresholds": "agama", "keys": [["Agama"]],
+              "evaluators": ["religion"], "multi_line_value": True},
+    "statusperkawinan": {"name": "Status Perkawinan", "thresholds": "statusperkawinan",
+                         "keys": [["Status", "Perkawinan"]], "char_filter": "[a-z|A-Z|\\/|0-9]",
+                         "evaluators": ["marital"]},
+    "pekerjaan": {"name": "Pekerjaan", "thresholds": "pekerjaan", "keys": [["Pekerjaan"]],
+                  "evaluators": ["job"], "multi_line_value": True},
+    "kewarganegaraan": {"name": "Kewarganegaraan", "thresholds": "kewarganegaraan",
+                        "keys": [["Kewarganegaraan"]], "evaluators": ["citizenship"],
+                        "multi_line_value": True},
+    "berlakuhingga": {"name": "Berlaku Hingga", "thresholds": "berlakuhingga",
+                      "keys": [["Berlaku", "Hingga"]], "char_filter": "[a-z|A-Z|\\/|0-9]",
+                      "evaluators": ["valid_until"], "wo_space": True},
+    # the blended parser's multi-hit NIK re-scan (parsers.py:63-65)
+    "nik_1": {"name": "NIK_1", "extractor": "whole_line", "evaluators": ["nik"],
+              "tolerant_not_exists": [True]},
+}
 
-    Equivalent to ``copy.deepcopy`` for this shape but ~5x cheaper —
-    build_ktp_specs runs once per document, and deepcopy's generic memo
-    machinery showed up in the kernel profile (~4%/doc).  Falls back to
-    deepcopy for any node that isn't a plain dict/list so exotic custom
-    configs keep full deepcopy semantics.
-    """
-    t = type(obj)
-    if t is dict:
-        return {k: _copy_config(v) for k, v in obj.items()}
-    if t is list:
-        return [_copy_config(v) for v in obj]
-    if t in (str, int, float, bool, type(None)):
-        return obj
-    return copy.deepcopy(obj)
+_TABLE = ("provinsi", "kabupatenkota", "nik", "nama", "tempattgllahir",
+          "jeniskelamin|goldarah", "alamat", "rtrw", "keldesa", "kecamatan", "agama",
+          "statusperkawinan", "pekerjaan", "kewarganegaraan", "berlakuhingga")
 
-
-def build_ktp_specs(configs=None):
-    """The ordered logical plan: 15 field specs (reference parsers.py:29-61).
-
-    Returns fresh objects on every call — required because ``wo_space``
-    specs mutate their own lists while a document is swept.
-    """
-    if configs is None:
-        configs = DEFAULT_FIELD_CONFIG
-    configs = _copy_config(configs)
-    alnum = "[a-z|A-Z|0-9]"
-
-    return [
-        dict(
-            extractor=match_keys_in_line,
-            extractor_args=dict(
-                key_str_list_list=[["PROVINSI"]],
-                max_distances=configs["provinsi"]["max_distances"],
-                min_accuracies=configs["provinsi"]["min_accuracies"],
-                separators=[":"],
-                re_chars_filter=[[alnum]],
-                alias_names=["PROVINSI"],
-            ),
-            evaluators=[eval_province],
-            multi_line_value=False,
-            alias_names=["PROVINSI"],
-            tolerant_not_exists=configs["provinsi"]["tolerant_not_exists"],
-        ),
-        dict(
-            extractor=match_line_regex,
-            extractor_args=dict(alias_names=["KABUPATEN/KOTA"]),
-            evaluators=[eval_city],
-            multi_line_value=False,
-            alias_names=["KABUPATEN/KOTA"],
-            tolerant_not_exists=configs["kabupatenkota"]["tolerant_not_exists"],
-        ),
-        dict(
-            extractor=match_keys_in_line,
-            extractor_args=dict(
-                key_str_list_list=[["NIK"]],
-                max_distances=configs["nik"]["max_distances"],
-                min_accuracies=configs["nik"]["min_accuracies"],
-                separators=[":"],
-                re_chars_filter=[[alnum, "[\\:]"]],
-                alias_names=["NIK"],
-            ),
-            evaluators=[eval_nik],
-            multi_line_value=False,
-            alias_names=["NIK"],
-            tolerant_not_exists=[False],
-        ),
-        dict(
-            extractor=match_keys_in_line,
-            extractor_args=dict(
-                key_str_list_list=[["Nama"]],
-                max_distances=configs["nama"]["max_distances"],
-                min_accuracies=configs["nama"]["min_accuracies"],
-                separators=[":"],
-                re_chars_filter=[[alnum]],
-                alias_names=["Nama"],
-            ),
-            evaluators=[repair_to_letters],
-            multi_line_value=True,
-            alias_names=["Nama"],
-            tolerant_not_exists=configs["nama"]["tolerant_not_exists"],
-        ),
-        dict(
-            extractor=match_keys_in_line,
-            extractor_args=dict(
-                key_str_list_list=["Tempat Tgl Lahir".split(" ")],
-                max_distances=configs["tempattgllahir"]["max_distances"],
-                min_accuracies=configs["tempattgllahir"]["min_accuracies"],
-                separators=[":"],
-                re_chars_filter=[["[a-z|A-Z|\\/|0-9]"] * 3],
-                alias_names=["Tempat/Tgl Lahir"],
-                wo_space=True,
-            ),
-            evaluators=[eval_birth],
-            multi_line_value=False,
-            alias_names=["Tempat/Tgl Lahir"],
-            tolerant_not_exists=configs["tempattgllahir"]["tolerant_not_exists"],
-        ),
-        dict(
-            extractor=match_keys_in_line,
-            extractor_args=dict(
-                key_str_list_list=["jenis kelamin".split(" "), "gol darah".split(" ")],
-                max_distances=configs["jeniskelamin|goldarah"]["max_distances"],
-                min_accuracies=configs["jeniskelamin|goldarah"]["min_accuracies"],
-                separators=[":", "."],
-                re_chars_filter=[["[a-z|A-Z|\\-|0-9]"] * 3, ["[a-z|A-Z|\\-|0-9]"] * 3],
-                alias_names=["Jenis kelamin", "GolDarah"],
-                line_preprocessing=str.lower,
-                wo_space=True,
-            ),
-            evaluators=[eval_gender, eval_blood],
-            multi_line_value=False,
-            alias_names=["Jenis kelamin", "GolDarah"],
-            tolerant_not_exists=configs["jeniskelamin|goldarah"]["tolerant_not_exists"],
-        ),
-        dict(
-            extractor=match_keys_in_line,
-            extractor_args=dict(
-                key_str_list_list=[["Alamat"]],
-                max_distances=configs["alamat"]["max_distances"],
-                min_accuracies=configs["alamat"]["min_accuracies"],
-                separators=[":"],
-                re_chars_filter=[[alnum]],
-                alias_names=["Alamat"],
-            ),
-            evaluators=[lambda x: [True, repair_no_number(repair_to_letters(x)[1])]],
-            multi_line_value=True,
-            alias_names=["Alamat"],
-            tolerant_not_exists=configs["alamat"]["tolerant_not_exists"],
-        ),
-        dict(
-            extractor=match_keys_in_line,
-            extractor_args=dict(
-                key_str_list_list=[["RTRW"]],
-                max_distances=configs["rtrw"]["max_distances"],
-                min_accuracies=configs["rtrw"]["min_accuracies"],
-                separators=[":"],
-                re_chars_filter=[["[a-z|A-Z|0-9|\\=|\\/]"], ["[a-z|A-Z|0-9|\\=|\\/]"]],
-                alias_names=["RT/RW"],
-                line_preprocessing=str.upper,
-                wo_space=True,
-            ),
-            evaluators=[eval_rtrw],
-            multi_line_value=True,
-            alias_names=["RT/RW"],
-            tolerant_not_exists=configs["rtrw"]["tolerant_not_exists"],
-        ),
-        dict(
-            extractor=match_keys_in_line,
-            extractor_args=dict(
-                key_str_list_list=["KelDesa".split(" ")],
-                max_distances=configs["keldesa"]["max_distances"],
-                min_accuracies=configs["keldesa"]["min_accuracies"],
-                separators=[":"],
-                re_chars_filter=[[alnum] * 3],
-                alias_names=["Kel/Desa"],
-            ),
-            evaluators=[lambda x: repair_to_letters(x.upper())],
-            multi_line_value=False,
-            alias_names=["Kel/Desa"],
-            tolerant_not_exists=configs["keldesa"]["tolerant_not_exists"],
-        ),
-        dict(
-            extractor=match_keys_in_line,
-            extractor_args=dict(
-                key_str_list_list=[["Kecamatan"]],
-                max_distances=configs["kecamatan"]["max_distances"],
-                min_accuracies=configs["kecamatan"]["min_accuracies"],
-                separators=[":"],
-                re_chars_filter=[[alnum]],
-                alias_names=["Kecamatan"],
-            ),
-            evaluators=[repair_to_letters],
-            multi_line_value=True,
-            alias_names=["Kecamatan"],
-            tolerant_not_exists=configs["kecamatan"]["tolerant_not_exists"],
-        ),
-        dict(
-            extractor=match_keys_in_line,
-            extractor_args=dict(
-                key_str_list_list=[["Agama"]],
-                max_distances=configs["agama"]["max_distances"],
-                min_accuracies=configs["agama"]["min_accuracies"],
-                separators=[":"],
-                re_chars_filter=[[alnum]],
-                alias_names=["Agama"],
-            ),
-            evaluators=[eval_religion],
-            multi_line_value=True,
-            alias_names=["Agama"],
-            tolerant_not_exists=configs["agama"]["tolerant_not_exists"],
-        ),
-        dict(
-            extractor=match_keys_in_line,
-            extractor_args=dict(
-                key_str_list_list=["Status Perkawinan".split(" ")],
-                max_distances=configs["statusperkawinan"]["max_distances"],
-                min_accuracies=configs["statusperkawinan"]["min_accuracies"],
-                separators=[":"],
-                re_chars_filter=[["[a-z|A-Z|\\/|0-9]"] * 2],
-                alias_names=["Status Perkawinan"],
-            ),
-            evaluators=[eval_marital],
-            multi_line_value=False,
-            alias_names=["Status Perkawinan"],
-            tolerant_not_exists=configs["statusperkawinan"]["tolerant_not_exists"],
-        ),
-        dict(
-            extractor=match_keys_in_line,
-            extractor_args=dict(
-                key_str_list_list=[["Pekerjaan"]],
-                max_distances=configs["pekerjaan"]["max_distances"],
-                min_accuracies=configs["pekerjaan"]["min_accuracies"],
-                separators=[":"],
-                re_chars_filter=[[alnum]],
-                alias_names=["Pekerjaan"],
-            ),
-            evaluators=[eval_job],
-            multi_line_value=True,
-            alias_names=["Pekerjaan"],
-            tolerant_not_exists=configs["pekerjaan"]["tolerant_not_exists"],
-        ),
-        dict(
-            extractor=match_keys_in_line,
-            extractor_args=dict(
-                key_str_list_list=[["Kewarganegaraan"]],
-                max_distances=configs["kewarganegaraan"]["max_distances"],
-                min_accuracies=configs["kewarganegaraan"]["min_accuracies"],
-                separators=[":"],
-                re_chars_filter=[[alnum]],
-                alias_names=["Kewarganegaraan"],
-            ),
-            evaluators=[eval_citizenship],
-            multi_line_value=True,
-            alias_names=["Kewarganegaraan"],
-            tolerant_not_exists=configs["kewarganegaraan"]["tolerant_not_exists"],
-        ),
-        dict(
-            extractor=match_keys_in_line,
-            extractor_args=dict(
-                key_str_list_list=["Berlaku Hingga".split(" ")],
-                max_distances=configs["berlakuhingga"]["max_distances"],
-                min_accuracies=configs["berlakuhingga"]["min_accuracies"],
-                separators=[":"],
-                re_chars_filter=[["[a-z|A-Z|\\/|0-9]"] * 2],
-                alias_names=["Berlaku Hingga"],
-                wo_space=True,
-            ),
-            evaluators=[eval_valid_until],
-            multi_line_value=False,
-            alias_names=["Berlaku Hingga"],
-            tolerant_not_exists=configs["berlakuhingga"]["tolerant_not_exists"],
-        ),
-    ]
+# each plan's fields in sweep order (the quirks in the module docstring)
+KTP_PLANS = {
+    "sweep": _TABLE[:2] + ("nik_text",) + _TABLE[2:],
+    "blended": _TABLE,
+    "rescan": ("nik_1",),
+    "boxorder": _TABLE[:2] + ("nik_text", "nik_text") + _TABLE[3:],
+}
 
 
-def _text_path_nik_spec(configs):
-    """The extra NIK spec the text path inserts at index 2 (parsers.py:86)."""
-    return dict(
-        extractor=match_keys_in_line,
-        extractor_args=dict(
-            key_str_list_list=[["NIK"]],
-            max_distances=_copy_config(configs["nik"]["max_distances"]),
-            min_accuracies=_copy_config(configs["nik"]["min_accuracies"]),
-            separators=[":"],
-            re_chars_filter=[["[a-z|A-Z|0-9]", "[\\:]"]],
-            alias_names=["NIK"],
-        ),
-        evaluators=[eval_nik],
-        multi_line_value=False,
-        alias_names=["NIK"],
-        tolerant_not_exists=_copy_config(configs["nik"]["tolerant_not_exists"]),
-    )
+class KtpPlans(NamedTuple):
+    """The compiled KTP plans, one per ``KTP_PLANS`` entry."""
+
+    sweep: Plan
+    blended: Plan
+    rescan: Plan
+    boxorder: Plan
+
+
+def _bindings() -> dict:
+    """The callables the table names, read from this module when it
+    compiles, so a patched entry (a tracer, a fault injector) is the one
+    the plans call."""
+    return {
+        "keys": match_keys_in_line, "whole_line": match_line_regex,
+        "province": eval_province, "city": eval_city, "nik": eval_nik,
+        "birth": eval_birth, "gender": eval_gender, "blood": eval_blood,
+        "rtrw": eval_rtrw, "religion": eval_religion, "marital": eval_marital,
+        "job": eval_job, "citizenship": eval_citizenship,
+        "valid_until": eval_valid_until, "ktp": final_evaluate_ktp,
+    }
+
+
+def ktp_config(configs) -> dict:
+    """``KTP_FIELDS`` as one ``kvcore.config`` config, thresholds filled
+    from ``configs``."""
+    fields = []
+    for field in KTP_FIELDS.values():
+        field = dict(field)
+        key = field.pop("thresholds", None)
+        if key is not None:
+            try:
+                field.update({k: configs[key][k] for k in DEFAULT_FIELD_CONFIG[key]
+                              if k not in field})
+            except (KeyError, TypeError) as exc:
+                raise ValueError(
+                    f"KTP thresholds {key!r} need {list(DEFAULT_FIELD_CONFIG[key])}: missing {exc}"
+                ) from None
+        fields.append(field)
+    return {"fields": fields, "final_evaluator": "ktp"}
+
+
+def _compile(configs, bindings) -> KtpPlans:
+    plan = compile_config(ktp_config(configs), bindings)
+    spec = dict(zip(KTP_FIELDS, plan.specs))
+    return KtpPlans(**{
+        name: Plan([spec[f] for f in fields], None if name == "rescan" else plan.final)
+        for name, fields in KTP_PLANS.items()
+    })
+
+
+_default_plans = None  # (bindings, KtpPlans) of the default thresholds
+
+
+def ktp_plans(configs=None) -> KtpPlans:
+    """The compiled KTP plans for ``configs`` (keyed like
+    DEFAULT_FIELD_CONFIG; None = the defaults, compiled once per process;
+    compiled plans pass through).  Any other dict compiles on every call:
+    a caller parsing many documents with its own thresholds passes
+    ``ktp_plans(cfg)`` to the parsers instead."""
+    global _default_plans
+    if type(configs) is KtpPlans:
+        return configs
+    bindings = _bindings()
+    if configs is not None:
+        return _compile(configs, bindings)
+    key = tuple(bindings.values())
+    if _default_plans is None or _default_plans[0] != key:
+        _default_plans = (key, _compile(DEFAULT_FIELD_CONFIG, bindings))
+    return _default_plans[1]
+
+
+def _ordered(result, warning, result_orders, output_orders=None):
+    """The entry points' shared tail: the page warning, the canonical
+    result order and, when given, the output key order."""
+    result["warning"] = {} if warning is None else warning
+    if "result" in result:
+        order = RESULT_ORDERS if result_orders is None else result_orders
+        result["result"] = {k: result["result"][k] for k in order if k in result["result"]}
+    if output_orders is None:
+        return result
+    return {k: result[k] for k in output_orders if k in result}
 
 
 def parse_document(
@@ -409,38 +301,13 @@ def parse_document(
     warnings; the web-page analog — payload-quality predicates — is computed
     by the HTML stage and passed in; defaults to {}).
     """
-    if configs is None:
-        configs = DEFAULT_FIELD_CONFIG
-    if output_orders is None:
-        output_orders = OUTPUT_ORDERS
-    if result_orders is None:
-        result_orders = RESULT_ORDERS
-
-    specs = build_ktp_specs(configs)
-    specs.insert(2, _text_path_nik_spec(configs))
-
-    final_evaluator = final_evaluate_ktp if use_final_evaluator else (lambda x: x)
-
+    plan = ktp_plans(configs).sweep
     result = blend_parsers(
-        doc_parsers={sweep_document: {"doc_str": doc_str, "to_extracts": specs}},
-        final_evaluator=final_evaluator,
+        doc_parsers={sweep_document: {"doc_str": doc_str, "to_extracts": plan.fresh()}},
+        final_evaluator=plan.final if use_final_evaluator else (lambda x: x),
     )
-    result["warning"] = {} if warning is None else warning
-    result["result"] = {k: result["result"][k] for k in result_orders if k in result["result"]}
-    return {k: result[k] for k in output_orders if k in result}
-
-
-def _rescan_nik_spec():
-    """The focused NIK re-scan spec of the blended entry point
-    (reference ``to_extracts_ktp_nik``, parsers.py:63-65)."""
-    return dict(
-        extractor=match_line_regex,
-        extractor_args=dict(alias_names=["NIK_1"], pattern=r".*"),
-        evaluators=[eval_nik],
-        multi_line_value=False,
-        alias_names=["NIK_1"],
-        tolerant_not_exists=[True],
-        tess_config="",
+    return _ordered(
+        result, warning, result_orders, OUTPUT_ORDERS if output_orders is None else output_orders
     )
 
 
@@ -455,25 +322,18 @@ def parse_document_blended(
     STRUCTURE (parsers.py:68-96) applied to a text payload: the ordered
     field sweep PLUS the multi-hit NIK_1 re-scan, merged first-writer-wins,
     then the cross-field final evaluator."""
-    if configs is None:
-        configs = DEFAULT_FIELD_CONFIG
-    if output_orders is None:
-        output_orders = OUTPUT_ORDERS
-    if result_orders is None:
-        result_orders = RESULT_ORDERS
-
-    specs = build_ktp_specs(configs)
+    plans = ktp_plans(configs)
     result = blend_parsers(
         doc_parsers={
-            sweep_document: {"to_extracts": specs},
-            scan_document_all: {"spec": [_rescan_nik_spec()]},
+            sweep_document: {"to_extracts": plans.blended.fresh()},
+            scan_document_all: {"spec": plans.rescan.fresh()},
         },
-        final_evaluator=final_evaluate_ktp,
+        final_evaluator=plans.blended.final,
         doc_str=doc_str,
     )
-    result["warning"] = {} if warning is None else warning
-    result["result"] = {k: result["result"][k] for k in result_orders if k in result["result"]}
-    return {k: result[k] for k in output_orders if k in result}
+    return _ordered(
+        result, warning, result_orders, OUTPUT_ORDERS if output_orders is None else output_orders
+    )
 
 
 def parse_document_boxorder(
@@ -486,39 +346,19 @@ def parse_document_boxorder(
     """Block-order entry point == reference ``parse_doc_new0``
     (/root/reference/ocrfw/postprocessing.py:546-663) applied to the graft's
     DOM blocks: the geometry-driven second physical plan, where a box is one
-    htmlcore block's text in document order.  Same spec list as the text
-    path (incl. the index-2 NIK insert) so the two parsers differ only in
-    sweep order/consumption semantics."""
-    if configs is None:
-        configs = DEFAULT_FIELD_CONFIG
-    if result_orders is None:
-        result_orders = RESULT_ORDERS
-
-    specs = build_ktp_specs(configs)
-    specs.insert(2, _text_path_nik_spec(configs))
-    # Box-order profile: parse_doc_new0 is never invoked by the reference
-    # (dead code — no canonical spec list exists for it), and its
-    # failing-spec semantics is ABORT-the-document rather than the line
-    # sweep's record-and-continue.  The line path's hardcoded must-exist NIK
-    # (parsers.py:35, duplicated at index 3 here) would abort every noisy
-    # document, so this profile uses the config-driven tolerance for BOTH
-    # NIK specs; everything else keeps its configured must-exist flags.
-    specs[3]["tolerant_not_exists"] = _copy_config(configs["nik"]["tolerant_not_exists"])
-
+    htmlcore block's text in document order.  The text path's spec list
+    with the box-order tolerance override (module docstring), so the two
+    parsers differ only in sweep order/consumption semantics."""
+    plan = ktp_plans(configs).boxorder
     result = sweep_blocks(
-        blocks, specs, final_evaluator=final_evaluate_ktp, keep_looking=keep_looking
+        blocks, plan.fresh(), final_evaluator=plan.final, keep_looking=keep_looking
     )
     # the early-failure echo carries the spec dict (function objects) — not
     # serializable and not byte-stable; the parity tests exercise it on the
     # raw sweep_blocks instead
     result.pop("to extracts", None)
     result.pop("line_result", None)
-    result["warning"] = {} if warning is None else warning
-    if "result" in result:
-        result["result"] = {
-            k: result["result"][k] for k in result_orders if k in result["result"]
-        }
-    return result
+    return _ordered(result, warning, result_orders)
 
 
 def serialize_result(parsed: dict) -> str:

@@ -101,6 +101,21 @@ PARSERS = {
 }
 
 
+def compile_plan(configs, parser: str):
+    """``configs`` compiled for ``parser``: the ``kvcore.config`` plan of
+    a user config, the KTP plans of a thresholds dict (None: the defaults).
+
+    The Spark stages compile on the driver and ship the plan, so an unknown
+    parser or a malformed config raises ``ValueError`` before any Spark job
+    instead of turning every page into an exception-guard row, and each
+    document only copies the plan."""
+    if parser not in PARSERS:
+        raise ValueError(f"parser must be one of {sorted(PARSERS)}, got {parser!r}")
+    if parser == "config":
+        return kvconfig.compile_config(configs)
+    return ktpspec.ktp_plans(configs)
+
+
 def _page_row(url, html, text, lang, configs, parser: str) -> dict:
     """Decode + guarded parse of one page -> its full ``RESULT_SCHEMA`` row."""
     warning = page_quality_warnings(
@@ -172,9 +187,9 @@ def _map_rows(pages_df, row_fn, schema: str):
 def extract_pages(pages_df, configs=None, parser: str = "sweep"):
     """pages(url, warc_ts, html, text, lang) -> results DataFrame under one
     of ``PARSERS``: ``RESULT_SCHEMA`` for the sweep, ``COMPACT_SCHEMA`` for
-    the others."""
-    schema = PARSERS[parser][1]
-    return _map_rows(pages_df, partial(_page_row, configs=configs, parser=parser), schema)
+    the others.  ``configs`` is compiled here (``compile_plan``)."""
+    plan = compile_plan(configs, parser)
+    return _map_rows(pages_df, partial(_page_row, configs=plan, parser=parser), PARSERS[parser][1])
 
 
 def _compact(row: dict) -> dict:
@@ -291,8 +306,9 @@ def parse_page_row_debug(url, html, text, lang, configs=None, parser: str = "swe
 def extract_pages_debug(pages_df, configs=None, parser: str = "sweep"):
     """pages -> one debug row per page (same fused narrow-stage shape).
     The job runs it over its failed urls only."""
+    plan = compile_plan(configs, parser)
     return _map_rows(
-        pages_df, partial(parse_page_row_debug, configs=configs, parser=parser), DEBUG_SCHEMA
+        pages_df, partial(parse_page_row_debug, configs=plan, parser=parser), DEBUG_SCHEMA
     )
 
 

@@ -19,10 +19,10 @@ exactly those numbers.
 
 Contract (tested): ``value == line[value_start:value_end]`` and
 ``0 <= key_start <= key_end <= value_start <= value_end <= len(line)``
-for every emitted row.  Specs are built FRESH per line (no cross-line
-``wo_space`` config growth), so each row is a pure function of its line —
-which makes the stage embarrassingly parallel and the output invariant
-under any repartitioning.
+for every emitted row.  The specs are compiled once and each line runs on
+a fresh copy (no cross-line ``wo_space`` growth), so each row is a pure
+function of its line — which makes the stage embarrassingly parallel and
+the output invariant under any repartitioning.
 
 Scale shape: one narrow Arrow ``mapInPandas`` over (url, line_no, line);
 no shuffle; per-row error containment as everywhere.
@@ -45,48 +45,28 @@ _COLS = [
 ]
 
 
-def build_span_specs(configs=None) -> list[dict]:
-    """The exact spec list the text-path document parse runs
-    (ktpspec.parse_document: build_ktp_specs + NIK spec inserted at 2),
-    built ONCE as a read-only template: ``line_field_spans`` copies each
-    spec's mutable args per line, so per-line purity costs a cheap
-    structural copy instead of re-running the whole 16-spec construction
-    per LINE (review finding — spec building dominated the spans stage)."""
-    from ..kvcore.ktpspec import (
-        DEFAULT_FIELD_CONFIG,
-        _text_path_nik_spec,
-        build_ktp_specs,
-    )
-
-    specs = build_ktp_specs(configs)
-    specs.insert(2, _text_path_nik_spec(configs or DEFAULT_FIELD_CONFIG))
-    return specs
-
-
-def line_field_spans(line: str, configs=None, spec_template=None) -> list[tuple]:
+def line_field_spans(line: str, configs=None) -> list[tuple]:
     """Pure-Python core: (field, key_start, key_end, value_start,
     value_end, value) for every key any spec finds on this line.
 
+    The specs are the text-path parse's (``ktpspec.ktp_plans(configs)
+    .sweep``), and the line runs on its own ``Plan.fresh()`` copy, so the
+    ``wo_space`` in-place growth quirk stays line-local and every row
+    remains a pure function of its line.  Pass compiled plans as
+    ``configs`` to skip the compile per line.
+
     ``match_line_regex`` specs (whole-line fields) report the regex hit as
     the key span and the full line as the value span — the same "value is
-    the whole line" semantics the extractor itself has.
-
-    ``spec_template`` (from ``build_span_specs``) amortises spec
-    construction across lines; the template is never mutated — each
-    line's matcher runs on structural COPIES of the mutable args, so the
-    ``wo_space`` in-place growth quirk stays line-local and every row
-    remains a pure function of its line."""
+    the whole line" semantics the extractor itself has."""
     import re
 
-    from ..kvcore.ktpspec import _copy_config
+    from ..kvcore.ktpspec import ktp_plans
     from ..kvcore.matching import match_keys_in_line, match_line_regex
 
-    specs = spec_template if spec_template is not None else build_span_specs(configs)
-
     out: list[tuple] = []
-    for te in specs:
+    for te in ktp_plans(configs).sweep.fresh():
         extractor = te["extractor"]
-        args = {k: _copy_config(v) for k, v in te["extractor_args"].items()}
+        args = te["extractor_args"]
         if extractor is match_keys_in_line:
             args["line"] = line
             args["with_spans"] = True
@@ -109,21 +89,20 @@ def line_field_spans(line: str, configs=None, spec_template=None) -> list[tuple]
 
 def extract_line_field_spans(lines_df, configs=None):
     """(url, line_no, line) -> exploded span rows (see SPANS_SCHEMA)."""
+    from ..kvcore.ktpspec import ktp_plans
     from ..plans.partitioning import widen_small_scan
 
+    plans = ktp_plans(configs)  # compiled on the driver, copied per line
     # the span kernel is CPU-bound per line — spread single-split scans
     # (identity at real scale, see widen_small_scan)
     pruned = widen_small_scan(lines_df.select("url", "line_no", "line"), "url", "line_no")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        specs = build_span_specs(configs)  # once per task, copied per line
         for batch in batches:
             rows = []
             for r in batch.itertuples(index=False):
                 line = r.line if r.line is not None else ""
-                for field, ks, ke, vs, ve, value in line_field_spans(
-                    line, configs, spec_template=specs
-                ):
+                for field, ks, ke, vs, ve, value in line_field_spans(line, plans):
                     rows.append(
                         (r.url, int(r.line_no), field, ks, ke, vs, ve, value)
                     )
@@ -144,12 +123,13 @@ def extract_page_field_spans(pages_df, configs=None):
     identical to the golden generator's enumeration, which is what makes
     the committed golden span table an exact oracle for this stage too.
     """
+    from ..kvcore.ktpspec import ktp_plans
     from .extract import page_lines
 
+    plans = ktp_plans(configs)  # compiled on the driver, copied per line
     pruned = pages_df.select("url", "html", "text")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        specs = build_span_specs(configs)  # once per task, copied per line
         for batch in batches:
             rows = []
             for r in batch.itertuples(index=False):
@@ -158,9 +138,7 @@ def extract_page_field_spans(pages_df, configs=None):
                 except Exception:
                     lines = None  # hostile payload: no spans, never a dead task
                 for i, line in enumerate(lines or ()):
-                    for field, ks, ke, vs, ve, value in line_field_spans(
-                        line, configs, spec_template=specs
-                    ):
+                    for field, ks, ke, vs, ve, value in line_field_spans(line, plans):
                         rows.append((r.url, i, field, ks, ke, vs, ve, value))
             yield pd.DataFrame(rows, columns=_COLS)
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..lakehouse import SnapshotTable
-from ..operators.extract import PARSERS, extract_pages, extract_pages_debug
+from ..operators.extract import compile_plan, extract_pages, extract_pages_debug
 
 from .partitioning import plan_partitions, salted_repartition
 
@@ -100,11 +100,10 @@ def run_extraction_job(
     # blended (+ the NIK re-scan), boxorder (the parse_doc_new0 block
     # analog) or config (``configs`` is a user config).  Only the sweep
     # emits the full schema; the others commit the compact one (no
-    # n_bytes/extracted_text).
-    if parser not in PARSERS:
-        # validate BEFORE any action — an argument typo must not cost a
-        # full source scan + resume anti-join first
-        raise ValueError(f"parser must be one of {sorted(PARSERS)}, got {parser!r}")
+    # n_bytes/extracted_text).  Compiled BEFORE any action: an argument
+    # typo or a malformed config must not cost a full source scan + resume
+    # anti-join first.
+    configs = compile_plan(configs, parser)
     if dedup_content and parser != "sweep":
         raise ValueError("dedup_content requires the sweep parser (extracted_text column)")
     if spans_path is not None and parser != "sweep":

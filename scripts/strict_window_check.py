@@ -1,18 +1,24 @@
-"""Driver-faithful strict check of the 50 in-window queries: sort rows by
-all columns (pandas lexsort, like the driver's canonicalizer), then require
-exact cell equality — no str-casting, no float coercion.  Floats must be
-bit-equal (or both NaN); ints/bools/strings exact."""
+"""Strict check of queries against their DuckDB oracles: sort rows by all
+columns (pandas lexsort, as a row-sorting result checker does), then
+require exact cell equality — no str-casting, no float coercion.
+Floats must be bit-equal (or both NaN); ints/bools/strings exact.
+
+Usage: python scripts/strict_window_check.py [sf_dir] [query ...]
+Without query names it checks the 50 in-window queries (the first 50 of
+``__spark_entry__.queries()``).  Spark runs local[$SPARK_GRAFT_CPUS]
+(default: the host's cores)."""
+import os
 import sys
 import numpy as np
 import pandas as pd
 import duckdb
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 from universal_key_value_based_text_processing_with_ocr_spark.plans.session import build_spark
-spark = build_spark(32)
+spark = build_spark(int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
 spark.sparkContext.setLogLevel("ERROR")
 from universal_key_value_based_text_processing_with_ocr_spark.ship import ship_package
 ship_package(spark)
@@ -20,7 +26,7 @@ ship_package(spark)
 import __spark_entry__ as e
 qs = e.queries()
 osql = e.oracle_sql()
-window = list(qs)[:50]
+window = sys.argv[2:] or list(qs)[:50]
 
 con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
@@ -63,5 +69,5 @@ for name in window:
     except Exception as ex:
         print(f"{name:32s} ERR {type(ex).__name__}: {str(ex)[:100]}"); fails += 1
     sys.stdout.flush()
-print(f"\n{50 - fails} STRICT-OK, {fails} FAIL")
+print(f"\n{len(window) - fails} STRICT-OK, {fails} FAIL")
 spark.stop()

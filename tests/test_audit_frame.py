@@ -156,6 +156,8 @@ def test_batch_and_streaming_audit_share_one_table(spark, tmp_path):  # noqa: F8
         assert sum(r.n_docs for r in mine if r.stage == "extract") == n_docs
         (write,) = [r for r in mine if r.stage == "write"]
         assert (write.partition_id, write.n_docs) == (-1, n_docs)
+        # a streamed epoch is a batch run: it records its own wall time
+        assert all(r.wall_ms > 0 for r in mine)
 
 
 def test_spark_and_driver_appends_share_one_table(spark, tmp_path):  # noqa: F811

@@ -56,3 +56,32 @@ def test_cli_reads_pages_with_the_pinned_schema(spark, tmp_path, capsys, shape):
     for r in rows:
         want = parse_page_row(r["url"], r.get("html"), r["text"], r["lang"])
         assert {c: committed[r["url"]][c] for c in RESULT_COLUMNS} == want
+
+
+def test_cli_streams_with_every_option(spark, tmp_path, capsys):  # noqa: F811
+    """``--streaming`` takes the batch job's options: a blended stream with
+    ``--debug`` commits the batch job's rows and a debug row per failed url."""
+    from universal_key_value_based_text_processing_with_ocr_spark.operators.extract import (
+        parse_page_row_blended,
+    )
+
+    rows = [gen_page_row(23, i) for i in range(16)]
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    for k in (0, 1):  # two input files, one epoch
+        pq.write_table(pa.Table.from_pylist(rows[k::2]), pages / f"part-{k}.parquet")
+    results, debug = tmp_path / "results", tmp_path / "debug"
+    batch_size = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    try:
+        assert cli.main(["--input", str(pages), "--results", str(results),
+                         "--streaming", "--checkpoint", str(tmp_path / "ckpt"),
+                         "--parser", "blended", "--debug", str(debug)]) == 0
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", batch_size)
+    assert json.loads(capsys.readouterr().out.splitlines()[-1])["n_epochs"] == 1
+
+    committed = {r.url: r.asDict() for r in SnapshotTable(results).read(spark).collect()}
+    want = {r["url"]: parse_page_row_blended(r["url"], r["html"], r["text"]) for r in rows}
+    assert {u: {c: row[c] for c in want[u]} for u, row in committed.items()} == want
+    failed = {u for u, row in want.items() if not row["success"]}
+    assert failed and {r.url for r in SnapshotTable(debug).read(spark).collect()} == failed

@@ -959,6 +959,28 @@ def test_inverted_index_positions_and_stoplist(spark):  # noqa: F811
     assert rows[("dog", 1)].df == 1
 
 
+def test_inverted_index_query_cells_match_its_oracle(spark, tmp_path):  # noqa: F811
+    """The ``inverted_index`` query emits positions as one comma-joined
+    string, the same scalar cell its DuckDB oracle emits, so a checker
+    that sorts rows by every column can compare the two."""
+    import duckdb
+
+    from universal_key_value_based_text_processing_with_ocr_spark.api import (
+        ORACLE_SQL,
+        q_inverted_index,
+    )
+
+    docs = tmp_path / "documents.parquet"
+    pd.DataFrame(
+        {"doc_id": [0, 1, 2], "text": ["the cat -- sat; the CAT", "the dog", None]}
+    ).to_parquet(docs)
+    got = sorted(tuple(r) for r in q_inverted_index(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs}')")
+    assert got == sorted(con.execute(ORACLE_SQL["inverted_index"]).fetchall())
+    assert ("cat", 0, 2, "1,4", 1) in got
+
+
 def test_parse_sitemaps_variants(spark):  # noqa: F811
     """Leaf urlset + sitemapindex; multi-line blocks trimmed; loc-less
     entries dropped; optional fields NULL."""

@@ -2,7 +2,11 @@
 lakehouse (multi-epoch, no duplicate urls, resume across restarts) and the
 AvailableNow windowed aggregation."""
 
+import json
+from collections import Counter
+
 import pandas as pd
+import pytest
 
 from tests.test_spark_pipeline import spark  # session fixture  # noqa: F401
 from universal_key_value_based_text_processing_with_ocr_spark.lakehouse import SnapshotTable
@@ -53,22 +57,53 @@ def test_streamed_extraction_multi_epoch_no_duplicates(spark, tmp_path):  # noqa
     assert info3["snapshot_id"] == info2["snapshot_id"]  # nothing new appended
 
 
-def test_streamed_matches_batch_extraction(spark, tmp_path):  # noqa: F811
-    from universal_key_value_based_text_processing_with_ocr_spark.operators.extract import (
-        extract_pages,
+def _table_rows(spark, path):  # noqa: F811
+    """A snapshot table's rows (as JSON: debug rows hold arrays) without
+    the per-partition lineage column, whose values follow the
+    partitioning, not the page."""
+    df = SnapshotTable(path).read(spark).drop("partition_id")
+    return Counter(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in df.collect())
+
+
+@pytest.mark.parametrize("parser", ["sweep", "blended", "boxorder"])
+def test_streamed_matches_batch_extraction(spark, tmp_path, parser):  # noqa: F811
+    """Each epoch runs the batch job, so the streamed results, debug and
+    span tables hold the batch job's rows for every parser."""
+    from universal_key_value_based_text_processing_with_ocr_spark.plans import (
+        run_extraction_job,
     )
 
     # an input column outside PAGES_SCHEMA: the stream reads the batch
     # CLI's input contract and ignores it
-    pages_dir = _write_pages_files(spark, tmp_path, [(0, 25)], extra_column=True)
-    results = str(tmp_path / "results")
-    streamed_extraction_job(spark, pages_dir, results)
-    streamed = {
-        (r.url, r.result_json, r.extracted_text)
-        for r in SnapshotTable(results).read(spark).collect()
-    }
-    batch = {
-        (r.url, r.result_json, r.extracted_text)
-        for r in extract_pages(spark.read.parquet(pages_dir)).collect()
-    }
-    assert streamed == batch
+    pages_dir = _write_pages_files(spark, tmp_path, [(0, 25), (25, 40)], extra_column=True)
+    tables = ["results", "debug"] + (["spans"] if parser == "sweep" else [])
+
+    def job_kwargs(side):
+        paths = {t: str(tmp_path / side / t) for t in tables}
+        return paths.pop("results"), {
+            "parser": parser, "debug_path": paths["debug"], "spans_path": paths.get("spans"),
+        }
+
+    results, kwargs = job_kwargs("stream")
+    info = streamed_extraction_job(spark, pages_dir, results, **kwargs)
+    assert info["n_epochs"] == 1
+    results, kwargs = job_kwargs("batch")
+    run_extraction_job(spark, spark.read.schema(PAGES_SCHEMA).parquet(pages_dir), results,
+                       **kwargs)
+    for t in tables:
+        streamed = _table_rows(spark, str(tmp_path / "stream" / t))
+        assert streamed, t
+        assert streamed == _table_rows(spark, str(tmp_path / "batch" / t)), t
+    assert sum(_table_rows(spark, str(tmp_path / "stream" / "results")).values()) == 40
+
+
+def test_streamed_bad_options_raise_before_any_commit(spark, tmp_path):  # noqa: F811
+    """The batch job's argument checks run in the first epoch, before it
+    commits anything: no results, fingerprint or audit snapshot."""
+    pages_dir = _write_pages_files(spark, tmp_path, [(0, 5)])
+    results, audit = str(tmp_path / "results"), str(tmp_path / "audit")
+    with pytest.raises(Exception, match="dedup_content requires the sweep parser"):
+        streamed_extraction_job(spark, pages_dir, results, audit, parser="blended",
+                                dedup_content=True)
+    for path in (results, results + "_fps", audit):
+        assert not SnapshotTable(path).exists()

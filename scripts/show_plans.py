@@ -76,10 +76,6 @@ def main() -> None:
         ("dedup_paragraphs", "corpus-level line dedup: posexplode -> skew-safe (line, doc) pair-distinct then combinable count -> anti-join -> per-doc array_sort reassembly; a viral line spreads across reducers instead of piling on one"),
         ("mask_repeated_ngrams", "substring dedup: row-local positional n-grams (one HOF, no text blow-up) -> skew-safe (gram, doc) pair-distinct + combinable count -> semi-join -> covered-position anti-join -> reassembly"),
         ("pages_content_dedup", "the --dedup-content path: within-batch mirror window + Bloom sketch broadcast probe of the committed fp side-table + exact semi-join for candidates only"),
-        ("multimodal_image_decode", "two Arrow stages (synth bytes -> decode), payload pruned after decode; no shuffle at all"),
-        ("multimodal_jpeg_decode", "JPEG decode (even doc_ids baseline, odd PROGRESSIVE/SOF2): same two-Arrow-stage no-shuffle shape as the PNG/BMP/GIF decode"),
-        ("multimodal_webp_decode", "lossless WebP (VP8L) decode: two Arrow stages (synth VP8L bytes -> full bitstream decode), payload pruned after decode, no shuffle"),
-        ("multimodal_tiff_decode", "baseline TIFF decode (none/PackBits/TIFF-LZW strips, both endians): the same two-Arrow-stage no-shuffle shape"),
         ("training_batch_plan", "the FULL pipeline in one plan: fused extract -> codegen'd normalise+gate -> dedup groupBy -> BPE merge-chain projection -> shard-window packing; only two post-extraction exchanges"),
         ("lakehouse_zorder", "z-order layout: Morton interleave as one codegen'd integer projection + ONE range exchange; stats-pruned read plans open a strict file subset"),
         ("corpus_heavy_hitters", "count-min sketch: combinable (row,bucket) cell agg (fixed rows x m size), probe join + min-over-rows estimate, TakeOrdered top-k"),
@@ -92,13 +88,11 @@ def main() -> None:
         ("gopher_quality", "Gopher shape rules: one codegen'd row-local projection — single-division ratios, no explode, no shuffle, no Python"),
         ("semdedup", "SemDeDup: broadcast centroid assignment (argmax window) -> within-cluster-only pair join on the cluster id (never a global cross join) -> distinct-drop anti-join"),
         ("bucketed_join", "co-located join over bucketed tables: both scans Bucketed: true, SortMergeJoin with NO Exchange below it — the only exchange is the 5-group final agg"),
-        ("image_near_dup", "perceptual image dedup: Arrow decode+dhash stage -> 4-band explode (8-byte keys only) -> band equi-join -> distinct pairs + bit_count filter"),
         ("fineweb_pipeline", "five published gates fused into ONE corpus scan (blocklist broadcast anti-join + codegen'd row-local cascade) -> single dedup exchange with WindowGroupLimit"),
         ("doc_lexical_diversity", "lexical diversity: one codegen'd row-local HOF projection (sorted-neighbour hapax test) — no explode, no shuffle"),
         ("url_blocklist", "UT1-style host gate: codegen'd host extraction + BroadcastHashJoin LeftAnti — the corpus never shuffles"),
         ("fix_mojibake", "mojibake repair: one codegen'd 28-step replace chain — no UDF, no shuffle"),
         ("jsonl_roundtrip", "native distributed jsonl.gz sink -> explicit-schema PERMISSIVE scan with corrupt-record quarantine"),
-        ("multimodal_audio_decode", "audio modality: two Arrow stages (synth RIFF bytes -> chunk-walk decode), payload pruned after decode, no shuffle"),
         ("pack_sequences", "sequence packing: hash-shard key + per-shard window cumulative sum — integer-only, one shuffle"),
         ("mixture_sample", "token-budget mixture sampling: tiny combinable per-source agg + 1-row weight total + broadcast rate table; the corpus never shuffles"),
         ("bigram_lm_score", "bigram LM: one gram explode, combinable gram/context count aggs, broadcast 1-row vocab, score re-joins keyed on gram/context"),
@@ -139,7 +133,7 @@ def main() -> None:
         ("embedding_kmeans", "fixed-point k-means: per iteration the corpus crossJoins a ONE-row broadcast centroid array (row-local HOF argmin, no amplification) + ONE combinable k*dim-cell sum/count shuffle; no float mean anywhere"),
         ("lang_cardinality_hll", "grouped HLL: the register groupBy keys on (grp, bucket) — <= m cells per group, map-side combinable; estimator runs per group on the tiny register table"),
         ("badwords_gate", "banned-word gate: ONE codegen'd projection (split + array_intersect with a literal term array) — no explode, no shuffle, no Python; fuses onto the scan"),
-        ("dedup_simhash_pairs", "Manku banded-Hamming near-dup pairs: band equi-join SMJ on (band, val), exact bit_count(xor) filter. The static dump below repeats the signature subtree on both join sides, but at RUNTIME the deterministic JVM aggregate collapses under ReusedExchange and signatures compute ONCE (see the header NOTE; asserted on the executed plan in tests/test_simhash_pairs.py) — the contrast to the image path's unsharable Arrow decode"),
+        ("dedup_simhash_pairs", "Manku banded-Hamming near-dup pairs: band equi-join SMJ on (band, val), exact bit_count(xor) filter. The static dump below repeats the signature subtree on both join sides, but at RUNTIME the deterministic JVM aggregate collapses under ReusedExchange and signatures compute ONCE (see the header NOTE; asserted on the executed plan in tests/test_simhash_pairs.py)"),
         ("dedup_cluster_policy", "cluster retention policy: the LSH/CC label frame LEFT-joins back over the corpus, then size count + quality rank run as two Windows over the SAME cluster_id hash distribution — one policy exchange total; quality is a codegen'd projection on the probe side"),
         ("doc_sentences", "sentence segmentation: boundary regexp_replace -> split -> trim/filter/fold HOFs, all ONE codegen'd projection over the scan — no explode, no shuffle, no Python"),
         ("tokenizer_fertility", "fertility audit: row-local token counts -> ONE combinable groupBy(lang) — partial_sum/partial_count before the exchange; five longs per language cross the wire"),

@@ -85,3 +85,16 @@ def test_cli_spans_flag(spark, tmp_path):  # noqa: F811
         "url", "line_no", "field", "key_start", "key_end",
         "value_start", "value_end", "value",
     }
+
+
+def test_cli_rejects_sweep_only_flags_before_spark(tmp_path, capsys):
+    """The job's argument checks run before any session: a sweep-only flag
+    with another parser is a usage error (exit 2) that names the check."""
+    from universal_key_value_based_text_processing_with_ocr_spark.__main__ import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["--input", str(tmp_path / "pages"), "--results", str(tmp_path / "res"),
+              "--parser", "blended", "--dedup-content"])
+    assert exc.value.code == 2
+    assert "dedup_content requires the sweep parser" in capsys.readouterr().err
+    assert not (tmp_path / "res").exists()

@@ -534,26 +534,6 @@ def test_asof_join_ignores_null_ts_right_rows(spark):  # noqa: F811
     assert row.value_right is None and row.ts_right is None
 
 
-def test_decode_image_stats_contains_bad_payloads(spark):  # noqa: F811
-    """One corrupt payload must not fail the stage: it becomes an
-    auditable format='error' row with NULL stats; good rows unaffected."""
-    from universal_key_value_based_text_processing_with_ocr_spark.operators import (
-        imagecodec,
-        multimodal,
-    )
-
-    rows = [
-        (1, imagecodec.synth_image(0)),
-        (2, imagecodec.synth_image(3)[:20]),       # truncated GIF
-        (3, b"\xff\xd8\xff\xe0 not decodable"),     # jpeg-ish garbage
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r.doc_id: r for r in multimodal.decode_image_stats(df).collect()}
-    assert got[1].format == "png" and got[1].brightness is not None
-    assert got[2].format == "error" and got[2].brightness is None
-    assert got[3].format == "error" and got[3].width is None
-
-
 # --- third review pass -------------------------------------------------------
 
 

@@ -112,75 +112,6 @@ def test_semdedup_zero_centroids_returns_no_rows(spark):  # noqa: F811
     assert semdedup(emb, n_centroids=0, tau=0.3).collect() == []
     assert semdedup(emb, n_centroids=1, tau=0.99).count() == 3
 
-def test_dhash16_known_answers_and_null_path():
-    """dhash16 over REAL decoded synth images must equal the independent
-    closed-form replay; a pixel-less decode yields None; a constant image
-    hashes to 0 (no strict gradient anywhere)."""
-    from universal_key_value_based_text_processing_with_ocr_spark.operators import imagecodec as ic
-
-    def analytic(d):
-        w, h = 8 + d % 9, 8 + (3 * d) % 9
-        kind = d % 4
-        x = np.arange(w)[None, :]
-        y = np.arange(h)[:, None]
-        base = 7 * x + 13 * y + 31 * d
-        if kind in (1, 3):
-            L = 1000 * (base % 256)
-        else:
-            L = 299 * (base % 256) + 587 * ((base + 57) % 256) + 114 * ((base + 114) % 256)
-        cx = (np.arange(w) * 5) // w
-        cy = (np.arange(h) * 4) // h
-        idx = (cy[:, None] * 5 + cx[None, :]).ravel()
-        s = np.bincount(idx, weights=L.ravel(), minlength=20).astype(np.int64).reshape(4, 5)
-        n = np.bincount(idx, minlength=20).astype(np.int64).reshape(4, 5)
-        hsh = 0
-        for r in range(4):
-            for c in range(4):
-                if s[r, c] * n[r, c + 1] > s[r, c + 1] * n[r, c]:
-                    hsh |= 1 << (r * 4 + c)
-        return hsh
-
-    for d in list(range(40)) + [97, 255, 256, 499]:
-        got = ic.dhash16(ic.decode_image(ic.synth_image(d)))
-        assert got == analytic(d), d
-        assert 0 <= got < (1 << 16)
-
-    # pixel-less decode (bare GIF header, the header-only convention)
-    assert ic.dhash16({"pixels": None, "channels": 3, "width": 4, "height": 4}) is None
-    # constant image -> all comparisons non-strict -> hash 0
-    flat = {"pixels": bytes([128] * 36), "channels": 1, "width": 6, "height": 6}
-    assert ic.dhash16(flat) == 0
-    # single-pixel-wide image: every cell pair at least defined, no crash
-    thin = {"pixels": bytes(range(8)), "channels": 1, "width": 1, "height": 8}
-    assert ic.dhash16(thin) == 0  # one cell column occupied -> empty right cells
-
-
-def test_image_near_dup_band_join_equals_bruteforce(spark):  # noqa: F811
-    """The 4-band candidate join must return EXACTLY the all-pairs
-    hamming <= 1 set (pigeonhole guarantee), verified brute-force."""
-    import itertools
-
-    from universal_key_value_based_text_processing_with_ocr_spark.operators import (
-        imagecodec as ic,
-    )
-    from universal_key_value_based_text_processing_with_ocr_spark.operators.multimodal import (
-        image_near_dup,
-        synth_images,
-    )
-
-    docs = spark.range(120).withColumnRenamed("id", "doc_id")
-    got = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in image_near_dup(synth_images(docs), max_hamming=1).collect()
-    }
-    hashes = {d: ic.dhash16(ic.decode_image(ic.synth_image(d))) for d in range(120)}
-    want = set()
-    for a, b in itertools.combinations(range(120), 2):
-        ham = bin(hashes[a] ^ hashes[b]).count("1")
-        if ham <= 1:
-            want.add((a, b, ham))
-    assert got == want
-
 
 def test_mojibake_map_matches_real_codecs_and_repairs(spark):  # noqa: F811
     """Every MOJIBAKE_MAP entry must be the REAL cp1252 misreading of the
@@ -438,48 +369,6 @@ def test_pack_sequences_contiguous_and_chunk_math(spark):  # noqa: F811
             assert r.last_chunk == last_tok // 256
             if r.n_tokens == 0:
                 assert r.first_chunk == r.last_chunk
-
-
-def test_wav_codec_hostile_inputs_and_containment(spark):  # noqa: F811
-    """Truncated/oversized/misdeclared RIFF payloads raise contained
-    ValueError (never a huge allocation); the Arrow stage turns them into
-    auditable error rows; stereo and chunk-order variants decode."""
-    import struct
-
-    from universal_key_value_based_text_processing_with_ocr_spark.operators import audiocodec as ac
-    from universal_key_value_based_text_processing_with_ocr_spark.operators.multimodal import (
-        decode_audio_stats,
-    )
-
-    good = ac.synth_wav(3)
-    # stereo round trip
-    st = ac.decode_wav(ac.encode_wav(44100, [1, -1, 100, -100], channels=2))
-    assert st["channels"] == 2 and st["n_frames"] == 2
-
-    hostile = [
-        b"",  # empty
-        b"RIFF" + b"\x00" * 4,  # truncated header
-        b"RIFX" + good[4:],  # wrong magic
-        good[:30],  # truncated mid-fmt
-        # data chunk declaring more bytes than exist
-        good[:40] + struct.pack("<I", 2 ** 31) + good[44:],
-        # absurd declared sample count via forged data length
-        b"RIFF" + struct.pack("<I", 36) + b"WAVEfmt " + struct.pack("<I", 16)
-        + struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-        + b"data" + struct.pack("<I", 0xFFFFFFF0),
-        # float PCM (format 3): the compressed/float library seam
-        b"RIFF" + struct.pack("<I", 36 + 4) + b"WAVEfmt " + struct.pack("<I", 16)
-        + struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)
-        + b"data" + struct.pack("<I", 4) + b"\x00" * 4,
-    ]
-    for h in hostile:
-        with pytest.raises(ValueError):
-            ac.decode_wav(h)
-
-    rows = [(0, bytearray(good)), (1, bytearray(b"not audio at all")), (2, None)]
-    df = spark.createDataFrame(rows, schema="doc_id long, payload binary")
-    got = {r.doc_id: r.format for r in decode_audio_stats(df).collect()}
-    assert got == {0: "wav", 1: "error", 2: "error"}
 
 
 def test_mixture_sample_hits_targets_and_is_deterministic(spark):  # noqa: F811

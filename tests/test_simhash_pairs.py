@@ -78,10 +78,9 @@ def test_parameter_guards(spark):  # noqa: F811
 
 
 def test_signature_stage_reused_not_recomputed(spark):  # noqa: F811
-    """Unlike the image path (Arrow stages never canonicalize equal, the
-    decode runs twice), the SimHash signature aggregate is deterministic
-    JVM work — the self-join's two references must collapse under
-    ReuseExchange so signatures compute ONCE."""
+    """The SimHash signature aggregate is deterministic JVM work — the
+    self-join's two references must collapse under ReuseExchange so
+    signatures compute ONCE."""
     from universal_key_value_based_text_processing_with_ocr_spark.operators.dedup import (
         simhash_near_dup_pairs,
     )

@@ -98,12 +98,25 @@ def test_streamed_matches_batch_extraction(spark, tmp_path, parser):  # noqa: F8
 
 
 def test_streamed_bad_options_raise_before_any_commit(spark, tmp_path):  # noqa: F811
-    """The batch job's argument checks run in the first epoch, before it
-    commits anything: no results, fingerprint or audit snapshot."""
+    """The batch job's argument checks run before the stream starts: a
+    plain ValueError and no results, fingerprint or audit snapshot."""
     pages_dir = _write_pages_files(spark, tmp_path, [(0, 5)])
     results, audit = str(tmp_path / "results"), str(tmp_path / "audit")
-    with pytest.raises(Exception, match="dedup_content requires the sweep parser"):
+    with pytest.raises(ValueError, match="dedup_content requires the sweep parser"):
         streamed_extraction_job(spark, pages_dir, results, audit, parser="blended",
                                 dedup_content=True)
     for path in (results, results + "_fps", audit):
         assert not SnapshotTable(path).exists()
+
+
+def test_streamed_bad_options_raise_on_empty_input(spark, tmp_path):  # noqa: F811
+    """An empty input directory runs no epoch, yet a bad option combination
+    still raises ValueError, and neither a checkpoint nor a table is written."""
+    pages_dir = tmp_path / "pages"
+    pages_dir.mkdir()
+    results, ckpt = str(tmp_path / "results"), tmp_path / "ckpt"
+    with pytest.raises(ValueError, match="spans_path requires the sweep parser"):
+        streamed_extraction_job(spark, str(pages_dir), results, checkpoint_dir=str(ckpt),
+                                parser="boxorder", spans_path=str(tmp_path / "spans"))
+    assert not ckpt.exists()
+    assert not SnapshotTable(results).exists()

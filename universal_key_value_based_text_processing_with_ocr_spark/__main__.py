@@ -76,8 +76,20 @@ def main(argv: list[str] | None = None) -> int:
         "output) to this snapshot-table dir; sweep parser only",
     )
     args = parser.parse_args(argv)
-    if (args.dedup_content or args.spans) and args.parser != "sweep":
-        parser.error("--dedup-content and --spans require the sweep parser")
+    job = dict(
+        audit_path=args.audit,
+        num_partitions=args.partitions,
+        debug_path=args.debug,
+        parser=args.parser,
+        dedup_content=args.dedup_content,
+        spans_path=args.spans,
+    )
+    from .plans.pipeline import check_job_options
+
+    try:
+        check_job_options(**job)
+    except ValueError as exc:
+        parser.error(str(exc))
 
     from pyspark.sql import SparkSession
 
@@ -92,14 +104,6 @@ def main(argv: list[str] | None = None) -> int:
 
     ship_package(spark)
 
-    job = dict(
-        audit_path=args.audit,
-        num_partitions=args.partitions,
-        debug_path=args.debug,
-        parser=args.parser,
-        dedup_content=args.dedup_content,
-        spans_path=args.spans,
-    )
     if args.streaming:
         from .streaming import streamed_extraction_job
 

@@ -862,8 +862,7 @@ def simhash_near_dup_pairs(
     max_hamming: int = 3,
 ) -> DataFrame:
     """Text near-dup PAIRS from SimHash signatures via a banded Hamming
-    equi-join — Manku et al. 2007 (Google's web-crawl near-dup detector)
-    and the text twin of ``multimodal.image_near_dup``.
+    equi-join — Manku et al. 2007 (Google's web-crawl near-dup detector).
 
     The signature is banded into ``n_bands`` equal slices; two signatures
     within Hamming distance ``n_bands - 1`` must agree EXACTLY on at least
@@ -879,13 +878,11 @@ def simhash_near_dup_pairs(
     k = 3, which this shape reaches by ``bits=60, n_bands=4`` on the
     md5-60-bit seam (or xxhash64 via ``set_hash_impl``).
 
-    Physical shape vs ``image_near_dup``: the signature stage here is a
-    deterministic JVM aggregate, so the self-join's two references
-    collapse under ReuseExchange — signatures compute ONCE (asserted in
-    tests), where the image path's Arrow decode stages never canonicalize
-    equal and pay a second decode.  Band values shuffle <= n_bands small
-    rows per doc; at 10^12 docs the banked-signature side-table pattern
-    (the dedup fp-table discipline) applies unchanged."""
+    Physical shape: the signature stage is a deterministic JVM aggregate,
+    so the self-join's two references collapse under ReuseExchange —
+    signatures compute ONCE (asserted in tests).  Band values shuffle
+    <= n_bands small rows per doc; at 10^12 docs the banked-signature
+    side-table pattern (the dedup fp-table discipline) applies unchanged."""
     if bits % n_bands:
         raise ValueError("bits must divide evenly into n_bands bands")
     if not 0 <= max_hamming <= n_bands - 1:
@@ -913,8 +910,8 @@ def simhash_near_dup_pairs(
         ).alias("bv"),
     ).select("doc_id", "simhash", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
     # co-partitioned SMJ at any scale: both sides ARE the same corpus-sized
-    # table (see image_near_dup's note on why AQE broadcast is a toy-scale
-    # artifact here)
+    # table, so an AQE broadcast conversion is a toy-scale artifact (and a
+    # broadcast exchange could never be reused by the other side)
     bands = bands.repartition("band", "val").hint("shuffle_merge")
     a = bands.select(
         F.col("band"), F.col("val"),

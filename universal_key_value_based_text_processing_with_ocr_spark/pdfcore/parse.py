@@ -43,8 +43,8 @@ from __future__ import annotations
 import re
 import zlib
 
-#: hostile-input caps (same policy family as sources/warc.py and
-#: operators/imagecodec.py: a crafted payload must cost bounded work)
+#: hostile-input caps (same policy as sources/warc.py: a crafted payload
+#: must cost bounded work)
 MAX_INFLATED_BYTES = 1 << 26
 MAX_OBJECTS = 1 << 16
 MAX_PAGES = 4096

@@ -56,6 +56,34 @@ def _restores_job_description(job):
     return run
 
 
+def check_job_options(
+    configs=None,
+    parser: str = "sweep",
+    dedup_content: bool = False,
+    spans_path: str | None = None,
+    **other,
+):
+    """The extraction job's argument checks; returns ``configs`` compiled
+    for ``parser``.  Takes ``run_extraction_job``'s keyword arguments; the
+    ``other`` ones need no check.
+
+    ``parser`` names an entry of the extraction stage's one parser table
+    (``operators.extract.PARSERS``): the line sweep (reference parse_doc),
+    blended (+ the NIK re-scan), boxorder (the parse_doc_new0 block
+    analog) or config (``configs`` is a user config).  Only the sweep
+    emits the full schema; the others commit the compact one (no
+    n_bytes/extracted_text).  Run BEFORE any action: an argument typo or a
+    malformed config must not cost a full source scan + resume anti-join
+    first.  The CLI runs it before building a session, and the streaming
+    job before its stream starts."""
+    configs = compile_plan(configs, parser)
+    if dedup_content and parser != "sweep":
+        raise ValueError("dedup_content requires the sweep parser (extracted_text column)")
+    if spans_path is not None and parser != "sweep":
+        raise ValueError("spans_path requires the sweep parser (html-decode line coordinates)")
+    return configs
+
+
 @_restores_job_description
 def run_extraction_job(
     spark: SparkSession,
@@ -95,19 +123,7 @@ def run_extraction_job(
     key_end, value_start, value_end, value) — to its own snapshot table,
     crash-consistent with the results table (see the inline comment on
     commit order)."""
-    # ``parser`` names an entry of the extraction stage's one parser table
-    # (``operators.extract.PARSERS``): the line sweep (reference parse_doc),
-    # blended (+ the NIK re-scan), boxorder (the parse_doc_new0 block
-    # analog) or config (``configs`` is a user config).  Only the sweep
-    # emits the full schema; the others commit the compact one (no
-    # n_bytes/extracted_text).  Compiled BEFORE any action: an argument
-    # typo or a malformed config must not cost a full source scan + resume
-    # anti-join first.
-    configs = compile_plan(configs, parser)
-    if dedup_content and parser != "sweep":
-        raise ValueError("dedup_content requires the sweep parser (extracted_text column)")
-    if spans_path is not None and parser != "sweep":
-        raise ValueError("spans_path requires the sweep parser (html-decode line coordinates)")
+    configs = check_job_options(configs, parser, dedup_content, spans_path)
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.time()
     results_tbl = SnapshotTable(results_path)

@@ -81,11 +81,16 @@ def streamed_extraction_job(
     Exactly-once story: the batch job's url anti-join makes a replayed
     epoch (a crash between the sink commit and the checkpoint commit, or
     a restart without a checkpoint) commit nothing.  Returns the number
-    of epochs that committed rows and the results table's snapshot id."""
+    of epochs that committed rows and the results table's snapshot id.
+
+    The batch job's argument checks run before the stream starts, so a
+    bad option raises ``ValueError`` even when no epoch would run."""
     from ..lakehouse import SnapshotTable
     from ..plans import run_extraction_job
+    from ..plans.pipeline import check_job_options
     from ..sources import PAGES_SCHEMA
 
+    check_job_options(**job_kwargs)
     stream = (
         spark.readStream.schema(PAGES_SCHEMA).option("maxFilesPerTrigger", "4").parquet(pages_dir)
     )

@@ -1,9 +1,9 @@
-"""Containment fuzz across ALL image/audio codecs: arbitrary crawl bytes
+"""Containment fuzz across ALL image codecs: arbitrary crawl bytes
 (random soups, truncated/mutated real payloads, signature-prefixed
 garbage) must decode, raise ValueError, or sniff to None — never escape
 with another exception type and never allocate per claimed dims.  This is
-the per-row containment contract `decode_image_stats` relies on at
-corpus scale (one hostile payload must cost one error row, not a stage)."""
+the per-row containment contract a corpus-scale decode relies on (one
+hostile payload must cost one error row, not a stage)."""
 
 import random
 
@@ -14,9 +14,6 @@ from universal_key_value_based_text_processing_with_ocr_spark.operators import (
 )
 from universal_key_value_based_text_processing_with_ocr_spark.operators import (
     tiffcodec as tc,
-)
-from universal_key_value_based_text_processing_with_ocr_spark.operators import (
-    vp8lcodec as vc,
 )
 
 SIGS = [
@@ -63,7 +60,6 @@ def test_sniff_never_raises_on_soups():
     [
         (ic.synth_image, ic.decode_image),
         (ic.synth_jpeg, ic.decode_jpeg),
-        (vc.synth_webp, vc.decode_webp),
         (tc.synth_tiff, tc.decode_tiff),
     ],
 )
@@ -91,7 +87,6 @@ def test_truncations_contained():
     for synth, decode in [
         (ic.synth_image, ic.decode_image),
         (ic.synth_jpeg, ic.decode_jpeg),
-        (vc.synth_webp, vc.decode_webp),
         (tc.synth_tiff, tc.decode_tiff),
     ]:
         payload = synth(3)
@@ -102,22 +97,3 @@ def test_truncations_contained():
                 pass
             except Exception as e:  # noqa: BLE001
                 pytest.fail(f"{type(e).__name__} escaped truncation: {e}")
-
-
-def test_audio_decode_contained():
-    from universal_key_value_based_text_processing_with_ocr_spark.operators import (
-        audiocodec as ac,
-    )
-
-    rng = random.Random(3)
-    good = ac.synth_wav(5)
-    for _ in range(150):
-        mutated = bytearray(good)
-        for _k in range(rng.randrange(1, 5)):
-            mutated[rng.randrange(len(mutated))] = rng.randrange(256)
-        try:
-            ac.decode_wav(bytes(mutated))
-        except ValueError:
-            pass
-        except Exception as e:  # noqa: BLE001
-            pytest.fail(f"{type(e).__name__} escaped decode_wav: {e}")

@@ -1,13 +1,15 @@
 """Round-5 fix coverage: per-document NIK work budget, chunk-envelope
-TypeError guard."""
+TypeError guard, encode_png error contract."""
 
 from __future__ import annotations
 
+import struct
 import time
 
 import pytest
 
 from universal_key_value_based_text_processing_with_ocr_spark.kvcore import evaluate as ev
+from universal_key_value_based_text_processing_with_ocr_spark.operators import imagecodec as ic
 from universal_key_value_based_text_processing_with_ocr_spark.operators.extract import (
     parse_page_row,
 )
@@ -97,6 +99,11 @@ def test_chunk_envelope_mixed_type_column(tmp_path):
     assert summary["rows"] == 30
 
 
+def test_encode_png_rejects_mismatched_buffer():
+    with pytest.raises(ValueError, match="does not match"):
+        ic.encode_png(4, 4, bytes(5), color_type=0)
+
+
 def test_chunk_envelope_mixed_type_single_column(tmp_path):
     """The legacy single-column envelope hits the same mixed-type drift as
     the cols envelope and must also degrade instead of crashing."""
@@ -112,6 +119,15 @@ def test_chunk_envelope_mixed_type_single_column(tmp_path):
     summary = cat._write_chunk(list(entries), entries)
     assert "min" not in summary and "max" not in summary  # degraded, not crashed
     assert summary["rows"] == 3
+
+
+def test_sniff_png_rejects_spec_violating_dims():
+    """PNG dims above the spec's 2^31-1 cap are invalid and would overflow
+    the int32 metadata schema — the sniff must return None."""
+    ihdr = struct.pack(">IIBBBBB", 0x80000000, 5, 8, 0, 0, 0, 0)
+    assert ic.sniff_image_meta(ic.PNG_SIG + ic._chunk(b"IHDR", ihdr)) is None
+    ihdr = struct.pack(">IIBBBBB", 5, 0xFFFFFFFF, 8, 0, 0, 0, 0)
+    assert ic.sniff_image_meta(ic.PNG_SIG + ic._chunk(b"IHDR", ihdr)) is None
 
 
 def test_c4_line_clean_rules(spark):  # noqa: F811

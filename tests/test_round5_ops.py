@@ -112,6 +112,48 @@ def test_semdedup_zero_centroids_returns_no_rows(spark):  # noqa: F811
     assert semdedup(emb, n_centroids=0, tau=0.3).collect() == []
     assert semdedup(emb, n_centroids=1, tau=0.99).count() == 3
 
+def test_dhash16_known_answers_and_null_path():
+    """dhash16 over REAL decoded synth images must equal the independent
+    closed-form replay; a pixel-less decode yields None; a constant image
+    hashes to 0 (no strict gradient anywhere)."""
+    from universal_key_value_based_text_processing_with_ocr_spark.operators import imagecodec as ic
+
+    def analytic(d):
+        w, h = 8 + d % 9, 8 + (3 * d) % 9
+        kind = d % 4
+        x = np.arange(w)[None, :]
+        y = np.arange(h)[:, None]
+        base = 7 * x + 13 * y + 31 * d
+        if kind in (1, 3):
+            L = 1000 * (base % 256)
+        else:
+            L = 299 * (base % 256) + 587 * ((base + 57) % 256) + 114 * ((base + 114) % 256)
+        cx = (np.arange(w) * 5) // w
+        cy = (np.arange(h) * 4) // h
+        idx = (cy[:, None] * 5 + cx[None, :]).ravel()
+        s = np.bincount(idx, weights=L.ravel(), minlength=20).astype(np.int64).reshape(4, 5)
+        n = np.bincount(idx, minlength=20).astype(np.int64).reshape(4, 5)
+        hsh = 0
+        for r in range(4):
+            for c in range(4):
+                if s[r, c] * n[r, c + 1] > s[r, c + 1] * n[r, c]:
+                    hsh |= 1 << (r * 4 + c)
+        return hsh
+
+    for d in list(range(40)) + [97, 255, 256, 499]:
+        got = ic.dhash16(ic.decode_image(ic.synth_image(d)))
+        assert got == analytic(d), d
+        assert 0 <= got < (1 << 16)
+
+    # pixel-less decode (bare GIF header, the header-only convention)
+    assert ic.dhash16({"pixels": None, "channels": 3, "width": 4, "height": 4}) is None
+    # constant image -> all comparisons non-strict -> hash 0
+    flat = {"pixels": bytes([128] * 36), "channels": 1, "width": 6, "height": 6}
+    assert ic.dhash16(flat) == 0
+    # single-pixel-wide image: every cell pair at least defined, no crash
+    thin = {"pixels": bytes(range(8)), "channels": 1, "width": 1, "height": 8}
+    assert ic.dhash16(thin) == 0  # one cell column occupied -> empty right cells
+
 
 def test_mojibake_map_matches_real_codecs_and_repairs(spark):  # noqa: F811
     """Every MOJIBAKE_MAP entry must be the REAL cp1252 misreading of the

@@ -4,8 +4,7 @@ encoder feature the independent forward twin of one decoder path),
 TIFF-LZW early-change/dict-reset stress, hostile-input hardening, and
 dispatcher/sniffer routing.
 
-The pixel pattern is the synth_tiff closed form, so these tests also pin
-the contract the DuckDB oracle for `multimodal_tiff_decode` relies on.
+The pixel pattern is the synth_tiff closed form.
 """
 
 import struct

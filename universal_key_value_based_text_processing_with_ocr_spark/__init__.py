@@ -19,7 +19,7 @@ Layers
                ordered main-content lines (text-density + link-density).
 ``operators``  Spark DataFrame operators: the extraction pipeline
                (mapInPandas stages), dedup family, similarity search, text
-               analysis.
+               analysis, and still-image codecs that only their tests reach.
 ``sources``    pages-table reader + deterministic synthetic pages generator.
 ``lakehouse``  Iceberg-shaped snapshot/commit/resume layer over Parquet.
 ``plans``      pipeline assembly, partitioning & salting policy.

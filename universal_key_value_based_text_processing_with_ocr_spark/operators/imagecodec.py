@@ -1,9 +1,9 @@
-"""Pure-stdlib image codecs for the multimodal decode seam.
+"""Pure-stdlib image codecs: decoded-pixel statistics without Pillow.
 
 The container has no Pillow/libvips/ffmpeg, but PNG needs only ``zlib``
 (stdlib) plus the five RFC-2083 scanline filters, and uncompressed BMP /
-GIF headers need only ``struct``.  This module turns the multimodal
-metadata operator from header-sniffing into REAL decoded-pixel statistics
+GIF headers need only ``struct``.  This module goes past header-sniffing
+to REAL decoded-pixel statistics
 (reference analog: the brightness/contrast probe of the OCR preprocessing
 family, /root/reference/ocrfw/preprocessing.py:48-53) with no new
 dependency.
@@ -1023,10 +1023,6 @@ def decode_image(payload: bytes) -> dict:
             return decode_gif(payload)
         if payload[:2] == b"\xff\xd8":
             return decode_jpeg(payload)
-        if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-            from .vp8lcodec import decode_webp  # lazy: vp8lcodec imports us
-
-            return decode_webp(payload)
         if payload[:4] in (b"II*\x00", b"MM\x00*"):
             from .tiffcodec import decode_tiff  # lazy: tiffcodec imports us
 
@@ -1045,9 +1041,9 @@ def sniff_image_meta(payload: bytes) -> dict | None:
 
     Returns ``{"format", "width", "height"}`` for recognised PNG / BMP /
     GIF / JPEG / WebP / TIFF headers, ``None`` for anything else — the
-    caller decides the fallback.  (Progressive JPEG / lossy-WebP pixel
-    DECODE still needs a real library; baseline JPEG, lossless WebP and
-    baseline TIFF decode in-repo.)
+    caller decides the fallback.  (WebP pixel DECODE still needs a real
+    library; baseline and progressive JPEG and baseline TIFF decode
+    in-repo.)
     Malformed-but-signatured headers (truncated IHDR, zero dims, dims
     past the PNG spec's 2^31-1 cap) also return None: a sniff must never
     raise, it runs on arbitrary crawl bytes."""

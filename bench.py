@@ -98,7 +98,6 @@ def main() -> None:
         "dedup_exact",
         "dedup_minhash_lsh",
         "dedup_ngram_jaccard",
-        "similarity_topk",
         "events_window_agg",
         "events_sessionize",
         "doc_langid",
@@ -132,7 +131,7 @@ def main() -> None:
     new_queries = [
         "dedup_incremental_bloom", "pages_clean_corpus", "pages_host_stats",
         # round 4
-        "similarity_topk_lsh", "dedup_paragraphs",
+        "dedup_paragraphs",
         "url_normalize", "corpus_familiarity", "events_asof_join",
         "mask_repeated_ngrams",
         # round 5
@@ -142,7 +141,6 @@ def main() -> None:
         # round 5, second session
         "doc_lexical_diversity", "url_blocklist", "fix_mojibake",
         "jsonl_roundtrip", "bucketed_join", "fineweb_pipeline",
-        "semdedup",
         "partitioned_scan", "doc_nfc_normalize", "bigram_lm_score",
         "pack_sequences", "mixture_sample",
         "chunk_documents",
@@ -163,19 +161,18 @@ def main() -> None:
         # wall time is dominated by the per-run temp-table build, not the
         # operator — pinned functionally in tests/test_lakehouse_merge.py)
         "bpe_encode", "dedup_incremental_minhash",
-        # round 5, eighth session (PQ pair + the eval/governance batch;
+        # round 5, eighth session (the eval/governance batch;
         # lakehouse_compact excluded for the same temp-table-build reason
         # as merge/delete)
-        "pq_encode", "similarity_topk_pq", "extraction_eval",
+        "extraction_eval",
         "host_boilerplate_strip", "url_templates", "doc_script_detect",
-        "dedup_incremental_embedding",
         # round 5, tenth session (the full-pipeline capstone, z-order
         # clustering, count-min sketch)
         "training_batch_plan", "lakehouse_zorder", "corpus_heavy_hitters",
-        # round 5, twelfth session (mergeable-sketch + clustering family +
-        # the C4 banned-word gate; streamed_cardinality_hll excluded like
-        # the other streaming queries — staging/checkpoint setup dominates)
-        "corpus_cardinality_hll", "embedding_kmeans",
+        # round 5, twelfth session (mergeable-sketch family + the C4
+        # banned-word gate; streamed_cardinality_hll excluded like the
+        # other streaming queries — staging/checkpoint setup dominates)
+        "corpus_cardinality_hll",
         "lang_cardinality_hll", "badwords_gate",
         # round 5, final session (Manku banded-Hamming text near-dup)
         "dedup_simhash_pairs",
@@ -183,11 +180,8 @@ def main() -> None:
         # tokenizer-cost audit + containment/readability/quota batch)
         "dedup_cluster_policy", "doc_sentences", "tokenizer_fertility",
         "dedup_containment", "doc_readability", "host_quota_sample",
-        "bitext_mine",
-        # round 5, session 14 (Luhn cards, code-switch, fuzzy decontam,
-        # int8 quantization)
+        # round 5, session 14 (Luhn cards, code-switch, fuzzy decontam)
         "scrub_cards", "code_switch", "decontaminate_fuzzy",
-        "embedding_quantize",
         # round 5, session 15 (histogram Gini, MAD outliers, PMI pairs;
         # streamed_length_quantiles excluded like the other streaming
         # queries — staging/checkpoint setup dominates its wall time)
@@ -195,9 +189,8 @@ def main() -> None:
         "ip_geo_join", "invisible_chars", "events_rolling_agg",
         "homoglyph_audit", "events_pivot",
         # round 5, session 16 (RSS/Atom feed discovery parse + pointer-
-        # doubling redirect canonicalisation; embedding_near_dup_lsh
-        # joins the timed set now that its scoring is Arrow-vectorised)
-        "feed_parse", "redirect_resolve", "embedding_near_dup_lsh",
+        # doubling redirect canonicalisation)
+        "feed_parse", "redirect_resolve",
         "html_outline", "section_chunks", "page_directives",
         "jsonld_extract",
     ]
@@ -241,21 +234,6 @@ def main() -> None:
     md5_lsh_sec = round(min(md5_lsh_times), 3)
     hll_xx_sec = round(min(hll_xx_times), 3)
 
-    # --- ANN recall@10 vs the exact scan (quality, not time) -------------
-    from universal_key_value_based_text_processing_with_ocr_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    exact = {(r.query_id, r.neighbor_id) for r in similarity.cosine_topk(emb, 5, 10).collect()}
-    recall = {}
-    for label, fn in [
-        ("lsh_multiprobe", similarity.lsh_bucketed_topk),
-        ("ivf", similarity.ivf_topk),
-        ("pq_adc", similarity.pq_topk),
-        ("pq_adc_rerank", similarity.pq_topk_rerank),
-    ]:
-        approx = {(r.query_id, r.neighbor_id) for r in fn(emb, 5, 10).collect()}
-        recall[label] = round(len(exact & approx) / max(1, len(exact)), 3)
-
     # --- sf1 extraction point (VERDICT r3 #6): 10x the headline corpus ----
     # Exposes partition-policy or memory cliffs the 12k-doc scale hides.
     # Same production shape (materialised scan -> salted repartition ->
@@ -289,7 +267,6 @@ def main() -> None:
         "cpus": CPUS,
         "extraction_docs": extracted,
         "extraction_docs_per_sec": docs_per_sec,
-        "ann_recall_at_10": recall,
         "bench_reps_best_of": reps,
         # round-3+ queries, timed identically but outside the summed total
         # (keeps `value` comparable with earlier rounds)
@@ -328,10 +305,9 @@ def main() -> None:
     (REPO / "BENCH" / "last_run.json").write_text(json.dumps(out, indent=1))
     out["full_record_file"] = "BENCH/last_run.json"
     newest = [
-        "pdf_extract", "dedup_incremental_embedding", "dedup_incremental_minhash",
+        "pdf_extract", "dedup_incremental_minhash",
         "dedup_simhash_pairs", "dedup_cluster_policy",
-        "dedup_containment", "bitext_mine",
-        "embedding_near_dup_lsh", "feed_parse", "redirect_resolve",
+        "dedup_containment", "feed_parse", "redirect_resolve",
         "html_outline", "section_chunks", "page_directives",
         "jsonld_extract",
     ]

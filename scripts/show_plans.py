@@ -67,12 +67,8 @@ def main() -> None:
         ("dedup_ngram_jaccard", "stop-shingle aggregate + broadcast anti-join, then bounded-group pair explode (no shingle-table self-join, no persist)"),
         ("dedup_incremental_bloom", "committed corpus collapses to a bit_or Bloom sketch; batch probes via broadcast join on word_idx — neither payload side shuffles; exact semi-join only for candidates"),
         ("pages_clean_corpus", "the production DAG in one job: fused extract stage -> codegen'd normalise+gate -> single dedup groupBy"),
-        ("similarity_topk", "broadcast of the small query side; per-query window top-k"),
         ("anti_join_resume", "left anti join (resume predicate shape)"),
-        ("embedding_near_dup_lsh", "sub-quadratic near-dup: probe-key explode + equi-join on the sign bucket — no CartesianProduct"),
-        ("similarity_topk_ivf", "IVF-flat: broadcast centroid assignment (argmax window), candidate scan joined on disjoint cell ids"),
         ("corpus_top_terms", "TakeOrderedAndProject top-n (no single-partition Exchange over the vocabulary)"),
-        ("similarity_topk_lsh", "hyperplane-bucket LSH: the 386 probe keys explode on the BROADCAST query side (Generate under BroadcastExchange); the corpus computes its bucket once and joins by plain equality — never amplified"),
         ("dedup_paragraphs", "corpus-level line dedup: posexplode -> skew-safe (line, doc) pair-distinct then combinable count -> anti-join -> per-doc array_sort reassembly; a viral line spreads across reducers instead of piling on one"),
         ("mask_repeated_ngrams", "substring dedup: row-local positional n-grams (one HOF, no text blow-up) -> skew-safe (gram, doc) pair-distinct + combinable count -> semi-join -> covered-position anti-join -> reassembly"),
         ("pages_content_dedup", "the --dedup-content path: within-batch mirror window + Bloom sketch broadcast probe of the committed fp side-table + exact semi-join for candidates only"),
@@ -86,7 +82,6 @@ def main() -> None:
         ("dsir_importance", "DSIR: combinable (doc, bucket) feature aggs; the bucket ratio table reaches the features via BroadcastHashJoin; totals are 1-row cross joins"),
         ("doc_keywords", "keyword top-k: skew-safe pair-distinct df + term-keyed join + WindowGroupLimit rank pushdown (no full sort of the score table)"),
         ("gopher_quality", "Gopher shape rules: one codegen'd row-local projection — single-division ratios, no explode, no shuffle, no Python"),
-        ("semdedup", "SemDeDup: broadcast centroid assignment (argmax window) -> within-cluster-only pair join on the cluster id (never a global cross join) -> distinct-drop anti-join"),
         ("bucketed_join", "co-located join over bucketed tables: both scans Bucketed: true, SortMergeJoin with NO Exchange below it — the only exchange is the 5-group final agg"),
         ("fineweb_pipeline", "five published gates fused into ONE corpus scan (blocklist broadcast anti-join + codegen'd row-local cascade) -> single dedup exchange with WindowGroupLimit"),
         ("doc_lexical_diversity", "lexical diversity: one codegen'd row-local HOF projection (sorted-neighbour hapax test) — no explode, no shuffle"),
@@ -122,15 +117,11 @@ def main() -> None:
         ("pages_field_spans", "END-TO-END span surface: pages -> html decode -> spans fused in ONE narrow Arrow stage on one scan — zero exchanges"),
         ("lakehouse_delete", "merge-on-read read path: delete keys applied as a BROADCAST left-anti hash join per chunk-age group; post-delete appends scan clean — never a table-wide sort-merge"),
         ("bpe_encode", "tokenizer inference: the whole merge chain is ONE codegen'd Project over the scan — zero UDFs, zero exchanges"),
-        ("pq_encode", "product quantization: corpus crossJoins the ONE-row broadcast codebook, per-subspace argmin inside row-local HOFs — the corpus branch has NO Exchange and is never amplified; only the final m-codes posexplode fans out (ints, not vectors)"),
-        ("similarity_topk_pq", "ADC top-k: broadcast (query x LUT) table against the encoded-code scan — the corpus side carries 8 ints per doc, never the 256-byte vector; one window top-k at the end"),
         ("extraction_eval", "token-F1 eval: two tagged explodes union into ONE combinable (id, token) agg then a combinable per-id least-fold — both exchange keys carry the doc id, so corpus token skew cannot concentrate"),
         ("host_boilerplate_strip", "per-host boilerplate: (host, line, doc) pair-distinct spreads a mega-host's banner over all reducers; per-(host,line) count and host totals both map-side combinable; frequent set broadcast into the anti-join"),
         ("url_templates", "trap mining: codegen'd regex template projection -> distinct on the full triple (skew-safe) -> two combinable aggs + a one-row-per-host join — no UDF, no explode"),
         ("doc_script_detect", "script detection: six char-class strip counts + argmax chain, all ONE codegen'd projection over the scan — zero exchanges, zero Python"),
-        ("dedup_incremental_embedding", "incremental embedding dedup: batch-side Hamming<=1 probe explode equi-joins the persisted bucket index; exact cosine only on the candidate sliver; committed corpus never re-hashed"),
         ("corpus_cardinality_hll", "HLL cardinality: shingle Generate -> codegen'd bucket/rho projection -> ONE combinable max groupBy of <=256 cells; estimator + LC ladder run on the tiny register table (broadcast back onto it)"),
-        ("embedding_kmeans", "fixed-point k-means: per iteration the corpus crossJoins a ONE-row broadcast centroid array (row-local HOF argmin, no amplification) + ONE combinable k*dim-cell sum/count shuffle; no float mean anywhere"),
         ("lang_cardinality_hll", "grouped HLL: the register groupBy keys on (grp, bucket) — <= m cells per group, map-side combinable; estimator runs per group on the tiny register table"),
         ("badwords_gate", "banned-word gate: ONE codegen'd projection (split + array_intersect with a literal term array) — no explode, no shuffle, no Python; fuses onto the scan"),
         ("dedup_simhash_pairs", "Manku banded-Hamming near-dup pairs: band equi-join SMJ on (band, val), exact bit_count(xor) filter. The static dump below repeats the signature subtree on both join sides, but at RUNTIME the deterministic JVM aggregate collapses under ReusedExchange and signatures compute ONCE (see the header NOTE; asserted on the executed plan in tests/test_simhash_pairs.py)"),
@@ -140,11 +131,9 @@ def main() -> None:
         ("dedup_containment", "asymmetric near-subset pairs: the SAME df-capped shingle candidate machinery as the exact jaccard (shared repartition + ReuseExchange), only the scoring projection differs — per-side |A-and-B|/|A| with an either-direction threshold"),
         ("doc_readability", "Flesch reading-ease: words/sentences/vowel-group syllables all row-local regex counts folded into one codegen'd projection — no exchange"),
         ("host_quota_sample", "per-host quota: md5-draw row_number per host compiles to WindowGroupLimit — map tasks pre-prune a mega-host to k rows BEFORE the exchange (asserted in tests)"),
-        ("bitext_mine", "margin bitext mining: cross-score is the Arrow block matmul (broadcast tgt, ONE narrow mapInPandas src stage — bit-identical to the JVM HOF fold, ~9x faster; Spark evaluates HOF lambdas interpreted) into integer micro-unit cosines, then rank + neighbourhood-sum window pairs over src then tgt distributions (2 exchanges) and a final per-src argmax reusing the src distribution; at corpus scale the scorer seeds from the ANN shortlist instead"),
         ("scrub_cards", "Luhn-validated card redaction: regexp_extract_all + filter/aggregate HOFs (integer Luhn, literal-replace fold) in ONE codegen'd projection — no explode, no shuffle, no Python"),
         ("code_switch", "per-line language ID: split -> per-line stopword CASE ladder -> adjacency fold, all row-local array arithmetic in one projection — zero exchanges"),
         ("decontaminate_fuzzy", "fuzzy decontamination: corpus minhash signature (the SAME combinable groupBy the dedup family shares) + BROADCAST eval-set signatures; the (seed,minhash) agreement join never shuffles the corpus; final (doc,probe) count combinable"),
-        ("embedding_quantize", "int8 quantization: posexplode -> combinable 64-row absmax agg -> ONE-row scale array broadcast back over the vectors (BroadcastNestedLoopJoin of a single row) -> codegen'd zip_with integer rounding"),
         ("corpus_gini", "exact histogram Gini: combinable (lang, x) histogram -> window cumsum over HISTOGRAM rows (tied-block rank-sum in DECIMAL(38,0)) -> one per-lang agg; the corpus is never globally sorted"),
         ("length_outliers", "median+MAD gate: TWO stacked histogram-percentile passes (each combinable agg + histogram window) joined back as tiny per-lang tables — the corpus scans, never sorts"),
         ("pmi_pairs", "windowed collocations: row-local HOF pair generation (no text into Generate) -> combinable (a,b) and unigram aggs -> 1-row broadcast totals -> TakeOrderedAndProject top-k"),

@@ -29,7 +29,7 @@ osql = e.oracle_sql()
 window = sys.argv[2:] or list(qs)[:50]
 
 con = duckdb.connect()
-for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
+for t in "region nation customer supplier part orders lineitem events documents".split():
     p = Path(SF) / f"{t}.parquet"
     if p.exists():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")

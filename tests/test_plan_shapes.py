@@ -64,32 +64,6 @@ def test_fuzzy_join_is_broadcast(spark):  # noqa: F811
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_similarity_topk_broadcasts_queries(spark):  # noqa: F811
-    from universal_key_value_based_text_processing_with_ocr_spark.operators.similarity import (
-        cosine_topk,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    plan = _plan(cosine_topk(emb))
-    assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def test_embedding_near_dup_lsh_is_not_all_pairs(spark):  # noqa: F811
-    """The scale path must be an equi-join on the probe key — never a
-    CartesianProduct/BroadcastNestedLoopJoin over the full corpus."""
-    from universal_key_value_based_text_processing_with_ocr_spark.operators.similarity import (
-        embedding_near_dup_lsh,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    plan = _plan(embedding_near_dup_lsh(emb, threshold=0.2))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # pair generation meets on the bucket key: either a hash/sort-merge
-    # equi-join or the cogrouped per-bucket block scorer — never all-pairs
-    assert "Join" in plan or "FlatMapCoGroupsInPandas" in plan
-
-
 def test_corpus_top_terms_avoids_global_window(spark):  # noqa: F811
     """Top-n must plan as TakeOrderedAndProject (per-partition top-n + n-row
     merge), not a single-partition Exchange feeding a global row_number over
@@ -230,20 +204,6 @@ def test_frequency_aggs_are_skew_capped(spark):  # noqa: F811
         assert "partial_count" in plan, op.__name__
 
 
-def test_lsh_topk_corpus_side_not_exploded(spark):  # noqa: F811
-    """The multi-probe explode must sit under the broadcast (query) side;
-    already asserted in round-4 fixes but pinned here with the other
-    plan-shape claims."""
-    from universal_key_value_based_text_processing_with_ocr_spark.operators.similarity import (
-        lsh_bucketed_topk,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    plan = _plan(lsh_bucketed_topk(emb))
-    assert plan.count("Generate explode") == 1
-    assert plan.index("Generate explode") > plan.index("BroadcastExchange")
-
-
 def test_dsir_feature_aggs_combinable_ratio_broadcast(spark):  # noqa: F811
     """The per-doc feature agg keeps a map-side partial phase and the
     bucket ratio table (<= `buckets` rows) reaches the features via a
@@ -303,24 +263,6 @@ def test_bucketed_join_has_no_exchange_on_either_side(spark):  # noqa: F811
     assert "Exchange" not in join_subtree
     # exactly one Exchange total: the 5-group final agg above the join
     assert plan.count("Exchange") == 1
-
-
-def test_semdedup_centroids_broadcast_pairs_join_on_cluster(spark):  # noqa: F811
-    """SemDeDup's assignment stage must broadcast the tiny centroid table
-    and the quadratic stage must be a key-equi self-join on the cluster id
-    — never a global CartesianProduct."""
-    from universal_key_value_based_text_processing_with_ocr_spark.operators.similarity import (
-        semdedup,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    plan = _formatted(semdedup(emb))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    assert "CartesianProduct" not in plan
-    # r6: the quadratic stage is a grouped per-cluster numpy block kernel
-    # (one embedding crossing per member), not a pair-materialising
-    # self-join — the cluster id is still the only wide key
-    assert "FlatMapGroupsInPandas" in plan
 
 
 def test_fineweb_pipeline_single_scan_fused(spark):  # noqa: F811

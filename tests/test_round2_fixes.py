@@ -219,22 +219,6 @@ def test_small_resume_batch_gets_few_partitions(spark, tmp_path):  # noqa: F811
     assert len(extract_rows) <= 10  # one audit row per non-empty partition
 
 
-def test_ivf_topk_recall_beats_090(spark):  # noqa: F811
-    from universal_key_value_based_text_processing_with_ocr_spark.operators.similarity import (
-        cosine_topk,
-        ivf_topk,
-        lsh_bucketed_topk,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, 5, 10).collect()}
-    ivf = {(r.query_id, r.neighbor_id) for r in ivf_topk(emb, 5, 10).collect()}
-    assert len(exact & ivf) / len(exact) >= 0.9
-    # multi-probe LSH must at least beat the exact-bucket baseline (0.1)
-    lsh = {(r.query_id, r.neighbor_id) for r in lsh_bucketed_topk(emb, 5, 10).collect()}
-    assert len(exact & lsh) / len(exact) >= 0.2
-
-
 def test_hash_seam_xxhash64_same_pairs_on_exact_dups(spark):  # noqa: F811
     from universal_key_value_based_text_processing_with_ocr_spark.operators import dedup
 

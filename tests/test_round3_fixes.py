@@ -3,7 +3,6 @@
 - dedup queries leave no cached blocks pinned after their terminal action
 - quadratic small-N oracles refuse corpus-scale inputs unless opted in
 - repetition tokeniser whitespace class is regex-flavor-independent
-- IVF hash-sampled centroids keep cells balanced
 - ship dir ownership check refuses a world/group-writable pre-created dir
 - plan_partitions large-input behavior (see test_round2_fixes update)
 """
@@ -66,34 +65,7 @@ def test_connected_components_releases_edge_caches(spark):  # noqa: F811
 
 
 def test_quadratic_guard_fires_and_opt_in_works(spark):  # noqa: F811
-    from universal_key_value_based_text_processing_with_ocr_spark.operators import (
-        dedup,
-        similarity,
-    )
-
-    emb = spark.range(5).select(
-        F.col("id").cast("int").alias("vec_id"),
-        F.array(F.lit(1.0), F.rand(7)).alias("embedding"),
-    )
-    # small inputs pass untouched
-    assert similarity.embedding_near_dup(emb, 0.0).count() == 10
-
-    # an over-threshold input raises with a pointer to the LSH sibling ...
-    big = spark.range(60).select(
-        F.col("id").cast("int").alias("vec_id"),
-        F.array(F.lit(1.0)).alias("embedding"),
-    )
-    import universal_key_value_based_text_processing_with_ocr_spark.operators.similarity as sim
-
-    old = sim.QUADRATIC_GUARD_MAX_ROWS
-    sim.QUADRATIC_GUARD_MAX_ROWS = 50
-    try:
-        with pytest.raises(ValueError, match="embedding_near_dup_lsh"):
-            similarity.embedding_near_dup(big, 0.0)
-        # ... and the explicit opt-in bypasses the guard
-        assert similarity.embedding_near_dup(big, 0.0, allow_quadratic=True).count() > 0
-    finally:
-        sim.QUADRATIC_GUARD_MAX_ROWS = old
+    from universal_key_value_based_text_processing_with_ocr_spark.operators import dedup
 
     docs = _docs(spark, 30)
     old_docs = dedup.JACCARD_GUARD_MAX_DOCS
@@ -124,51 +96,6 @@ def test_repetition_whitespace_class_matches_oracle_on_vertical_tab(spark):  # n
     want = con.execute(ORACLE_SQL["doc_repetition"]).fetchdf()
     # tokens are [alpha\x0bbeta, gamma] * 2 -> top bigram covers 2 of 3
     assert got.iloc[0].top_bigram_frac == want.iloc[0].top_bigram_frac == round(2 / 3, 6)
-
-
-def test_ivf_centroids_are_hash_sampled_and_cells_balanced(spark):  # noqa: F811
-    from universal_key_value_based_text_processing_with_ocr_spark.operators.similarity import (
-        ivf_topk,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    n_centroids = 16
-    out = ivf_topk(emb, n_queries=5, k=10, n_centroids=n_centroids)
-    assert out.count() == 50
-
-    # replicate the assignment to audit cell balance
-    from universal_key_value_based_text_processing_with_ocr_spark.operators.similarity import (
-        _dot,
-        _norm,
-    )
-    from pyspark.sql import Window
-
-    cent = (
-        emb.orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
-        .limit(n_centroids)
-        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
-    )
-    sims = emb.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "cid",
-        F.round(
-            _dot(F.col("embedding"), F.col("ce")) / (_norm(F.col("embedding")) * _norm(F.col("ce"))),
-            9,
-        ).alias("sim"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cid").asc())
-    cells = (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .groupBy("cid")
-        .count()
-        .toPandas()
-    )
-    n_vecs = emb.count()
-    mean = n_vecs / n_centroids
-    # every centroid owns a non-degenerate cell and no cell dominates
-    assert len(cells) == n_centroids
-    assert cells["count"].max() <= 4 * mean, cells.to_dict()
 
 
 def test_ship_dir_ownership_guard(tmp_path, monkeypatch):

@@ -1,7 +1,6 @@
-"""Round-5 operator semantics: SemDeDup invariants vs an independent numpy
-replication, bucketed-join result parity vs a plain join."""
-
-import hashlib
+"""Round-5 operator semantics: each operator pinned against an independent
+replication or a hand-derived fixture, bucketed-join result parity vs a
+plain join."""
 
 import numpy as np
 import pandas as pd
@@ -9,108 +8,6 @@ import pytest
 
 from tests.test_spark_pipeline import spark  # session fixture  # noqa: F401
 
-SF_DIR = "/root/testdata/sf0.01"
-
-
-def _semdedup_numpy(ids, vecs, n_centroids, tau):
-    """Independent replication of the published rule: hash-sampled
-    centroids, cosine argmax assignment, farthest-first rank, drop on any
-    lower-ranked mate >= tau.  Returns (survivor ids, cluster of each id)."""
-    order = sorted(range(len(ids)), key=lambda i: (hashlib.md5(str(ids[i]).encode()).hexdigest(), ids[i]))
-    cents = [ids[i] for i in order[:n_centroids]]
-    cvecs = np.stack([vecs[order[i]] for i in range(n_centroids)])
-    norms = np.linalg.norm(vecs, axis=1)
-    cnorms = np.linalg.norm(cvecs, axis=1)
-    sims = np.round((vecs @ cvecs.T) / np.outer(norms, cnorms), 9)
-    # argmax with cid-ascending tie-break: stable argmax over (sim, -cid)
-    assign = {}
-    for i, vid in enumerate(ids):
-        best = max(range(n_centroids), key=lambda c: (sims[i, c], -cents[c]))
-        assign[vid] = cents[best]
-    clusters = {}
-    for i, vid in enumerate(ids):
-        clusters.setdefault(assign[vid], []).append((float(sims[i, cents.index(assign[vid])]), vid, i))
-    survivors = set()
-    for cid, members in clusters.items():
-        members.sort()  # (csim asc, vec_id asc) == farthest-first
-        for r, (_, vid, i) in enumerate(members):
-            dup = False
-            for _, pvid, pi in members[:r]:
-                cos = round(float(vecs[i] @ vecs[pi] / (norms[i] * norms[pi])), 9)
-                if cos >= tau:
-                    dup = True
-                    break
-            if not dup:
-                survivors.add(vid)
-    return survivors, assign
-
-
-def test_semdedup_matches_independent_replication(spark):  # noqa: F811
-    from universal_key_value_based_text_processing_with_ocr_spark.operators.similarity import (
-        semdedup,
-    )
-
-    emb = (
-        spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        .filter("vec_id < 400")
-    )
-    got = {(r.vec_id, r.cluster) for r in semdedup(emb, n_centroids=4, tau=0.3).collect()}
-    pdf = emb.orderBy("vec_id").toPandas()
-    vecs = np.stack(pdf["embedding"].map(np.asarray, na_action=None)).astype(np.float64)
-    ids = pdf["vec_id"].tolist()
-    survivors, assign = _semdedup_numpy(ids, vecs, n_centroids=4, tau=0.3)
-    assert {v for v, _ in got} == survivors
-    assert got == {(v, assign[v]) for v in survivors}
-
-
-def test_semdedup_survivor_pairs_below_tau_and_exact_dups_collapse(spark):  # noqa: F811
-    """Invariant: two survivors of the SAME cluster never reach tau; exact
-    duplicates collapse to one representative."""
-    from pyspark.sql import functions as F
-
-    from universal_key_value_based_text_processing_with_ocr_spark.operators.similarity import (
-        semdedup,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").filter("vec_id < 200")
-    # graft 5 exact copies of vector 7 under fresh ids
-    copies = (
-        emb.filter("vec_id = 7")
-        .crossJoin(spark.range(100000, 100005).withColumnRenamed("id", "new_id"))
-        .select(F.col("new_id").alias("vec_id"), "embedding", "label")
-    )
-    full = emb.unionByName(copies)
-    out = semdedup(full, n_centroids=4, tau=0.3).toPandas()
-    dup_ids = {7, 100000, 100001, 100002, 100003, 100004}
-    kept_dups = [v for v in out["vec_id"] if v in dup_ids]
-    assert len(kept_dups) == 1
-    # survivor cross-check within each cluster
-    pdf = full.orderBy("vec_id").toPandas()
-    vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64) for r in pdf.itertuples()}
-    by_cluster = out.groupby("cluster")["vec_id"].apply(list)
-    for cid, members in by_cluster.items():
-        for i, a in enumerate(members):
-            for b in members[i + 1:]:
-                va, vb = vecs[a], vecs[b]
-                cos = round(float(va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb))), 9)
-                assert cos < 0.3, (cid, a, b, cos)
-
-
-
-def test_semdedup_zero_centroids_returns_no_rows(spark):  # noqa: F811
-    """n_centroids=0 leaves every vector without a centroid to join, so no
-    member survives (the crossJoin(broadcast(cent)) form's empty result),
-    not every vector with cluster -1."""
-    from universal_key_value_based_text_processing_with_ocr_spark.operators.similarity import (
-        semdedup,
-    )
-
-    emb = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    assert semdedup(emb, n_centroids=0, tau=0.3).collect() == []
-    assert semdedup(emb, n_centroids=1, tau=0.99).count() == 3
 
 def test_dhash16_known_answers_and_null_path():
     """dhash16 over REAL decoded synth images must equal the independent
@@ -1317,37 +1214,6 @@ def test_detect_scripts(spark):  # noqa: F811
     assert (out[3]["major_script"], out[3]["latin"]) == ("und", 0)
     assert (out[4]["n_chars"], out[4]["major_script"]) == (0, "und")
     assert (out[5]["greek"], out[5]["hangul"], out[5]["major_script"]) == (4, 2, "greek")
-
-
-def test_incremental_embedding_dedup(spark):  # noqa: F811
-    """Batch vectors drop against the committed index (cross-increment)
-    and against smaller-id batch siblings (within-batch); dissimilar
-    vectors sharing a bucket survive; survivors' index rows are returned
-    for the side-table append."""
-    from universal_key_value_based_text_processing_with_ocr_spark.operators.similarity import (
-        embedding_index,
-        incremental_embedding_dedup,
-    )
-
-    def vec(*seed):
-        # 64-dim deterministic vector; all positive -> one bucket family
-        return [float((s % 7) + 1) for s in (seed * 64)][:64]
-
-    a = vec(3, 1, 4, 1, 5)
-    b = [x * 0.5 for x in a]           # same direction as a: cos == 1.0
-    c = [1.0] * 64                      # dissimilar from a but same bucket
-    committed = spark.createDataFrame([(1, a)], "vec_id long, embedding array<double>")
-    batch = spark.createDataFrame(
-        [(10, b), (12, c), (14, [x * 2.0 for x in c])],
-        "vec_id long, embedding array<double>",
-    )
-    idx = embedding_index(committed)
-    survivors, new_rows = incremental_embedding_dedup(batch, idx, threshold=0.95)
-    kept = sorted(r["vec_id"] for r in survivors.collect())
-    # 10 drops vs committed a; 14 drops vs batch sibling 12; 12 survives
-    assert kept == [12]
-    rows = new_rows.collect()
-    assert [r["vec_id"] for r in rows] == [12] and "bucket" in rows[0].asDict()
 
 
 def test_whitespace_class_matches_re2_on_vertical_tab(spark):  # noqa: F811

@@ -1,26 +1,14 @@
 """Round-5 session-12 operators: HyperLogLog cardinality (register parity vs
 an independent Python replication, merge-by-max, linear-counting regime,
-combinable plan shape) and fixed-point Lloyd's k-means (numpy replication,
-partitioning invariance, the empty-cluster keep-previous rule)."""
+combinable plan shape)."""
 
 import hashlib
 
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    FloatType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from tests.test_spark_pipeline import spark  # session fixture  # noqa: F401
-from universal_key_value_based_text_processing_with_ocr_spark.operators.similarity import (
-    kmeans_assign,
-)
 from universal_key_value_based_text_processing_with_ocr_spark.operators.textstats import (
     hll_cardinality,
     hll_linear_counting_table,
@@ -109,120 +97,6 @@ def test_hll_register_agg_is_combinable(spark):  # noqa: F811
     # max() keeps a map-side partial phase: the sketch build shuffles at
     # most m cells no matter the corpus size
     assert "partial_max" in plan
-
-
-def _emb_df(spark, ids, vecs):  # noqa: F811
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-        ]
-    )
-    pdf = pd.DataFrame({"vec_id": ids, "embedding": [list(map(float, v)) for v in vecs]})
-    return spark.createDataFrame(pdf, schema=schema)
-
-
-def _kmeans_numpy(ids, vecs, k, iters):
-    Q = {
-        int(i): np.floor(np.array(v, dtype=np.float64) * 10**6).astype(np.int64)
-        for i, v in zip(ids, vecs)
-    }
-    order = sorted(Q, key=lambda v: (hashlib.md5(str(v).encode()).hexdigest(), v))
-    cent = {c: Q[v].copy() for c, v in enumerate(order[:k])}
-
-    def assign(cent):
-        return {
-            v: min((int(((q - cq) ** 2).sum()), c) for c, cq in cent.items())
-            for v, q in Q.items()
-        }
-
-    for _ in range(iters):
-        a = assign(cent)
-        sums, cnts = {}, {}
-        for v, (_, c) in a.items():
-            sums[c] = sums.get(c, 0) + Q[v]
-            cnts[c] = cnts.get(c, 0) + 1
-        cent = {
-            c: (np.floor_divide(sums[c], cnts[c]) if c in sums else cq)
-            for c, cq in cent.items()
-        }
-    return assign(cent)
-
-
-def test_kmeans_matches_numpy_replication(spark):  # noqa: F811
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    got = kmeans_assign(emb, k=8, iters=2).toPandas()
-    pdf = emb.toPandas()
-    truth = _kmeans_numpy(pdf.vec_id.tolist(), pdf.embedding.tolist(), 8, 2)
-    assert len(got) == len(pdf)
-    for r in got.itertuples():
-        assert truth[int(r.vec_id)] == (int(r.sq_dist), int(r.cluster))
-
-
-def test_kmeans_partitioning_invariance(spark):  # noqa: F811
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    a = (
-        kmeans_assign(emb.coalesce(1), k=8, iters=2)
-        .toPandas()
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    b = (
-        kmeans_assign(emb.repartition(16), k=8, iters=2)
-        .toPandas()
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    assert a.equals(b)
-
-
-def test_kmeans_empty_cluster_keeps_previous_centroid(spark):  # noqa: F811
-    # md5 hash order of ids 0..5 seeds clusters from vecs 4, 1, 2.  vecs 1
-    # and 2 are IDENTICAL points, so every tie breaks to the lower cluster
-    # id and the vec-2 seed's cluster empties on the first assignment — it
-    # must keep its previous centroid (no crash, no NULL centroid) and stay
-    # empty thereafter, exactly like the numpy replication.
-    ids = list(range(6))
-    vecs = [
-        [0.0, 0.0],
-        [0.001, 0.0],
-        [0.001, 0.0],
-        [10.0, 10.0],
-        [10.001, 10.0],
-        [10.002, 10.0],
-    ]
-    got = (
-        kmeans_assign(_emb_df(spark, ids, vecs), k=3, iters=2)
-        .toPandas()
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    # the table stores float32: replicate from the same narrowed values
-    truth = _kmeans_numpy(ids, [np.array(v, dtype=np.float32) for v in vecs], 3, 2)
-    for r in got.itertuples():
-        assert truth[int(r.vec_id)] == (int(r.sq_dist), int(r.cluster))
-    # Iteration 1 empties cluster 2 (every tie breaks to cluster 1), so the
-    # update hits the keep-previous coalesce; iteration 2 then shows the
-    # kept centroid is REAL, not NULL/zero: it sits exactly on the
-    # duplicated point and reclaims both copies (distance 0), while
-    # cluster 1's moved centroid keeps only the origin point.
-    by_vec = {int(r.vec_id): (int(r.cluster), int(r.sq_dist)) for r in got.itertuples()}
-    assert by_vec[1] == (2, 0) and by_vec[2] == (2, 0)
-    assert by_vec[0][0] == 1
-    assert {c for c, _ in by_vec.values()} == {0, 1, 2}
-
-
-def test_kmeans_update_shuffle_is_combinable(spark):  # noqa: F811
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(50)
-    plan = (
-        kmeans_assign(emb, k=4, iters=1)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # the centroid update's sum/count per (cluster, dim) keeps its map-side
-    # partial phase: per iteration the shuffle carries k*dim cells, not rows
-    assert "partial_sum" in plan or "partial_count" in plan
 
 
 def test_streamed_hll_bit_equal_to_batch(spark):  # noqa: F811
@@ -419,38 +293,6 @@ def test_hll_randomised_multisets_match_python(spark):  # noqa: F811
         for r in hll_group_cardinality(df).toPandas().itertuples()
     }
     assert got == truth
-
-
-def test_kmeans_randomised_configs_match_numpy(spark):  # noqa: F811
-    """Randomised sweep: several (n, dim, k, iters) shapes with duplicate
-    points and tight/far clusters mixed in, each compared against the
-    independent numpy replication — randomised coverage of init order,
-    tie-breaks, empty-cluster keeps and the fixed-point update."""
-    import random
-
-    rng = random.Random(99)
-    for n, dim, k, iters in [(30, 4, 3, 1), (50, 8, 5, 2), (17, 2, 6, 3)]:
-        ids = list(range(n))
-        vecs = []
-        for i in ids:
-            if i % 7 == 0 and i > 0:
-                vecs.append(list(vecs[i - 1]))  # exact duplicate point
-            else:
-                base = 10.0 * (i % 3)
-                vecs.append([base + rng.uniform(-0.01, 0.01) for _ in range(dim)])
-        got = (
-            kmeans_assign(_emb_df(spark, ids, vecs), k=k, iters=iters)
-            .toPandas()
-            .sort_values("vec_id")
-            .reset_index(drop=True)
-        )
-        truth = _kmeans_numpy(
-            ids, [np.array(v, dtype=np.float32) for v in vecs], k, iters
-        )
-        for r in got.itertuples():
-            assert truth[int(r.vec_id)] == (int(r.sq_dist), int(r.cluster)), (
-                n, dim, k, iters, int(r.vec_id),
-            )
 
 
 def test_hll_xxhash64_production_path(spark):  # noqa: F811

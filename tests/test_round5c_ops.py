@@ -6,7 +6,6 @@ per-language tokenizer-fertility audit (exact integer counts on ASCII
 fixtures where the \\p{L} class is enumerable by hand)."""
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from tests.test_spark_pipeline import spark  # session fixture  # noqa: F401
 from universal_key_value_based_text_processing_with_ocr_spark.operators import (
@@ -339,115 +338,3 @@ def test_host_quota_uses_window_group_limit(spark):  # noqa: F811
     )
     assert "WindowGroupLimit" in plan
 
-
-# ---------------------------------------------------------------------------
-# bitext_margin_mine
-# ---------------------------------------------------------------------------
-
-
-def _emb_df(spark, vecs):  # noqa: F811
-    import numpy as np  # noqa: F401
-    from pyspark.sql.types import (
-        ArrayType,
-        FloatType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-        ]
-    )
-    return spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in vecs], schema=schema
-    )
-
-
-def test_bitext_margin_matches_numpy_replication(spark):  # noqa: F811
-    import numpy as np
-
-    from universal_key_value_based_text_processing_with_ocr_spark.operators import (
-        similarity,
-    )
-
-    rng = np.random.RandomState(7)
-    src = [(i, rng.randn(16)) for i in range(0, 20, 2)]
-    tgt = [(i, rng.randn(16)) for i in range(1, 21, 2)]
-    k = 3
-    got = {
-        r["src_id"]: (r["tgt_id"], r["cos"], r["margin"])
-        for r in similarity.bitext_margin_mine(
-            _emb_df(spark, src), _emb_df(spark, tgt), k=k
-        ).collect()
-    }
-
-    # float32 the vectors first: the engine stores float arrays
-    sv = {i: v.astype(np.float32).astype(np.float64) for i, v in src}
-    tv = {i: v.astype(np.float32).astype(np.float64) for i, v in tgt}
-    cos_u = {
-        (a, b): int(round(round(float(
-            np.dot(sv[a], tv[b]) / (np.linalg.norm(sv[a]) * np.linalg.norm(tv[b]))
-        ), 6) * 1e6))
-        for a in sv for b in tv
-    }
-    exp = {}
-    for a in sv:
-        # neighbourhood means over integer micro-units
-        ax = sorted(tv, key=lambda b: (-cos_u[(a, b)], b))[:k]
-        best = None
-        for b in tv:
-            by = sorted(sv, key=lambda a2: (-cos_u[(a2, b)], a2))[:k]
-            mx = sum(cos_u[(a, x)] for x in ax) / len(ax)
-            my = sum(cos_u[(y, b)] for y in by) / len(by)
-            den = (mx + my) / 2.0
-            if den <= 0:
-                continue
-            mar = round(cos_u[(a, b)] / den, 6)
-            key = (-mar, b)
-            if best is None or key < best[0]:
-                best = (key, b, round(cos_u[(a, b)] / 1e6, 6), mar)
-        if best:
-            exp[a] = (best[1], best[2], best[3])
-    assert got == exp
-
-
-def test_bitext_margin_demotes_hub(spark):  # noqa: F811
-    """A hub target moderately close to EVERY src must lose to each src's
-    true (identical) pair even though raw cosine alone might waver —
-    the neighbourhood normalisation is the point of the margin."""
-    import numpy as np
-
-    from universal_key_value_based_text_processing_with_ocr_spark.operators import (
-        similarity,
-    )
-
-    rng = np.random.RandomState(3)
-    base = [rng.randn(16) for _ in range(4)]
-    hub = sum(base) / 4.0  # close-ish to all of them
-    src = [(2 * i, v) for i, v in enumerate(base)]
-    tgt = [(2 * i + 1, v + rng.randn(16) * 0.01) for i, v in enumerate(base)]
-    tgt.append((99, hub))
-    got = {
-        r["src_id"]: r["tgt_id"]
-        for r in similarity.bitext_margin_mine(
-            _emb_df(spark, src), _emb_df(spark, tgt), k=2
-        ).collect()
-    }
-    assert got == {0: 1, 2: 3, 4: 5, 6: 7}
-
-
-def test_bitext_margin_quadratic_guard(spark):  # noqa: F811
-    import pytest as _pytest
-
-    from universal_key_value_based_text_processing_with_ocr_spark.operators import (
-        similarity,
-    )
-
-    big = spark.range(60_000).select(
-        F.col("id").alias("vec_id"), F.array(F.lit(1.0)).alias("embedding")
-    )
-    with _pytest.raises(ValueError, match="ivf_topk"):
-        similarity.bitext_margin_mine(big, big)

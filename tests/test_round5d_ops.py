@@ -1,8 +1,8 @@
 """Round-5 session-14 operators: Luhn-validated card redaction (known
 ISO/IEC 7812 test numbers + a pure-Python reference replication),
 per-line language ID / code-switch stats (hand-derived fixtures),
-fuzzy MinHash decontamination (identical / near-dup / disjoint probes),
-and symmetric int8 embedding quantization (hand-computed exact codes)."""
+and fuzzy MinHash decontamination (identical / near-dup / disjoint
+probes)."""
 
 import re
 
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from tests.test_spark_pipeline import spark  # session fixture  # noqa: F401
 from universal_key_value_based_text_processing_with_ocr_spark.operators import (
     dedup,
-    similarity,
     textstats,
 )
 
@@ -213,41 +212,3 @@ def test_decontaminate_fuzzy_broadcasts_probes(spark):  # noqa: F811
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
-
-# ---------------------------------------------------------------------------
-# quantize_int8
-# ---------------------------------------------------------------------------
-
-
-def test_quantize_int8_exact_codes(spark):  # noqa: F811
-    emb = spark.createDataFrame(
-        [
-            (1, [1.0, -0.5, 0.0]),
-            (2, [0.5, 0.25, 0.0]),
-        ],
-        schema="vec_id long, embedding array<float>",
-    )
-    got = {
-        (r["vec_id"], r["dim"]): r["code"]
-        for r in similarity.quantize_int8(emb).collect()
-    }
-    # q: [1e6, -5e5, 0], [5e5, 2.5e5, 0]; amax: [1e6, 5e5, 0]
-    assert got[(1, 0)] == 127          # x == amax -> floor(127.5) = 127
-    assert got[(1, 1)] == -127         # negative absmax
-    assert got[(1, 2)] == 0            # amax 0 dim
-    assert got[(2, 0)] == 64           # round-half-up(63.5) = 64
-    assert got[(2, 1)] == 64
-    assert got[(2, 2)] == 0
-    assert all(-127 <= v <= 127 for v in got.values())
-
-
-def test_quantize_int8_broadcasts_scales(spark):  # noqa: F811
-    emb = spark.createDataFrame(
-        [(1, [1.0, 2.0])], schema="vec_id long, embedding array<float>"
-    )
-    plan = similarity.quantize_int8(
-        emb
-    )._jdf.queryExecution().executedPlan().toString()
-    # the one-row scale table must come back as a broadcast, never a
-    # shuffle of the vectors
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan

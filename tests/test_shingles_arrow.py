@@ -6,6 +6,7 @@ slicing, length gate, NULL skip, extra-column carry."""
 from pyspark.sql import functions as F
 
 from tests.test_spark_pipeline import spark  # session fixture  # noqa: F401
+from universal_key_value_based_text_processing_with_ocr_spark.operators import dedup
 from universal_key_value_based_text_processing_with_ocr_spark.operators.dedup import (
     char_shingles,
 )
@@ -66,3 +67,16 @@ def test_arrow_shingles_carry_extra_cols(spark):  # noqa: F811
         for r in _expr_form(docs, 5, extra_cols=("lang",)).collect()
     )
     assert got == exp and len(got) > 0
+
+
+def test_char_shingles_flush_bound(spark, monkeypatch):  # noqa: F811
+    """Long documents must stream through the bounded flush (multiple
+    yields per Arrow batch, forced via a tiny SHINGLE_FLUSH_ROWS) with
+    output identical to the expression form."""
+    monkeypatch.setattr(dedup, "SHINGLE_FLUSH_ROWS", 500)
+    text = "".join(chr(97 + (i * 7 + i // 26) % 26) for i in range(3000))
+    rows = [(i, text[i % 7 :]) for i in range(20)]  # ~60k shingles total
+    df = spark.createDataFrame(rows, schema="doc_id long, text string")
+    got = sorted((r.doc_id, r.shingle) for r in char_shingles(df, 10).collect())
+    exp = sorted((r.doc_id, r.shingle) for r in _expr_form(df, 10).collect())
+    assert got == exp

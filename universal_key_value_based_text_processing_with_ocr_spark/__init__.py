@@ -18,8 +18,8 @@ Layers
 ``htmlcore``   payload decode: bytes -> DOM blocks -> boilerplate strip ->
                ordered main-content lines (text-density + link-density).
 ``operators``  Spark DataFrame operators: the extraction pipeline
-               (mapInPandas stages), dedup family, similarity search, text
-               analysis, and still-image codecs that only their tests reach.
+               (mapInPandas stages), dedup family, text analysis, and
+               still-image codecs that only their tests reach.
 ``sources``    pages-table reader + deterministic synthetic pages generator.
 ``lakehouse``  Iceberg-shaped snapshot/commit/resume layer over Parquet.
 ``plans``      pipeline assembly, partitioning & salting policy.

@@ -1,3 +1,3 @@
 """Reusable column functions (engine-agnostic, reproducible hashing)."""
 
-from .columns import dot, md5_long, norm
+from .columns import md5_long

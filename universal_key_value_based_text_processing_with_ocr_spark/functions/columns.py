@@ -15,19 +15,6 @@ def md5_long(col) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def dot(a, b) -> F.Column:
-    """Element-wise dot product of two numeric array columns (double)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm(a) -> F.Column:
-    return F.sqrt(dot(a, a))
-
-
 def decimal_sum(col, scale: str = "decimal(18,4)") -> F.Column:
     """Order-independent float aggregation: per-row cast to exact decimal,
     exact decimal sum, one cast back to double — bit-identical across

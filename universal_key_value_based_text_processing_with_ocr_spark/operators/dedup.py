@@ -12,7 +12,6 @@ JVM-side:
 - MinHash + LSH:    md5-derived hash family -> per-seed min -> banded
                     signature hash -> bucket join -> candidate pairs
 - SimHash:          bitwise majority of token hashes (16-bit demo width)
-- embedding cosine: near-dup pairs over unit vectors (see similarity.py)
 
 Scale notes (100 TB): the shingle join shuffles on the shingle value —
 shingle cardinality is ~uniform so no skew; LSH replaces the quadratic
@@ -146,6 +145,24 @@ def char_shingles(docs: DataFrame, n: int = 10, extra_cols: tuple = ()) -> DataF
 JACCARD_GUARD_MAX_DOCS = 1_000_000
 
 
+def _guard_quadratic(df: DataFrame, max_rows: int, allow: bool, sibling: str) -> None:
+    """Fail fast before an all-pairs plan is unleashed on a corpus-scale
+    input (VERDICT r2 #7).  The size probe is ``limit(max_rows+1).count()``
+    — LocalLimit stops each task as soon as the bound is exceeded, so the
+    guard never materialises the full upstream lineage the way a plain
+    count() would on a computed (uncached) input.  ``allow`` skips the
+    check for callers that know their input (e.g. a sampled oracle run)."""
+    if allow:
+        return
+    n = df.limit(max_rows + 1).count()
+    if n > max_rows:
+        raise ValueError(
+            f"input has more than {max_rows} rows: this operator is the exact "
+            f"O(N^2) small-N oracle — use {sibling} for corpus-scale inputs, "
+            "or pass allow_quadratic=True if you really mean it"
+        )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 10,
@@ -166,8 +183,6 @@ def ngram_jaccard_pairs(
     (VERDICT r2 #7) — candidate-pair volume grows with N * max_doc_freq and
     there is no recall argument for running the exact baseline at scale.
     """
-    from .similarity import _guard_quadratic
-
     _guard_quadratic(docs, JACCARD_GUARD_MAX_DOCS, allow_quadratic, "minhash_lsh_pairs")
     inter, sizes = _shingle_pair_stats(docs, n, max_doc_freq)
     sa = sizes.alias("sa")
@@ -259,8 +274,6 @@ def ngram_containment_pairs(
     explode), so the scale posture is identical; only the final scoring
     projection differs.
     """
-    from .similarity import _guard_quadratic
-
     _guard_quadratic(
         docs, JACCARD_GUARD_MAX_DOCS, allow_quadratic, "minhash_lsh_pairs"
     )

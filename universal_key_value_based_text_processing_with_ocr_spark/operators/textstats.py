@@ -2531,8 +2531,7 @@ def page_directives(
     - ``hreflang_langs``: the sorted-distinct language tags of
       any ``<link>`` carrying an ``hreflang`` attribute — the page's declared
       translation cluster, THE join key for cross-lingual dedup /
-      bitext candidate mining (pairs with identical clusters feed
-      ``similarity.bitext_margin_mine``);
+      parallel-text candidate mining;
     - ``n_alternates``: how many hreflang alternates the page declares.
 
     One codegen'd regex projection over the scan — no UDF, no explode

@@ -1,7 +1,7 @@
 """Spark-job budget of one extraction call.
 
-A call runs the extract write, the audit and, on resume, the anti-join
-count.  No job may re-derive what the call already holds: the input schema
+A call runs the extract write and, on resume, the anti-join count; the
+audit's counts come from the extract stage, so no job follows the write.  No job may re-derive what the call already holds: the input schema
 (``PAGES_SCHEMA``), the committed table's schema (its manifest) or the
 input row count of a fresh-table run (the input's parquet footers).  The
 jobs are read back through the call's job group."""
@@ -70,9 +70,9 @@ def test_fresh_and_resume_noop_job_budget(spark, monkeypatch, tmp_path):  # noqa
         spark, monkeypatch, "budget-fresh", str(pages), tmp_path)
     assert info["n_docs"] == 24
     assert before_write == []  # no schema inference, no count before the extract
-    # salted-repartition shuffle map + extract write; audit rollup shuffle
-    # map + its collect (the driver writes the audit file)
-    assert len(fresh) == 4, fresh
+    # salted-repartition shuffle map + extract write; the audit's counts
+    # come from the extract stage and the driver writes the audit file
+    assert len(fresh) == 2, fresh
     # the call names its jobs per phase and hands the caller's description back
     assert phases == ["resume", "plan", "extract+commit", "audit"]
     assert description == "caller's description"
@@ -85,6 +85,24 @@ def test_fresh_and_resume_noop_job_budget(spark, monkeypatch, tmp_path):  # noqa
     assert len(noop) == 3, noop
     assert phases == ["resume", "plan"]
     assert description == "caller's description"
+
+
+def test_resume_increment_job_budget(spark, monkeypatch, tmp_path):  # noqa: F811
+    """A resume call that commits new urls: the anti-join count, then the
+    extract's shuffle and write, and nothing after the write."""
+    rows = [gen_page_row(13, i) for i in range(36)]
+    base, increment = tmp_path / "base.parquet", tmp_path / "increment.parquet"
+    pq.write_table(pa.Table.from_pylist(rows[:24], schema=PAGES_ARROW), base)
+    pq.write_table(pa.Table.from_pylist(rows[12:], schema=PAGES_ARROW), increment)
+    _call_jobs(spark, monkeypatch, "budget-base", str(base), tmp_path)
+    jobs, _, info, phases, _ = _call_jobs(
+        spark, monkeypatch, "budget-increment", str(increment), tmp_path)
+    assert info["n_docs"] == 12 and info["resumed"] is False
+    # anti-join count (committed-url broadcast build, input scan + partial
+    # count, final count); the write's own broadcast build, salted-
+    # repartition shuffle map + extract write
+    assert len(jobs) == 6, jobs
+    assert phases == ["resume", "plan", "extract+commit", "audit"]
 
 
 def test_footer_rows_only_for_bare_parquet_scans(spark, tmp_path):  # noqa: F811

@@ -648,15 +648,6 @@ def _bloom_positions(fp, m_bits: int, k: int) -> F.Column:
     return F.array(*[(h1 + F.lit(j) * step) % m_bits for j in range(k)])
 
 
-def bloom_sketch(docs: DataFrame, m_bits: int = BLOOM_BITS, k: int = BLOOM_HASHES) -> DataFrame:
-    """(word_idx, word): the set 64-bit words of a Bloom filter over the
-    corpus text fingerprints.  One map-side-combinable bit_or aggregate —
-    the committed corpus reduces to a sketch in a single pass with no
-    distinct (bit_or is idempotent, duplicate fps cost nothing)."""
-    fps = docs.filter(F.col("text").isNotNull()).select(F.md5("text").alias("fp"))
-    return bloom_sketch_from_fps(fps, m_bits, k)
-
-
 def fps_of(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Distinct content fingerprints (``fp`` column) of a text frame — THE
     canonical fingerprint projection.  Every producer of the fingerprint

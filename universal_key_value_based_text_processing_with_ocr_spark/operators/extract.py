@@ -36,6 +36,7 @@ from collections.abc import Iterator
 from functools import partial
 
 import pandas as pd
+from pyspark import AccumulatorParam, TaskContext
 from pyspark.sql.types import StructType
 
 from ..htmlcore import extract_main_lines, page_quality_warnings
@@ -159,15 +160,40 @@ def _page_row(url, html, text, lang, configs, parser: str) -> dict:
     }
 
 
-def _map_rows(pages_df, row_fn, schema: str):
+def add_counts(a: tuple, b: tuple) -> tuple:
+    """Sum of two ``(n_docs, n_success, bytes_in)`` counts; a NULL
+    ``bytes_in`` (a schema without ``n_bytes``) stays NULL, as a SQL SUM
+    over only NULLs does."""
+    return tuple(None if x is None else x + y for x, y in zip(a, b))
+
+
+class PartitionCounts(AccumulatorParam):
+    """Accumulator value ``{partition id: (n_docs, n_success, bytes_in)}``
+    of the rows an extract stage emitted, merged with ``add_counts``."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, counts, other):
+        for pid, c in other.items():
+            counts[pid] = add_counts(counts[pid], c) if pid in counts else c
+        return counts
+
+
+def _map_rows(pages_df, row_fn, schema: str, counts=None):
     """The one extraction stage: ``row_fn(url, html, text, lang)`` per page
     in one narrow Arrow-batched ``mapInPandas``, emitting ``schema``'s
     columns of each row dict.
+
+    ``counts``, a ``PartitionCounts`` accumulator, receives the stage's
+    per-partition counts of the rows it emits, added per output batch, so a
+    consumer that stops early loses none of the batches it took.
 
     Column pruning: only (url, html, text, lang) enter the Arrow stage —
     keep any filters BEFORE this call so Catalyst pushes them into the scan.
     """
     columns = StructType.fromDDL(schema).fieldNames()
+    has_bytes = "n_bytes" in columns
 
     # The pd.DataFrame(list-of-dicts) rebuild below was suspected as a
     # per-batch constant (VERDICT r2 #2); A/B vs a columnar dict-of-lists
@@ -179,17 +205,26 @@ def _map_rows(pages_df, row_fn, schema: str):
         keep_zip_directories()
         for pdf in batches:
             rows = [row_fn(r.url, r.html, r.text, r.lang) for r in pdf.itertuples(index=False)]
+            if counts is not None and rows:
+                counts.add({TaskContext.get().partitionId(): (
+                    len(rows),
+                    sum(r["success"] for r in rows),
+                    sum(r["n_bytes"] for r in rows) if has_bytes else None,
+                )})
             yield pd.DataFrame(rows, columns=columns)
 
     return pages_df.select("url", "html", "text", "lang").mapInPandas(gen, schema=schema)
 
 
-def extract_pages(pages_df, configs=None, parser: str = "sweep"):
+def extract_pages(pages_df, configs=None, parser: str = "sweep", counts=None):
     """pages(url, warc_ts, html, text, lang) -> results DataFrame under one
     of ``PARSERS``: ``RESULT_SCHEMA`` for the sweep, ``COMPACT_SCHEMA`` for
-    the others.  ``configs`` is compiled here (``compile_plan``)."""
+    the others.  ``configs`` is compiled here (``compile_plan``); for
+    ``counts`` see ``_map_rows``."""
     plan = compile_plan(configs, parser)
-    return _map_rows(pages_df, partial(_page_row, configs=plan, parser=parser), PARSERS[parser][1])
+    return _map_rows(
+        pages_df, partial(_page_row, configs=plan, parser=parser), PARSERS[parser][1], counts
+    )
 
 
 def _compact(row: dict) -> dict:

@@ -4,18 +4,20 @@ repartition -> fused extract stage -> snapshot commit + audit lineage.
 New-engine lifecycle per SURVEY.md §3: one repartition shuffle up front,
 ONE materialisation of the extract stage (streamed directly into the
 snapshot's parquet write); the row count then comes from the commit's
-manifest, and the fingerprint, audit and debug passes scan the written
-batch files back with the schema they were written with (no inference
-job) — everything between is narrow and nothing is persisted.  The job is
+manifest, and the fingerprint and debug passes scan the written batch
+files back with the schema they were written with (no inference job) —
+everything between is narrow and nothing is persisted.  The job is
 idempotent and resumable: on restart, urls already in the committed
 results snapshot are anti-joined away, and the audit table records one
 row per (run, stage, partition) so lineage covers every partition exactly
 once (partition_id also travels with each committed row as per-row
-lineage).  ``append_audit`` writes those rows: a Spark rollup over the
-committed batch, whose <= partitions + 1 rows are collected, labelled on
-the driver and committed as one driver-written parquet file.  The
-streaming job (``streaming.streamed_extraction_job``) runs this job on each
-micro-batch, so a streamed epoch is a batch run with the same options.
+lineage).  ``append_audit`` writes those rows from per-partition counts
+that the extract stage adds to an accumulator as it emits its rows (a
+``dedup_content`` run aggregates the written batch instead), labelled on
+the driver and committed as one driver-written parquet file, so a call
+runs no Spark job after its results write.  The streaming job
+(``streaming.streamed_extraction_job``) runs this job on each micro-batch,
+so a streamed epoch is a batch run with the same options.
 """
 
 from __future__ import annotations
@@ -29,7 +31,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..lakehouse import SnapshotTable
-from ..operators.extract import compile_plan, extract_pages, extract_pages_debug
+from ..operators.extract import (
+    PartitionCounts,
+    add_counts,
+    compile_plan,
+    extract_pages,
+    extract_pages_debug,
+)
 
 from .partitioning import plan_partitions, salted_repartition
 
@@ -197,7 +205,11 @@ def run_extraction_job(
             # manifest chain junk-free, same policy as the results rollback
             spans_tbl.rollback_latest(span_sid)
 
-    results = extract_pages(pages_df, configs=configs, parser=parser).withColumn(
+    # Without dedup the extract stage counts its own output per partition
+    # (see ``append_audit``); dedup drops rows after it, so that audit
+    # counts the written batch instead.
+    counts = None if dedup_content else spark.sparkContext.accumulator({}, PartitionCounts())
+    results = extract_pages(pages_df, configs=configs, parser=parser, counts=counts).withColumn(
         "partition_id", F.spark_partition_id()
     )
     fp_tbl = SnapshotTable(f"{results_path}_fps") if dedup_content else None
@@ -220,7 +232,7 @@ def run_extraction_job(
     # SINGLE materialisation: the fused extract stage streams straight into
     # the snapshot's parquet write — no .persist() (measured: the columnar
     # cache build added ~25% to the stage at local[8] and the cached copy
-    # served only two cheap aggregates).  The fingerprint, audit and
+    # served only two cheap aggregates).  The fingerprint, dedup audit and
     # failed-url debug passes read the just-written batch files back (JVM
     # columnar scan) with the schema the append wrote, so no schema
     # inference job runs; partition_id is committed with the rows as
@@ -228,9 +240,12 @@ def run_extraction_job(
     # document — readers that don't want it just don't select it).
     phase("extract+commit")
     snapshot_id = results_tbl.append(results, summary={"run_id": run_id})
-    batch = spark.read.schema(results.schema).parquet(
-        str(results_tbl.path / "data" / snapshot_id)
-    )
+
+    def batch() -> DataFrame:
+        return spark.read.schema(results.schema).parquet(
+            str(results_tbl.path / "data" / snapshot_id)
+        )
+
     # Row count comes from the manifest the append just committed (parquet
     # footer totals) — a batch.count() here was a whole extra Spark job
     # spent re-deriving a number the sink already recorded.  Resolved by
@@ -255,14 +270,15 @@ def run_extraction_job(
         # Python stage
         phase("fps")
         fp_tbl.append(
-            fps_of(batch, "extracted_text"),
+            fps_of(batch(), "extracted_text"),
             summary={"run_id": run_id, "results_snapshot_id": snapshot_id},
         )
 
     if audit_tbl is not None:
         phase("audit")
         append_audit(
-            audit_tbl, batch, run_id, snapshot_id, int((time.time() - t0) * 1000),
+            audit_tbl, partition_counts(batch()) if counts is None else counts.value,
+            run_id, snapshot_id, int((time.time() - t0) * 1000),
             summary={"run_id": run_id, "stage": "extract+write"},
         )
 
@@ -271,7 +287,7 @@ def run_extraction_job(
         # generate_report analog): a second narrow pass over just the
         # failed subset — opt-in, so the happy path pays nothing.
         phase("debug")
-        failed_urls = batch.filter(~F.col("success")).select("url")
+        failed_urls = batch().filter(~F.col("success")).select("url")
         debug_rows = extract_pages_debug(
             pages_df.join(failed_urls, "url", "left_semi"),
             configs=configs,
@@ -325,43 +341,58 @@ def parquet_footer_rows(df: DataFrame) -> int | None:
     return n
 
 
+def partition_counts(rows: DataFrame) -> dict:
+    """``{partition_id: (n_docs, n_success, bytes_in)}`` of committed
+    ``rows``, from one Spark aggregation; ``bytes_in`` sums ``n_bytes``,
+    NULL where the compact schemas have no such column.  The audit's count
+    source where ``dedup_content`` dropped rows after the extract stage.
+    The plan holds no per-call value, so Spark compiles no new code per
+    call."""
+    bytes_in = F.col("n_bytes") if "n_bytes" in rows.columns else F.lit(None).cast("long")
+    counts = rows.groupBy("partition_id").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.col("success").cast("long")).alias("n_success"),
+        F.sum(bytes_in).alias("bytes_in"),
+    )
+    return {r.partition_id: (r.n_docs, r.n_success, r.bytes_in) for r in counts.collect()}
+
+
 def append_audit(
     audit_tbl: SnapshotTable,
-    rows: DataFrame,
+    counts: dict,
     run_id: str,
     snapshot_id: str,
     wall_ms: int,
     summary: dict | None = None,
 ) -> str:
     """Commit the audit lineage of one committed batch to ``audit_tbl`` as
-    ``AUDIT_SCHEMA`` rows: one ``extract`` row per partition_id and one
-    ``write`` row (partition_id -1) with the batch totals.  Returns the
-    audit snapshot id.  ``bytes_in`` sums ``n_bytes``; the compact-schema
-    parsers have no such column, and there it is NULL (a SUM over only
-    NULLs is NULL).  Every run of the job commits its audit here, a
-    streamed epoch included (the streaming job runs this job per
-    micro-batch), so batch and streamed rows share one schema.
+    ``AUDIT_SCHEMA`` rows: one ``extract`` row per partition in ``counts``
+    (``{partition_id: (n_docs, n_success, bytes_in)}``, partitions that
+    committed no row absent) and one ``write`` row (partition_id -1) with
+    the batch totals.  Returns the audit snapshot id.  ``bytes_in`` is NULL
+    for the compact-schema parsers, which have no ``n_bytes``.  Every run
+    of the job commits its audit here, a streamed epoch included (the
+    streaming job runs this job per micro-batch), so batch and streamed
+    rows share one schema.
 
-    The counts come from one ROLLUP over the committed rows, so they stay
-    exact when ``dedup_content`` dropped rows after extraction, and the
-    aggregation is distributed however large the batch.  Its plan holds no
-    per-call value: a literal run id, wall time or snapshot id would make
-    Spark compile new code for every call.  The <= partitions + 1 result
-    rows are collected, labelled here, and committed by
-    ``SnapshotTable.append_rows`` as one driver-written file: for so few
-    rows a Spark write job costs more than the aggregation."""
-    bytes_in = F.col("n_bytes") if "n_bytes" in rows.columns else F.lit(None).cast("long")
-    counts = rows.rollup("partition_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.col("success").cast("long")).alias("n_success"),
-        F.sum(bytes_in).alias("bytes_in"),
-        (F.grouping("partition_id") == 1).alias("is_total"),
-    )
-    audit = []
-    for r in sorted(counts.collect(), key=lambda r: (r.is_total, r.partition_id)):
-        stage, partition_id = ("write", -1) if r.is_total else ("extract", r.partition_id)
-        audit.append((run_id, stage, partition_id, r.n_docs, r.n_success, r.bytes_in,
-                      wall_ms, snapshot_id))
+    The job's counts come from the extract stage itself (a
+    ``PartitionCounts`` accumulator), so a call runs no Spark job after
+    its results write.  They are exact because the stage runs in the
+    result stage of that write job (after the salted shuffle, before the
+    file writer), and Spark merges a result task's accumulator update
+    exactly once, from its first successful attempt, dropping the updates
+    of failed and duplicate attempts; the partition id the stage counts
+    under is the ``spark_partition_id()`` committed with each row.  With
+    ``dedup_content`` rows are dropped after the stage, under a window
+    shuffle, so there ``partition_counts`` aggregates the written batch.
+    The rows are committed by ``SnapshotTable.append_rows`` as one
+    driver-written file: for so few rows a Spark write job costs more
+    than the rows."""
+    audit = [
+        (run_id, "extract", pid, *c, wall_ms, snapshot_id) for pid, c in sorted(counts.items())
+    ]
+    total = functools.reduce(add_counts, counts.values())
+    audit.append((run_id, "write", -1, *total, wall_ms, snapshot_id))
     return audit_tbl.append_rows(audit, StructType.fromDDL(AUDIT_SCHEMA), summary)
 
 
